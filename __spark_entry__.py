@@ -52,101 +52,103 @@ def entry(spark: SparkSession) -> DataFrame:
 # (Round 6's q90 rework slipped through the old hand list — shared-
 # source changes are exactly what hand lists miss.)
 
-# (a) changed in round 13 (fingerprint diff vs the r12-end snapshot,
-# QUERY_FINGERPRINTS.json refreshed at cc45497). q193 LEADS the window
-# (r12 verdict #2): it was the 51st entry of r12's 51-query changed
-# set and the only changed query the 50-row driver window missed.
-# This round's rework (optimization round 2; every change
-# oracle-verified exact, see OPTIMIZATION_r13.md):
-# (1) connected_components measured-size fast path (single-task
-#     vectorized kernel below CC_SMALL_EDGE_THRESHOLD edges, entered
-#     pre-loop or mid-contraction) → the CC consumers;
-# (2) curate_corpus passthrough-column guard (quality-output names
-#     excluded from `other`, r12 ADVICE #3) → q35.
+# (a) drifted since the newest verified row: `scripts/fingerprints.py
+# diff` verbatim, against the snapshot refreshed at cc45497. Two
+# reworks feed it:
+# (1) round 13 (OPTIMIZATION_r13.md): the connected_components fast
+#     path, the curate_corpus passthrough guard, q104's span-dedup
+#     boundary and the parsed IVF cell assignment — 13 queries;
+# (2) the hash-family consolidation: every Spark spelling of the
+#     polynomial hash, token split and shingle fold now comes from
+#     functions/hashing (operators/dedup, textstats, selection, terms),
+#     polyhash2 became polyhash(col, 37), and curate_corpus /
+#     prepare_pretraining_corpus share one dedup chain — every query
+#     whose closure imports those modules drifts.
 _CHANGED_THIS_ROUND: list[str] = [
+    "q100_bloom_contamination",
+    "q101_span_dedup",
+    "q102_incremental_dedup",
+    "q104_curation_v2",
+    "q106_image_neardup",
+    "q108_stream_incremental_dedup",
+    "q110_bm25_rerank",
+    "q114_gumbel_resample",
+    "q118_span_decontaminate",
+    "q120_minhash_quality_audit",
+    "q122_source_overlap_matrix",
+    "q125_signature_sidetable",
+    "q126_curation_report",
+    "q127_cdc_chunks",
+    "q133_cluster_balanced_sample",
+    "q135_doc_stitching",
+    "q142_ivf_drift_audit",
+    "q156_source_js_divergence",
+    "q161_containment_dedup",
     "q193_fasttext_quality_filter",
-    # (1) CC fast path
-    "q36_neardup_clusters",
-    "q60_cluster_resolve",
-    "q86_semantic_dedup",
-    "q91_leakage_safe_split",
-    # (2) curate_corpus guard
+    "q29_seeded_shuffle",
+    "q30_map_zip_filter",
+    "q31_exact_dedup",
+    "q32_minhash_lsh_neardup",
+    "q33_simhash_fingerprint",
+    "q34_ngram_jaccard_neardup",
     "q35_curation_pipeline",
+    "q36_neardup_clusters",
+    "q44_ann_ivf_topk",
+    "q50_ngram_repetition",
+    "q54_winnow_fingerprints",
+    "q60_cluster_resolve",
+    "q72_multimodal_features",
+    "q73_tag_inference",
+    "q76_salted_join_hot_key",
+    "q78_contamination_check",
+    "q80_video_frame_sample",
+    "q81_line_dedup",
+    "q85_ann_ivf_kmeans",
+    "q86_semantic_dedup",
+    "q88_pretraining_corpus",
+    "q90_stream_quality_dedup",
+    "q91_leakage_safe_split",
+    "q93_ann_ivf_multiprobe",
+    "q95_dsir_logweights",
+    "q96_editdist_verify",
 ]
 
-# (b) never rowed: none — registry growth is frozen at 195 for the
-# fifth straight round (r8 rule).
+# (b) never rowed: none — registry growth is frozen at 195 (r8 rule).
 _NEVER_ROWED: list[str] = []
 
-# (c) reworked last round with only pre-rework rows: none — q193, the
-# one r12 window-overflow miss, sits at the head of (a) above (its
-# fingerprint is still drifted vs its newest verified row).
+# (c) reworked last round with only pre-rework rows: none — every
+# round-13 rework is still drifted and sits in (a).
 _REWORKED_LAST_ROUND: list[str] = []
 
 _PRIORITY = [
     *_CHANGED_THIS_ROUND,
     *_NEVER_ROWED,
     *_REWORKED_LAST_ROUND,
-    # (d) stalest first: the round-6 cohort deferred two rounds
-    # running (r12's 51-query changed set consumed the whole window),
-    # then the round-7 queue — with only 6 changed entries this round
-    # the 50-row window finally flushes the whole round-6 block and
-    # most of round-7's.
-    "q124_group_quantiles",
-    "q126_curation_report",
-    "q127_cdc_chunks",
-    "q128_length_buckets",
-    "q129_robust_outliers",
-    "q152_url_canonical_dedup",
-    "q153_normalized_dedup",
-    "q172_grouping_sets",
-    "q173_referential_integrity",
-    "q180_html_extract",
-    "q27_upsert_merge",
-    "q29_seeded_shuffle",
-    "q30_map_zip_filter",
-    "q31_exact_dedup",
-    "q33_simhash_fingerprint",
-    "q37_name_series_parse",
-    "q40_corpus_profile",
-    "q45_cube_rollup",
-    "q46_set_ops",
-    "q56_tfidf_topk",
-    "q57_stratified_sample",
-    "q59_pii_redact",
-    # round-7 rows, stale queue (6 changed + 22 round-6 + these 15 =
-    # 43 ≤ 50: the whole backlog sits inside this round's window)
-    "q17_tokenize_normalize",
-    "q18_regex_extract",
-    "q24_novelai_order",
-    "q25_clean_caption",
-    "q26_clean_tags",
-    "q38_asof_join",
-    "q39_range_join",
-    "q51_token_counts",
-    "q52_quality_score",
-    "q53_language_id",
-    "q55_quality_rollup",
-    "q58_pack_chunks",
-    "q67_pack_greedy",
-    "q70_webdataset_roundtrip",
-    "q74_snapshot_diff",
-    # round-7 tail (the 43-entry prefix above leaves 7 window slots;
-    # fill them stalest-first so the registry-order fallback can't
-    # promote a fresher row past these)
-    "q185_entity_resolution",
-    "q189_gapfill_interpolate",
-    "q75_mix_rebalance",
-    "q77_label_centroid_cohesion",
-    "q79_unigram_logprob",
-    "q81_line_dedup",
-    "q82_gopher_rules",
-    # ---- 50-row driver cutoff lands here ----
-    # round-7 remainder (beyond the cutoff; keeps the queue explicit
-    # for the r14 rotation)
+    # (d) stalest first. Round 13's window sampled the whole former
+    # round-6/7 queue, so the stalest rows left are round 7's tail,
+    # then the round-8 cohort. With 46 changed entries the 50-row
+    # window takes the first 4; the rest stays queued for the next
+    # rotation.
     "q89_temperature_mix",
     "q92_pack_barriered",
     "q94_rag_chunking",
+    "q105_quality_drift",
+    "q103_perplexity_band",
+    "q99_adaptive_quality_filter",
+    "q41_ann_bruteforce_topk",
+    "q42_ann_srp_lsh_topk",
+    "q48_ann_multiprobe_topk",
+    "q97_knn_graph",
+    "q98_embedding_quantize",
+    "q43_embedding_neardup",
+    "q183_retrieval_metrics",
+    "q191_index_retrieval_metrics",
+    "q65_stream_stream_join",
+    "q64_stream_dedup",
+    "q141_stream_blocklist",
+    "q182_link_graph",
+    "q83_zorder_key",
+    "q84_zorder_skipping",
 ]
 
 

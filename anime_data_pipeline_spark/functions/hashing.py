@@ -10,6 +10,15 @@ h(s) = fold(chars(s), 0, (acc, c) -> (acc * 31 + codepoint(c)) mod P)
 MinHash permutations are the classic (a*h + b) mod P family with fixed
 deterministic constants (no runtime randomness — reproducible runs and
 resumable pipelines at scale).
+
+This module is the one home of the family's Spark spellings: the char
+hash (:func:`polyhash`, :func:`polyhash_spark_expr`), the token split
+(:func:`tokens_spark_expr`; the Column form is ``functions.text.tokens``),
+the shingle fold (:func:`shingle_hashes_spark_expr`), the MinHash
+signature (:func:`minhash_signature_expr`) and the LSH band fold
+(:func:`band_values_expr`). The char hash and the shingle fold have
+DuckDB ``*_sql`` twins; the char hash also has the pure-Python
+:func:`polyhash_py`.
 """
 
 from __future__ import annotations
@@ -27,38 +36,29 @@ def perm_constants(k: int) -> list[tuple[int, int]]:
     return [((_A_SEED * (i + 1)) % P, (_B_SEED * (i + 7) + 1) % P) for i in range(k)]
 
 
-def polyhash(col: Column) -> Column:
-    """Polynomial rolling hash of a string column → long in [0, P)."""
-    return F.aggregate(
-        F.transform(F.split(col, ""), lambda c: F.ascii(c).cast("long")),
-        F.lit(0).cast("long"),
-        lambda acc, c: (acc * 31 + c) % F.lit(P),
-    )
+def polyhash(col: Column, base: int = 31) -> Column:
+    """Polynomial rolling hash of a string column → long in [0, P).
 
-
-def polyhash2(col: Column) -> Column:
-    """Base-37 twin of :func:`polyhash` — an INDEPENDENT second content
-    hash for collision verification. Two distinct same-length strings
-    colliding under base 31 satisfy D(31) ≡ 0 mod P for the difference
-    polynomial D; also colliding under base 37 additionally requires
-    D(37) ≡ 0, so pairwise false-match probability drops from ~1/P to
-    ~1/P² (≈1e-18) — the second-independent-hash fix for exact-dup
+    ``base=37`` is the INDEPENDENT second content hash for collision
+    verification: two distinct same-length strings colliding under
+    base 31 satisfy D(31) ≡ 0 mod P for the difference polynomial D;
+    also colliding under base 37 additionally requires D(37) ≡ 0, so
+    the pairwise false-match probability drops from ~1/P to ~1/P²
+    (≈1e-18) — the second-independent-hash fix for exact-dup
     declarations made from hashes alone (a prefix/suffix-salted base-31
     hash would NOT work: same-length base-31 collisions survive any
-    affine salt)."""
+    affine salt).
+
+    The Column form exists for call sites that hash a COMPUTED
+    expression (salted ids, lambda variables); a named column or
+    literal is cheaper to build as ``F.expr(polyhash_spark_expr(c))``.
+    Wrap it in a one-argument lambda before handing it to ``F.transform``:
+    passed bare, ``base`` would receive the element index.
+    """
     return F.aggregate(
         F.transform(F.split(col, ""), lambda c: F.ascii(c).cast("long")),
         F.lit(0).cast("long"),
-        lambda acc, c: (acc * 37 + c) % F.lit(P),
-    )
-
-
-def polyhash2_sql(expr: str) -> str:
-    """The identical base-37 hash as DuckDB SQL text."""
-    return (
-        "list_reduce(list_prepend(CAST(0 AS BIGINT), "
-        f"list_transform(string_split({expr}, ''), c -> CAST(ascii(c) AS BIGINT))), "
-        f"(a, b) -> (a * 37 + b) % {P})"
+        lambda acc, c: (acc * base + c) % F.lit(P),
     )
 
 
@@ -72,52 +72,24 @@ def polyhash_py(s: str) -> int:
     return acc
 
 
-def polyhash_sql(expr: str) -> str:
+def polyhash_sql(expr: str, base: int = 31) -> str:
     """The identical hash as DuckDB SQL text."""
     return (
         "list_reduce(list_prepend(CAST(0 AS BIGINT), "
         f"list_transform(string_split({expr}, ''), c -> CAST(ascii(c) AS BIGINT))), "
-        f"(a, b) -> (a * 31 + b) % {P})"
+        f"(a, b) -> (a * {base} + b) % {P})"
     )
-
-
-def perm_hash(h: Column, a: int, b: int) -> Column:
-    return (F.lit(a) * h + F.lit(b)) % F.lit(P)
 
 
 def perm_hash_sql(h_expr: str, a: int, b: int) -> str:
     return f"(({a} * {h_expr} + {b}) % {P})"
 
 
-def shingle_hashes(th: Column, n: int = 3) -> Column:
-    """n-token shingle hashes folded from a token-hash array: the hash
-    of shingle i is ``fold(th[i..i+n-1], (acc, t) -> (acc*31 + t) % P)``
-    (first element taken as-is). O(n) per shingle from precomputed token
-    hashes — ~10× cheaper than re-hashing each shingle's characters.
-
-    ``th`` MUST be a materialized column attribute (withColumn), not a
-    nested expression: it is referenced per shingle element and a nested
-    expression would be re-evaluated at each reference.
-    """
-    size = F.size(th)
-    idx = F.sequence(F.lit(1), size - (n - 1))
-
-    def mk(i: Column) -> Column:
-        v = F.element_at(th, i)
-        for j in range(1, n):
-            v = (v * 31 + F.element_at(th, i + F.lit(j))) % F.lit(P)
-        return v
-
-    return F.when(size >= n, F.transform(idx, mk)).otherwise(
-        F.array().cast("array<long>")
-    )
-
-
 def polyhash_spark_expr(v: str) -> str:
-    """:func:`polyhash` as Spark-SQL TEXT — parses to the identical
-    Aggregate/Transform Catalyst nodes as the Column spelling, for ONE
-    py4j round-trip instead of ~20 (the expression-build latency class
-    documented on operators/dedup.shingle_hash_sets)."""
+    """:func:`polyhash` (base 31) as Spark-SQL TEXT — parses to the
+    identical Aggregate/Transform Catalyst nodes as the Column spelling,
+    for ONE py4j round-trip instead of ~20 (the expression-build latency
+    class documented on operators/dedup.shingle_hash_sets)."""
     return (
         f"aggregate(transform(split({v}, ''), c -> CAST(ascii(c) AS BIGINT)), "
         f"CAST(0 AS BIGINT), (acc, c) -> (acc * 31 + c) % {P})"
@@ -135,9 +107,17 @@ def token_hashes_spark_expr(toks_expr: str) -> str:
 
 
 def shingle_hashes_spark_expr(th: str, n: int = 3) -> str:
-    """:func:`shingle_hashes` as Spark-SQL text (identical nodes; the
-    py4j cost of the Column form grows with n — n=10 span hashing costs
-    ~100 round-trips per consumer)."""
+    """n-token shingle hashes folded from a token-hash array, as
+    Spark-SQL text: the hash of shingle i is
+    ``fold(th[i..i+n-1], (acc, t) -> (acc*31 + t) % P)`` (first element
+    taken as-is). O(n) per shingle from precomputed token hashes — ~10×
+    cheaper than re-hashing each shingle's characters. Parsed text, so
+    plan build is one py4j round-trip at any n.
+
+    ``th`` MUST name a materialized column (withColumn/select alias),
+    not a nested expression: it is referenced per shingle element and a
+    nested expression would be re-evaluated at each reference.
+    """
     v = f"element_at({th}, i)"
     for j in range(1, n):
         v = f"(({v}) * 31 + element_at({th}, i + {j})) % {P}"
@@ -158,6 +138,35 @@ def shingle_hashes_sql(th_expr: str, n: int = 3) -> str:
         f"list_transform(generate_series(1, len({th_expr}) - {n - 1}), i -> {v}) "
         f"ELSE CAST([] AS BIGINT[]) END"
     )
+
+
+def minhash_signature_expr(hashes_col: str, k: int = 12) -> Column:
+    """k-permutation MinHash signature (null entries when no shingles),
+    rendered as one ``F.expr`` string — one py4j round-trip instead of
+    the ~3k a Column-API spelling costs.
+
+    k scalar array_min passes beat a single-traversal fold with a
+    length-k array state: interpreted higher-order evaluation allocates
+    the state array per element, which costs more than k cheap scalar
+    scans (measured 2.4× slower at sf0.1).
+    """
+    items = ", ".join(
+        f"array_min(transform({hashes_col}, h -> ({a} * h + {b}) % {P}))"
+        for a, b in perm_constants(k)
+    )
+    return F.expr(f"array({items})")
+
+
+def band_values_expr(sig_col: str, bands: int, rows: int) -> Column:
+    """Fold each band of the signature into one bucket value, as one
+    ``F.expr`` (0-based bracket indexing)."""
+    items = []
+    for j in range(bands):
+        v = f"{sig_col}[{j * rows}]"
+        for r in range(1, rows):
+            v = f"({v}) * 31 + {sig_col}[{j * rows + r}]"
+        items.append(v)
+    return F.expr(f"array({', '.join(items)})")
 
 
 def hash_chain(seed: int, n: int) -> list[int]:

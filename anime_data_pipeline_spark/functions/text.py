@@ -1,4 +1,4 @@
-"""Tokenization / shingling column expressions shared by the text
+"""Tokenization and normalization column expressions shared by the text
 operators (SURVEY extension surface: dedup, text analysis)."""
 
 from __future__ import annotations
@@ -12,31 +12,8 @@ def tokens(text: Column) -> Column:
     return F.filter(F.split(text, " "), lambda t: t != "")
 
 
-def shingles(toks: Column, n: int = 3) -> Column:
-    """Distinct n-token shingles joined by single spaces. Empty array
-    when the document has fewer than n tokens."""
-    size = F.size(toks)
-    idx = F.sequence(F.lit(1), size - (n - 1))
-    make = lambda i: F.concat_ws(  # noqa: E731
-        " ", *[F.element_at(toks, i + j) for j in range(n)]
-    )
-    return F.when(size >= n, F.array_distinct(F.transform(idx, make))).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
 def tokens_sql(text_expr: str) -> str:
     return f"list_filter(string_split({text_expr}, ' '), t -> t <> '')"
-
-
-def shingles_sql(toks_expr: str, n: int = 3) -> str:
-    """DuckDB spelling of ``shingles`` (1-based list indexing)."""
-    joined = " || ' ' || ".join(f"({toks_expr})[i + {j}]" for j in range(n))
-    return (
-        f"CASE WHEN len({toks_expr}) >= {n} THEN "
-        f"list_distinct(list_transform(generate_series(1, len({toks_expr}) - {n - 1}), "
-        f"i -> {joined})) ELSE CAST([] AS VARCHAR[]) END"
-    )
 
 
 # ---------------------------------------------------------------------------

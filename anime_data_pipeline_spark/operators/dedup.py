@@ -33,15 +33,14 @@ from pyspark.sql import functions as F
 
 from anime_data_pipeline_spark.functions.hashing import (
     P,
+    band_values_expr,
+    minhash_signature_expr,
     perm_constants,
     polyhash,
-    polyhash2,
-    shingle_hashes,
     shingle_hashes_spark_expr,
     token_hashes_spark_expr,
     tokens_spark_expr,
 )
-from anime_data_pipeline_spark.functions.text import tokens
 
 
 def exact_dedup(df: DataFrame, content_cols: list[str], id_col: str) -> DataFrame:
@@ -49,15 +48,6 @@ def exact_dedup(df: DataFrame, content_cols: list[str], id_col: str) -> DataFram
     return df.groupBy(*content_cols).agg(
         F.min(id_col).alias("keeper_id"),
         F.count(F.lit(1)).alias("n_copies"),
-    )
-
-
-def _polyhash_expr(v: str) -> str:
-    """polyhash as Spark-SQL text — the same Aggregate/Transform nodes
-    the Column spelling parses to (pure integer math: bit-identical)."""
-    return (
-        f"aggregate(transform(split({v}, ''), c -> CAST(ascii(c) AS BIGINT)), "
-        f"CAST(0 AS BIGINT), (acc, c) -> (acc * 31 + c) % {P})"
     )
 
 
@@ -83,74 +73,13 @@ def shingle_hash_sets(
     while the parsed SQL produces the identical integer-math Catalyst
     nodes.
     """
-    th = (
-        f"transform(filter(split(`{text_col}`, ' '), t -> t != ''), "
-        f"t -> {_polyhash_expr('t')})"
-    )
-    v = "element_at(_th, i)"
-    for j in range(1, n):
-        v = f"(({v}) * 31 + element_at(_th, i + {j})) % {P}"
-    sh = (
-        f"CASE WHEN size(_th) >= {n} THEN "
-        f"array_distinct(transform(sequence(1, size(_th) - {n - 1}), i -> {v})) "
-        f"ELSE CAST(array() AS ARRAY<BIGINT>) END"
-    )
+    th = token_hashes_spark_expr(tokens_spark_expr(text_col))
+    sh = f"array_distinct({shingle_hashes_spark_expr('_th', n)})"
     return df.select(
         F.col(id_col).alias("doc"),
         *[F.col(c) for c in carry],
         F.expr(th).alias("_th"),
     ).select("doc", *carry, F.expr(sh).alias("hashes"))
-
-
-def minhash_signature(hashes: Column, k: int = 12) -> Column:
-    """k-permutation MinHash signature (null entries when no shingles).
-
-    k scalar array_min passes beat a single-traversal fold with a
-    length-k array state: interpreted higher-order evaluation allocates
-    the state array per element, which costs more than k cheap scalar
-    scans (measured 2.4× slower at sf0.1).
-    """
-
-    def perm_min(a: int, b: int) -> Column:
-        return F.array_min(
-            F.transform(hashes, lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(P))
-        )
-
-    return F.array(*[perm_min(a, b) for a, b in perm_constants(k)])
-
-
-def minhash_signature_expr(hashes_col: str, k: int = 12) -> Column:
-    """:func:`minhash_signature` rendered as one ``F.expr`` string
-    (identical nodes after parsing, one py4j round-trip instead of
-    ~3k)."""
-    items = ", ".join(
-        f"array_min(transform({hashes_col}, h -> ({a} * h + {b}) % {P}))"
-        for a, b in perm_constants(k)
-    )
-    return F.expr(f"array({items})")
-
-
-def band_values(sig: Column, bands: int, rows: int) -> Column:
-    """Fold each band of the signature into one bucket value."""
-    cols = []
-    for j in range(bands):
-        v = sig.getItem(j * rows)
-        for r in range(1, rows):
-            v = v * F.lit(31) + sig.getItem(j * rows + r)
-        cols.append(v)
-    return F.array(*cols)
-
-
-def band_values_expr(sig_col: str, bands: int, rows: int) -> Column:
-    """:func:`band_values` as one ``F.expr`` (0-based bracket indexing
-    matches Column.getItem)."""
-    items = []
-    for j in range(bands):
-        v = f"{sig_col}[{j * rows}]"
-        for r in range(1, rows):
-            v = f"({v}) * 31 + {sig_col}[{j * rows + r}]"
-        items.append(v)
-    return F.expr(f"array({', '.join(items)})")
 
 
 def band_candidates(hashed: DataFrame, bands: int, rows: int) -> DataFrame:
@@ -425,7 +354,9 @@ def simhash_df(
     :func:`simhash_arrow_udf`; ``impl="native"`` keeps everything in
     Catalyst expressions (slower fold, but no Python boundary — and the
     form the DuckDB oracle mirrors). Fingerprints are bit-identical."""
-    hashed = df.withColumn("_sh_th", F.transform(tokens(F.col(text_col)), polyhash))
+    hashed = df.withColumn(
+        "_sh_th", F.expr(token_hashes_spark_expr(tokens_spark_expr(text_col)))
+    )
     if impl == "arrow":
         hashed = hashed.withColumn(out, simhash_arrow_udf(bits)(F.col("_sh_th")))
     else:
@@ -920,7 +851,7 @@ def incremental_dedup_status(
         withc = (
             df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("_t"))
             .withColumn("chash", polyhash(F.col("_t")))
-            .withColumn("chash2", polyhash2(F.col("_t")))
+            .withColumn("chash2", polyhash(F.col("_t"), 37))
         )
         # One persisted signature table per side: its three projections
         # (content-hash join side, shingle-set verify side, band
@@ -1130,11 +1061,8 @@ def remove_contaminated_spans(
         .withColumn("_sh", F.expr(shingle_hashes_spark_expr("_th", n)))
     )
     universe = (
-        bench.select(
-            tokens(F.col(text_col)).alias("_toks")
-        )
-        .withColumn("_th", F.transform(F.col("_toks"), polyhash))
-        .select(F.explode(shingle_hashes(F.col("_th"), n)).alias("sh"))
+        bench.select(F.expr(token_hashes_spark_expr(tokens_spark_expr(text_col))).alias("_th"))
+        .select(F.explode(F.expr(shingle_hashes_spark_expr("_th", n))).alias("sh"))
         .distinct()
     )
     spans = base.select("doc", F.posexplode("_sh").alias("pos0", "sh"))
@@ -1199,10 +1127,9 @@ def source_overlap_matrix(
     base = (
         df.select(
             F.col(group_col).alias("grp"),
-            tokens(F.col(text_col)).alias("_toks"),
+            F.expr(token_hashes_spark_expr(tokens_spark_expr(text_col))).alias("_th"),
         )
-        .withColumn("_th", F.transform(F.col("_toks"), polyhash))
-        .select("grp", F.explode(shingle_hashes(F.col("_th"), n)).alias("sh"))
+        .select("grp", F.explode(F.expr(shingle_hashes_spark_expr("_th", n))).alias("sh"))
         .distinct()
     )
     sizes = base.groupBy("grp").agg(F.count(F.lit(1)).alias("_sz"))

@@ -37,20 +37,8 @@ pressure spills rather than OOMs.
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-# Unique temp-view tags for the SQL-spelled iteration bodies (several
-# graph queries are constructed in one session; tests build all 195).
-_VIEW_SEQ = itertools.count()
-
-
-def _fmt_d(x: float) -> str:
-    """Shortest-roundtrip double literal for Spark SQL text (repr and
-    Double.parseDouble are both correctly rounded)."""
-    return f"{float(x)!r}D"
 
 
 def pagerank(

@@ -43,10 +43,6 @@ def hash_sample(
     return df.filter(_seeded_hash(F.col(id_col), seed) < int(rate * P))
 
 
-def hash_sample_pred_sql(expr: str, rate: float, seed: int = 0) -> str:
-    return f"{seeded_hash_sql(expr, seed)} < {int(rate * P)}"
-
-
 def stratified_sample_n(
     df: DataFrame, group_col: str, id_col: str, n_per_group: int, seed: int = 0
 ) -> DataFrame:
@@ -66,19 +62,6 @@ def stratified_sample_n(
         .filter(F.col("_ss_rank") <= n_per_group)
         .drop("_ss_rank")
     )
-
-
-def stratified_sample_rates(
-    df: DataFrame, group_col: str, id_col: str, rates: dict[str, float], seed: int = 0
-) -> DataFrame:
-    """Per-group Bernoulli rates (training-mix reweighting): the rate
-    lookup is a literal CASE expression — map-only, no join, and the
-    mix spec travels inside the plan."""
-    h = _seeded_hash(F.col(id_col), seed)
-    expr: Column = F.lit(None).cast("long")
-    for g, r in rates.items():
-        expr = F.when(F.col(group_col) == g, int(r * P)).otherwise(expr)
-    return df.filter(h < expr)
 
 
 def mix_rebalance(

@@ -39,22 +39,12 @@ from pyspark.sql import functions as F
 from anime_data_pipeline_spark.functions.hashing import (
     P,
     polyhash_spark_expr,
-    shingle_hashes,
     shingle_hashes_spark_expr,
     token_hashes_spark_expr,
     tokens_spark_expr,
 )
-from anime_data_pipeline_spark.functions.text import tokens
 
 DEFAULT_BUCKETS = 1024
-
-
-def _token_hash(t: Column) -> Column:
-    return F.aggregate(
-        F.transform(F.split(t, ""), lambda c: F.ascii(c).cast("long")),
-        F.lit(0).cast("long"),
-        lambda acc, c: (acc * 31 + c) % F.lit(P),
-    )
 
 
 def doc_bucket_counts(
@@ -75,7 +65,7 @@ def doc_bucket_counts(
 
     The featurizer is the DSIR paper's hashed unigram+bigram n-gram
     profile with the cross-engine polynomial hash. The token-hash array
-    is materialized as a column BEFORE the bigram fold — shingle_hashes
+    is materialized as a column BEFORE the bigram fold — the shingle fold
     references it per element, and a nested expression would be
     re-evaluated per reference (the expression-tree discipline from
     SCALE.md; measured 8× on this operator).

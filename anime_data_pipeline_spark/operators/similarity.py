@@ -408,7 +408,7 @@ def ivf_assign(
     :func:`assign_cells` builds the PARSED twin
     (:func:`ivf_assign_expr` — identical nodes, ~1 py4j round-trip);
     this Column spelling is kept as the readable mirror, pinned equal
-    by ``tests/test_similarity.py``.
+    by ``tests/test_ann_recall.py``.
     """
     if vn is None:
         vn = F.sqrt(sq_norm(v))

@@ -316,76 +316,6 @@ def clean_tags_df(df: "DataFrame", tags: Column, out: str = "cleaned_tags") -> "
     )
 
 
-def clean_tags_column(tags: Column) -> Column:
-    """Single-Column clean_tags (rule set: clean_tags_py). Prefer
-    ``clean_tags_df`` in query plans — as one nested expression the
-    multi-referenced stages re-embed their inputs (see clean_tags_df
-    docstring); this form exists for expression-level composition and
-    small-array unit tests."""
-    # 1. underscore normalize, protecting ^_^
-    tags = F.transform(
-        tags, lambda t: F.when(t == "^_^", t).otherwise(F.regexp_replace(t, "_", " "))
-    )
-    # 2. truncate at the first 'rating*' tag at 1-based position >= 2
-    # (the reference's ', rating' split cannot match a rating-prefixed
-    # FIRST tag — merge_all_to_metadata.py:63).
-    rating_tail = F.array_position(
-        F.slice(
-            F.transform(tags, lambda t: t.startswith("rating")),
-            2,
-            F.greatest(F.size(tags) - 1, F.lit(0)),
-        ),
-        True,
-    )
-    rating_pos = F.when(rating_tail > 0, rating_tail + 1).otherwise(F.lit(0))
-    tags = F.when(rating_pos > 0, F.slice(tags, 1, (rating_pos - 1).cast("int"))).otherwise(
-        tags
-    )
-
-    # 3. multi-person family removal — single-pass "marked" design: each
-    # tag's family-membership vector is computed ONCE, counts once per
-    # family. (A naive sequential when(count>1, filter(...)).otherwise(arr)
-    # chain re-embeds the input expression 3^families times — a 43 MiB
-    # task binary in practice. The families are mutually disjoint, so
-    # upfront counting is semantically identical to sequential pruning.)
-    blob = F.array_join(tags, ", ")
-    multi = blob.contains("girls") | blob.contains("boys")
-
-    fam_pats = list(_MULTI_PERSON_FAMILY_PATTERNS)
-
-    def mvec(t: Column) -> Column:
-        plain_hair = t.rlike(_GENERIC_HAIR) & ~t.rlike(_HAIR_LENGTH)
-        return F.array(*[t.rlike(p) for p in fam_pats], plain_hair)
-
-    marked = F.transform(tags, lambda t: F.struct(t.alias("t"), mvec(t).alias("m")))
-    counts = F.array(
-        *[
-            F.size(F.filter(marked, lambda x: x["m"].getItem(i)))
-            for i in range(len(fam_pats) + 1)
-        ]
-    )
-    kept = F.filter(
-        marked,
-        lambda x: ~F.exists(
-            F.zip_with(counts, x["m"], lambda c, mm: (c > 1) & mm), lambda b: b
-        ),
-    )
-    pruned = F.transform(kept, lambda x: x["t"])
-    tags = F.when(multi, pruned).otherwise(tags)
-
-    # 4. word subsumption: drop single-word tag t when some all-\w+
-    # multi-word tag ends with " t".
-    def subsumed(t: Column, arr: Column) -> Column:
-        return F.exists(
-            arr,
-            lambda u: (u != t)
-            & u.endswith(F.concat(F.lit(" "), t))
-            & F.substr(u, F.lit(1), F.length(u) - F.length(t)).rlike(_ALL_WORDS_PREFIX),
-        )
-
-    return F.filter(tags, lambda t: ~(t.rlike(_SINGLE_WORD) & subsumed(t, tags)))
-
-
 def clean_caption_bounded(caption: Column, passes: int = 3) -> Column:
     """Native chained-replace caption cleaning: each pair applied
     ``passes`` times in order. Exact for any caption needing ≤ passes

@@ -25,8 +25,6 @@ from pyspark.sql.window import Window
 
 from anime_data_pipeline_spark.functions.compat import dround
 from anime_data_pipeline_spark.functions.hashing import (
-    polyhash,
-    shingle_hashes,
     shingle_hashes_spark_expr,
     token_hashes_spark_expr,
     tokens_spark_expr,

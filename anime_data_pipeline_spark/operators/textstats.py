@@ -22,8 +22,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from anime_data_pipeline_spark.functions.hashing import (
-    polyhash,
-    shingle_hashes,
     shingle_hashes_spark_expr,
     token_hashes_spark_expr,
     tokens_spark_expr,
@@ -507,14 +505,7 @@ def cdc_chunks(
         raise ValueError("divisor must be positive")
     base = df.select(
         F.col(id_col).alias("doc"),
-        F.transform(
-            tokens(F.col(text_col)),
-            lambda t: F.aggregate(
-                F.transform(F.split(t, ""), lambda c: F.ascii(c).cast("long")),
-                F.lit(0).cast("long"),
-                lambda acc, c: (acc * 31 + c) % F.lit(P),
-            ),
-        ).alias("_th"),
+        F.expr(token_hashes_spark_expr(tokens_spark_expr(text_col))).alias("_th"),
     ).withColumn("_n", F.size("_th"))
     bpos = F.filter(
         F.sequence(F.lit(1), F.greatest(F.col("_n"), F.lit(1))),

@@ -12,11 +12,12 @@ oracle-checkable (queries/curation_q).
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from anime_data_pipeline_spark.functions.hashing import polyhash, polyhash2
+from anime_data_pipeline_spark.functions.hashing import polyhash
 from anime_data_pipeline_spark.operators.dedup import minhash_lsh_pairs
 from anime_data_pipeline_spark.operators.textstats import quality_columns
 
@@ -153,6 +154,50 @@ def ensure_map_parallelism(df: DataFrame, *keys: str) -> DataFrame:
     return df
 
 
+def _dedup(
+    kept: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    k: int,
+    bands: int,
+    jaccard_threshold: float,
+) -> DataFrame:
+    """The dedup steps both curation entry points share: exact dedup on
+    a content-hash pair, then MinHash-LSH near-dup removal.
+
+    Exact dedup keeps the min-id row per content-hash PAIR. Two
+    independent polynomial hashes (base 31 + 37) push the per-pair
+    false-collapse probability from ~1/P to ~1/P² (≈1e-18) — a single
+    ~2^30 hash silently drops ~N²/2P unrelated docs at corpus scale.
+    The shuffle key stays two 8-byte ints, never the text payload.
+
+    Near-dup policy: for every verified pair (id_a < id_b) the LARGER
+    id is dropped — greedy, deterministic, one anti-join.
+
+    The exact-dedup survivor set feeds two consumers (the LSH signature
+    build and the anti-join left side) and its lineage holds the
+    caller's scoring expression forest plus the dedup window — it is
+    persisted rather than recomputed per consumer. At 100 TB this is
+    the stage boundary you'd parquet-checkpoint.
+    """
+    hashed = kept.withColumn("_ch", polyhash(F.col(text_col))).withColumn(
+        "_ch2", polyhash(F.col(text_col), 37)
+    )
+    keeper = F.min(id_col).over(W.partitionBy("_ch", "_ch2"))
+    uniq = (
+        hashed.withColumn("_keeper", keeper)
+        .filter(F.col(id_col) == F.col("_keeper"))
+        .drop("_ch", "_ch2", "_keeper")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    pairs = minhash_lsh_pairs(
+        uniq, id_col, text_col, n=n, k=k, bands=bands, threshold=jaccard_threshold
+    )
+    losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
+    return uniq.join(losers, id_col, "left_anti")
+
+
 def curate_corpus(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -163,10 +208,8 @@ def curate_corpus(
     bands: int = 4,
     jaccard_threshold: float = 0.5,
 ) -> DataFrame:
-    """Returns the curated corpus (survivor rows + quality columns).
-
-    Near-dup policy: for every verified pair (id_a < id_b) the LARGER
-    id is dropped — greedy, deterministic, one anti-join.
+    """Returns the curated corpus (survivor rows + quality columns):
+    the quality gate, then :func:`_dedup`.
 
     Cache lifecycle (r11 verdict #3): the survivor set is persisted
     BEHIND the returned lazy plan (two consumers), so this function
@@ -184,54 +227,18 @@ def curate_corpus(
     # projection, the LSH signature build, the recall/editdist tests)
     # reads only (id, text, n_tokens, quality_score), so the other six
     # scored ratio columns are dead weight through the shuffle and the
-    # persisted survivor set.
-    # Exclude the quality-stage output names from the passthrough list
-    # (r12 ADVICE #3): an input corpus that already carries a column
-    # named n_tokens/quality_score would otherwise project a
-    # duplicate-name column and break downstream references (the other
-    # quality outputs are replaced by withColumn, so passing them
-    # through `other` reads the computed value — fine — but the two
-    # explicitly re-selected names would duplicate).
-    _quality_outputs = {
-        "n_chars_m", "n_tokens", "punct_ratio", "digit_ratio",
-        "stopword_ratio", "mean_token_len", "quality_score",
-    }
+    # persisted survivor set. Input columns pass through; the two
+    # explicitly re-selected quality outputs are excluded from them so
+    # an input already carrying n_tokens/quality_score cannot project a
+    # duplicate name (any other same-named input column, e.g.
+    # punct_ratio, passes through holding the computed value).
     other = [
-        c for c in df.columns if c not in (id_col, text_col) and c not in _quality_outputs
+        c for c in df.columns if c not in (id_col, text_col, "n_tokens", "quality_score")
     ]
     kept = scored.filter(F.col("quality_score") >= quality_threshold).select(
         id_col, text_col, *other, "n_tokens", "quality_score"
     )
-
-    # exact dedup: keep the min-id row per content-hash PAIR. Two
-    # independent polynomial hashes (base 31 + 37) push the per-pair
-    # false-collapse probability from ~1/P to ~1/P² (≈1e-18) — a single
-    # ~2^30 hash silently drops ~N²/2P unrelated docs at corpus scale.
-    # The shuffle key stays two 8-byte ints, never the text payload.
-    hashed = kept.withColumn("_ch", polyhash(F.col(text_col))).withColumn(
-        "_ch2", polyhash2(F.col(text_col))
-    )
-    keeper = F.min(id_col).over(W.partitionBy("_ch", "_ch2"))
-    # uniq feeds two consumers (the LSH signature build and the
-    # anti-join left side) and its lineage holds the quality-scoring
-    # expression forest plus the dedup window — persist the shrunk
-    # survivor set rather than recompute that chain per consumer,
-    # exactly as prepare_pretraining_corpus does one stage later. At
-    # 100 TB this is the stage boundary you'd parquet-checkpoint.
-    from pyspark import StorageLevel
-
-    uniq = (
-        hashed.withColumn("_keeper", keeper)
-        .filter(F.col(id_col) == F.col("_keeper"))
-        .drop("_ch", "_ch2", "_keeper")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-
-    pairs = minhash_lsh_pairs(
-        uniq, id_col, text_col, n=n, k=k, bands=bands, threshold=jaccard_threshold
-    )
-    losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return uniq.join(losers, id_col, "left_anti")
+    return _dedup(kept, id_col, text_col, n, k, bands, jaccard_threshold)
 
 
 def prepare_pretraining_corpus(
@@ -259,7 +266,8 @@ def prepare_pretraining_corpus(
 
     Each stage shrinks the data before the next shuffle; the stages
     are the q51-q86 operators composed, and the whole chain is
-    oracle-checked end-to-end (q88). Returns
+    oracle-checked end-to-end (q88). The two dedup stages are
+    :func:`_dedup`, shared with ``curate_corpus``. Returns
     (id, group, n_tokens, chunk_id) — the packed training manifest.
 
     Cache lifecycle: as in ``curate_corpus`` — the two persisted stage
@@ -268,8 +276,6 @@ def prepare_pretraining_corpus(
     from anime_data_pipeline_spark.operators.dedup import benchmark_contamination
     from anime_data_pipeline_spark.operators.packing import pack_greedy
     from anime_data_pipeline_spark.operators.textstats import language_id
-
-    from pyspark import StorageLevel
 
     scored = quality_columns(
         language_id(ensure_map_parallelism(docs), text_col), text_col
@@ -287,28 +293,12 @@ def prepare_pretraining_corpus(
         & (F.col("quality_score") >= quality_threshold)
     ).select(id_col, group_col, text_col, "n_tokens")
 
-    hashed = kept.withColumn("_ch", polyhash(F.col(text_col))).withColumn(
-        "_ch2", polyhash2(F.col(text_col))
+    # survivors feeds two consumers (contamination and its anti-join
+    # left side): persist the shrunk set rather than recompute the
+    # dedup chain per consumer.
+    survivors = _dedup(kept, id_col, text_col, n, k, bands, jaccard_threshold).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
-    keeper = F.min(id_col).over(W.partitionBy("_ch", "_ch2"))
-    # uniq feeds three consumers (LSH signatures, the anti-join left
-    # side, contamination) and its lineage holds the langid/quality
-    # expression forest — persist the already-shrunk survivor set
-    # rather than recompute the scan+filter chain per consumer. At
-    # 100 TB this is the stage boundary you'd parquet-checkpoint.
-    uniq = (
-        hashed.withColumn("_keeper", keeper)
-        .filter(F.col(id_col) == F.col("_keeper"))
-        .drop("_ch", "_ch2", "_keeper")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-
-    pairs = minhash_lsh_pairs(
-        uniq, id_col, text_col, n=n, k=k, bands=bands, threshold=jaccard_threshold
-    )
-    survivors = uniq.join(
-        pairs.select(F.col("id_b").alias(id_col)).distinct(), id_col, "left_anti"
-    ).persist(StorageLevel.MEMORY_AND_DISK)
 
     contaminated = (
         benchmark_contamination(survivors, bench, id_col, text_col, n=contam_n)

@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from anime_data_pipeline_spark.functions.compat import dround, dround_sql
-from anime_data_pipeline_spark.functions.hashing import polyhash2_sql, polyhash_sql
+from anime_data_pipeline_spark.functions.hashing import polyhash_sql
 from anime_data_pipeline_spark.operators.textstats import quality_sql_projection
 from anime_data_pipeline_spark.plans.curation import curate_corpus
 from anime_data_pipeline_spark.queries.dedup_q import (
@@ -34,7 +34,7 @@ def _uniq_sql() -> str:
     SELECT doc_id, text FROM (
       SELECT doc_id, text,
              min(doc_id) OVER (
-               PARTITION BY {polyhash_sql("text")}, {polyhash2_sql("text")}) AS keeper
+               PARTITION BY {polyhash_sql("text")}, {polyhash_sql("text", 37)}) AS keeper
       FROM ({kept})
     ) WHERE doc_id = keeper
     """
@@ -114,7 +114,7 @@ def _q88_oracle() -> str:
     pred, _ = language_id_sql("text")
     score = quality_sql_projection("text")["quality_score"]
     ph = polyhash_sql("text")
-    ph2 = polyhash2_sql("text")
+    ph2 = polyhash_sql("text", 37)
     n = _Q88_CONTAM_N
     return f"""
     WITH RECURSIVE train AS ({_q88_train_sql()}),
@@ -248,7 +248,7 @@ def _q104_oracle() -> str:
     hyg AS (SELECT * FROM corpus WHERE ({score}) >= {_Q104_QT}),
     uniq AS (SELECT doc_id, lang, source, text FROM (
                SELECT *, min(doc_id) OVER (
-                 PARTITION BY {polyhash_sql("text")}, {polyhash2_sql("text")}) AS keeper
+                 PARTITION BY {polyhash_sql("text")}, {polyhash_sql("text", 37)}) AS keeper
                FROM hyg) WHERE doc_id = keeper),
     tok AS (SELECT doc_id, lang, source, {tokens_sql("text")} AS toks FROM uniq),
     tha AS (SELECT doc_id, lang, source, toks,
@@ -319,7 +319,7 @@ def q104_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     from anime_data_pipeline_spark.catalog import load_table
-    from anime_data_pipeline_spark.functions.hashing import polyhash, polyhash2
+    from anime_data_pipeline_spark.functions.hashing import polyhash
     from anime_data_pipeline_spark.operators.dedup import remove_duplicate_spans
     from anime_data_pipeline_spark.operators.selection import (
         dsir_logweights,
@@ -365,7 +365,7 @@ def q104_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     uniq = (
         hyg.withColumn("_chash", polyhash(F.col("text")))
-        .withColumn("_chash2", polyhash2(F.col("text")))
+        .withColumn("_chash2", polyhash(F.col("text"), 37))
         .withColumn("_keeper", keeper)
         .filter(F.col("doc_id") == F.col("_keeper"))
         .select("doc_id", "lang", "source", tokens(F.col("text")).alias("_toks"))
@@ -446,7 +446,7 @@ def _q126_oracle() -> str:
     hyg AS (SELECT * FROM corpus WHERE ({score}) >= {_Q126_QT}),
     uniq AS (SELECT doc_id, source FROM (
                SELECT *, min(doc_id) OVER (
-                 PARTITION BY {polyhash_sql("text")}, {polyhash2_sql("text")}) AS keeper
+                 PARTITION BY {polyhash_sql("text")}, {polyhash_sql("text", 37)}) AS keeper
                FROM hyg) WHERE doc_id = keeper),
     raw_c AS (SELECT source, count(*) AS n_raw FROM corpus GROUP BY source),
     hyg_c AS (SELECT source, count(*) AS n_quality FROM hyg GROUP BY source),
@@ -470,7 +470,7 @@ def q126_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     from anime_data_pipeline_spark.catalog import load_table
-    from anime_data_pipeline_spark.functions.hashing import polyhash, polyhash2
+    from anime_data_pipeline_spark.functions.hashing import polyhash
     from anime_data_pipeline_spark.operators.textstats import quality_columns
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
@@ -487,7 +487,7 @@ def q126_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeper = F.min("doc_id").over(Window.partitionBy("_ch", "_ch2"))
     uniq = (
         hyg.withColumn("_ch", polyhash(F.col("text")))
-        .withColumn("_ch2", polyhash2(F.col("text")))
+        .withColumn("_ch2", polyhash(F.col("text"), 37))
         .withColumn("_k", keeper)
         .filter(F.col("doc_id") == F.col("_k"))
         .select("doc_id", "source")

@@ -24,7 +24,6 @@ from anime_data_pipeline_spark.functions.hashing import (
     perm_constants,
     perm_hash_sql,
     polyhash,
-    polyhash2_sql,
     polyhash_sql,
     shingle_hashes_sql,
 )
@@ -319,7 +318,7 @@ def _q102_oracle() -> str:
     def chain(p: str, src: str) -> str:
         return f"""
     {p}tok AS (SELECT doc_id AS doc, {polyhash_sql("text")} AS chash,
-                      {polyhash2_sql("text")} AS chash2,
+                      {polyhash_sql("text", 37)} AS chash2,
                       {tokens_sql("text")} AS toks FROM {src}),
     {p}tha AS (SELECT doc, chash, chash2,
                       list_transform(toks, t -> {polyhash_sql("t")}) AS th

@@ -325,10 +325,10 @@ def q90_stream_quality_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # content view is the deterministic (and semantically honest) result.
 # ---------------------------------------------------------------------------
 def _q108_oracle() -> str:
-    from anime_data_pipeline_spark.functions.hashing import polyhash2_sql, polyhash_sql
+    from anime_data_pipeline_spark.functions.hashing import polyhash_sql
 
     h = polyhash_sql("text")
-    h2 = polyhash2_sql("text")
+    h2 = polyhash_sql("text", 37)
     return f"""
     WITH hist AS (SELECT DISTINCT {h} AS content_hash, {h2} AS content_hash2
                   FROM documents WHERE doc_id % 2 = 0),
@@ -342,7 +342,7 @@ def _q108_oracle() -> str:
 @register("q108_stream_incremental_dedup", oracle=_q108_oracle())
 def q108_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from anime_data_pipeline_spark.catalog import load_table
-    from anime_data_pipeline_spark.functions.hashing import polyhash, polyhash2
+    from anime_data_pipeline_spark.functions.hashing import polyhash
     from anime_data_pipeline_spark.streaming.pipeline import (
         read_documents_stream,
         run_available_now,
@@ -356,14 +356,14 @@ def q108_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
         .filter(F.col("doc_id") % 2 == 0)
         .select(
             polyhash(F.col("text")).alias("content_hash"),
-            polyhash2(F.col("text")).alias("content_hash2"),
+            polyhash(F.col("text"), 37).alias("content_hash2"),
         )
     )
     s = read_documents_stream(spark, sf_dir)
     doubled = (
         s.unionByName(read_documents_stream(spark, sf_dir))
         .withColumn("content_hash", polyhash(F.col("text")))
-        .withColumn("content_hash2", polyhash2(F.col("text")))
+        .withColumn("content_hash2", polyhash(F.col("text"), 37))
     )
     out = run_available_now(
         stream_incremental_dedup(

@@ -63,10 +63,3 @@ def parse_rating_tags(df: DataFrame, raw_col: str = "raw_line") -> DataFrame:
 def read_sidecar_tags(spark: SparkSession, dir: str) -> DataFrame:
     """S3: tags sidecars → (image_stem, rating, tags)."""
     return parse_rating_tags(read_sidecar_files(spark, dir, "txt")).drop("raw_line")
-
-
-def read_sidecar_captions(spark: SparkSession, dir: str) -> DataFrame:
-    """S4: caption sidecars → (image_stem, caption)."""
-    return read_sidecar_files(spark, dir, "caption").withColumnRenamed(
-        "raw_line", "caption"
-    )

@@ -40,7 +40,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from anime_data_pipeline_spark.functions.hashing import P
 from anime_data_pipeline_spark.operators.sampling import _seeded_hash
 
 

@@ -55,6 +55,20 @@ def test_curation_removes_all_exact_copies(spark, sf_dir):
                    for i in range(0, 100000, 3))
 
 
+def test_curation_passes_through_input_columns_named_like_quality_ratios(spark):
+    """Only n_tokens and quality_score are re-selected by curate_corpus,
+    so only those two input names are excluded from the passthrough; an
+    input column that shares a name with another quality output (here
+    punct_ratio) must survive."""
+    corpus = spark.createDataFrame(
+        [(1, "the cat sat on the mat", 0.5), (2, "a dog ran in the park", 0.5)],
+        "doc_id long, text string, punct_ratio double",
+    )
+    curated = curate_corpus(corpus, "doc_id", "text", quality_threshold=0.0)
+    assert "punct_ratio" in curated.columns
+    assert curated.count() == 2
+
+
 def test_srp_catches_every_scaled_copy(spark, sf_dir):
     """A scaled copy points the same direction → identical SRP signs →
     same bucket → must be verified at cosine ≈ 1."""

@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 from anime_data_pipeline_spark.operators.tags import (
     clean_caption_py,
     clean_caption_udf,
-    clean_tags_column,
+    clean_tags_df,
     clean_tags_py,
     novelai_order_py,
     novelai_ordered_tags,
@@ -69,7 +69,7 @@ def test_clean_tags_matches_spec(spark):
     df = spark.createDataFrame(rows, "id int, tags array<string>")
     got = {
         r["id"]: r["cleaned"]
-        for r in df.select("id", clean_tags_column(F.col("tags")).alias("cleaned")).collect()
+        for r in clean_tags_df(df, F.col("tags"), out="cleaned").select("id", "cleaned").collect()
     }
     for i, tags in enumerate(CLEAN_CASES):
         assert got[i] == clean_tags_py(tags), tags
