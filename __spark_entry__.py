@@ -53,7 +53,7 @@ def entry(spark: SparkSession) -> DataFrame:
 # source changes are exactly what hand lists miss.)
 
 # (a) drifted since the newest verified row: `scripts/fingerprints.py
-# diff` verbatim, against the snapshot refreshed at cc45497. Two
+# diff` verbatim, against the snapshot refreshed at cc45497. Three
 # reworks feed it:
 # (1) round 13 (OPTIMIZATION_r13.md): the connected_components fast
 #     path, the curate_corpus passthrough guard, q104's span-dedup
@@ -63,7 +63,10 @@ def entry(spark: SparkSession) -> DataFrame:
 #     functions/hashing (operators/dedup, textstats, selection, terms),
 #     polyhash2 became polyhash(col, 37), and curate_corpus /
 #     prepare_pretraining_corpus share one dedup chain — every query
-#     whose closure imports those modules drifts.
+#     whose closure imports those modules drifts;
+# (3) NovelAI tag ordering became one DataFrame-level function with a
+#     parsed, hashed vocab probe (operators/tags.novelai_order_df) —
+#     q24.
 _CHANGED_THIS_ROUND: list[str] = [
     "q100_bloom_contamination",
     "q101_span_dedup",
@@ -85,6 +88,7 @@ _CHANGED_THIS_ROUND: list[str] = [
     "q156_source_js_divergence",
     "q161_containment_dedup",
     "q193_fasttext_quality_filter",
+    "q24_novelai_order",
     "q29_seeded_shuffle",
     "q30_map_zip_filter",
     "q31_exact_dedup",
@@ -126,8 +130,8 @@ _PRIORITY = [
     *_REWORKED_LAST_ROUND,
     # (d) stalest first. Round 13's window sampled the whole former
     # round-6/7 queue, so the stalest rows left are round 7's tail,
-    # then the round-8 cohort. With 46 changed entries the 50-row
-    # window takes the first 4; the rest stays queued for the next
+    # then the round-8 cohort. With 47 changed entries the 50-row
+    # window takes the first 3; the rest stays queued for the next
     # rotation.
     "q89_temperature_mix",
     "q92_pack_barriered",

@@ -166,50 +166,66 @@ def clean_caption_py(caption: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# Spark column expressions
+# Spark expressions
 # ---------------------------------------------------------------------------
-def _sort_len_desc(arr: Column) -> Column:
-    """array_sort by (-length, value) — the deterministic group order."""
-    return F.array_sort(
-        arr,
-        lambda l, r: F.when(F.length(l) > F.length(r), -1)
-        .when(F.length(l) < F.length(r), 1)
-        .when(l < r, -1)
-        .when(l > r, 1)
-        .otherwise(0),
-    )
+def sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal. Escapes ``\\`` and ``'``, the
+    only characters the parser treats specially inside single quotes,
+    so untrusted names (vocab CSVs) render verbatim."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def novelai_ordered_tags(tags: Column, vocab: Column) -> Column:
-    """Ordered prompt string from a tag array + a (small, literal or
-    broadcast-collected) vocab array. Pure expressions: no shuffle.
+_BY_LEN_DESC = (
+    "(l, r) -> CASE WHEN length(l) > length(r) THEN -1 WHEN length(l) < length(r) THEN 1 "
+    "WHEN l < r THEN -1 WHEN l > r THEN 1 ELSE 0 END"
+)
 
-    For a 9k-row vocabulary prefer ``vocab`` built once on the driver via
-    ``F.lit(sorted(vocab_set))`` (≈100 KB literal — fine); for larger
-    vocabularies use an explode + broadcast-join + re-collect plan.
+
+def novelai_order_df(
+    df: DataFrame,
+    tags: Column,
+    vocab: Iterable[str] | Column,
+    out: str = "ordered_tags",
+) -> DataFrame:
+    """NovelAI prompt ordering (rule set: novelai_order_py) of the tag
+    array ``tags`` into the string column ``out``. A null array orders
+    as empty; null elements are dropped.
+
+    Two parsed expressions over materialized columns. The first
+    classifies each distinct tag once: prefix (0), character (1) or
+    general (2). The second sorts the character and general groups by
+    ``(-length, value)`` and joins the three. A names list renders as
+    ``t IN (<escaped names>)``, which Catalyst's ``OptimizeIn`` turns
+    into a hashed ``InSet`` probe, and the whole vocab costs one py4j
+    round trip. A Column vocab (an array) is probed with
+    ``array_contains``, a linear scan per tag.
     """
-    tags = F.array_distinct(tags)
-    is_prefix = lambda t: t.contains("girl") | t.contains("boy")  # noqa: E731
-    trigger = lambda t: F.reduce(  # noqa: E731
-        F.array(*[F.lit(w) for w in TRIGGER_NON_CHAR_WORDS]),
-        F.lit(False),
-        lambda acc, w: acc | t.contains(w),
+    df = df.withColumn("_no_t", F.coalesce(tags, F.array().cast("array<string>")))
+    if isinstance(vocab, Column):
+        df = df.withColumn("_no_v", vocab)
+        in_vocab = "array_contains(_no_v, t)"
+    else:
+        in_vocab = f"t IN ({', '.join(map(sql_str, vocab)) or 'NULL'})"
+    trigger = " OR ".join(f"contains(t, {sql_str(w)})" for w in TRIGGER_NON_CHAR_WORDS)
+    df = df.withColumn(
+        "_no_c",
+        F.expr(
+            "transform(array_distinct(_no_t), t -> named_struct('t', t, 'c', CASE "
+            "WHEN t IS NULL THEN NULL "
+            "WHEN contains(t, 'girl') OR contains(t, 'boy') THEN 0 "
+            f"WHEN {in_vocab} OR {trigger} THEN 2 ELSE 1 END))"
+        ),
     )
-    in_vocab = lambda t: F.array_contains(vocab, t)  # noqa: E731
-
-    prefix_arr = F.filter(tags, is_prefix)
-    rest = F.filter(tags, lambda t: ~is_prefix(t))
-    char_arr = _sort_len_desc(F.filter(rest, lambda t: ~in_vocab(t) & ~trigger(t)))
-    general_arr = _sort_len_desc(F.filter(rest, lambda t: in_vocab(t) | trigger(t)))
-
-    joined = F.concat(
-        F.array_join(prefix_arr, ","),
-        F.lit(","),
-        F.array_join(char_arr, ","),
-        F.lit(","),
-        F.array_join(general_arr, ","),
+    group = lambda c: f"transform(filter(_no_c, x -> x.c = {c}), x -> x.t)"  # noqa: E731
+    df = df.withColumn(
+        out,
+        F.expr(
+            f"trim(BOTH ',' FROM concat_ws(',', array_join({group(0)}, ','), "
+            f"array_join(array_sort({group(1)}, {_BY_LEN_DESC}), ','), "
+            f"array_join(array_sort({group(2)}, {_BY_LEN_DESC}), ',')))"
+        ),
     )
-    return F.regexp_replace(F.regexp_replace(joined, "^,+", ""), ",+$", "")
+    return df.drop("_no_t", "_no_c", "_no_v")
 
 
 def clean_tags_df(df: "DataFrame", tags: Column, out: str = "cleaned_tags") -> "DataFrame":

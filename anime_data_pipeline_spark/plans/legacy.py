@@ -27,7 +27,7 @@ from anime_data_pipeline_spark.operators.bucketing import (
 from anime_data_pipeline_spark.operators.tags import (
     clean_caption_bounded,
     clean_tags_df,
-    novelai_ordered_tags,
+    novelai_order_df,
 )
 
 
@@ -68,7 +68,7 @@ def run_ep2(
 def run_ep3(
     scores: DataFrame,
     sidecar_tags: DataFrame,
-    vocab_names: Column,
+    vocab_names: list[str] | Column,
     threshold: float = 0.8,
     limit_n: int = 300_000,
 ) -> DataFrame:
@@ -79,10 +79,7 @@ def run_ep3(
         "image_id", F.split(F.col("image_stem"), "_").getItem(0)
     )
     joined = tagged.join(scores, "image_id", "inner")
-    ordered = joined.withColumn(
-        "ordered_tags",
-        novelai_ordered_tags(F.coalesce(F.col("tags"), F.array()), vocab_names),
-    )
+    ordered = novelai_order_df(joined, F.col("tags"), vocab_names)
     final = ordered.filter(F.col("score") >= threshold)
     # deterministic limit-N: order by key, then cut
     return final.orderBy("image_stem").limit(limit_n)

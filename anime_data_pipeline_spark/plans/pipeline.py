@@ -26,7 +26,7 @@ from anime_data_pipeline_spark.operators.bucketing import (
     BucketConfig,
     assign_bucket_columns,
 )
-from anime_data_pipeline_spark.operators.tags import novelai_ordered_tags
+from anime_data_pipeline_spark.operators.tags import novelai_order_df
 
 
 @dataclass(frozen=True)
@@ -89,13 +89,10 @@ def aesthetic_stage(
     return kept, audit
 
 
-def ordering_stage(df: DataFrame, vocab_names: Column) -> DataFrame:
+def ordering_stage(df: DataFrame, vocab_names: list[str] | Column) -> DataFrame:
     """M2: NovelAI ordering over the tag array + rating prefix merge
     (run.py:106-108: ordered_tags prepended with rating at the sink)."""
-    return df.withColumn(
-        "ordered_tags",
-        novelai_ordered_tags(F.coalesce(F.col("tags"), F.array()), vocab_names),
-    )
+    return novelai_order_df(df, F.col("tags"), vocab_names)
 
 
 def run_ep1(
@@ -119,7 +116,7 @@ def run_ep1(
     audit = None
     if cfg.use_aesthetic and scores is not None:
         df, audit = aesthetic_stage(df, scores, cfg.aesthetic_threshold)
-    df = ordering_stage(df, F.array(*[F.lit(v) for v in vocab_names]))
+    df = ordering_stage(df, vocab_names)
     meta = df.select(
         "image_key",
         "rating",

@@ -13,7 +13,7 @@ from anime_data_pipeline_spark.operators.tags import (
     CAPTION_REPLACEMENTS,
     clean_caption_bounded,
     clean_tags_df,
-    novelai_ordered_tags,
+    novelai_order_df,
 )
 from anime_data_pipeline_spark.registry import register
 
@@ -82,10 +82,7 @@ def _synth_order_tags(doc_id: F.Column, text: F.Column) -> F.Column:
 def q24_novelai_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tags = _synth_order_tags(F.col("doc_id"), F.col("text"))
-    return docs.select(
-        "doc_id",
-        novelai_ordered_tags(tags, F.lit(_VOCAB)).alias("ordered_tags"),
-    )
+    return novelai_order_df(docs, tags, _VOCAB).select("doc_id", "ordered_tags")
 
 
 # ---------------------------------------------------------------------------

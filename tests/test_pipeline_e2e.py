@@ -139,8 +139,9 @@ def test_ep1_end_to_end(spark, fixture_dir, images_df):
         "w": ref["bucket_w"] - ref["bucket_w"] % 8,
         "h": ref["bucket_h"] - ref["bucket_h"] % 8,
     }
-    if row["tags"]:
-        assert row["ordered_tags"] == novelai_order_py(row["tags"], set(vocab_names))
+    # every kept row's ordering matches the Python spec
+    for key, r in out.items():
+        assert r["ordered_tags"] == novelai_order_py(r["tags"] or [], set(vocab_names)), key
 
     # bucket report aggregates to the full kept count
     rep = bucket_report(meta)

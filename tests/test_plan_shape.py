@@ -391,6 +391,19 @@ def test_assign_cells_strategy_switch(spark, sf_dir):
     assert a == b, "strategies disagree on assignment"
 
 
+def test_ep1_ordering_is_one_hashed_vocab_probe(spark):
+    """ordering_stage classifies each distinct tag once: a names-list
+    vocab of more than 10 names (OptimizeIn's threshold) becomes exactly
+    one hashed InSet probe, with no linear array_contains over it."""
+    from anime_data_pipeline_spark.plans.pipeline import ordering_stage
+
+    df = spark.createDataFrame([(1, ["smile", "1girl"])], "id int, tags array<string>")
+    names = [f"tag {i}" for i in range(12)] + ["o'neil", "back\\slash"]
+    plan = ordering_stage(df, names)._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count(" INSET ") == 1, plan
+    assert "array_contains" not in plan, plan
+
+
 def test_editdist_candidates_before_dp(spark, sf_dir):
     # the levenshtein must sit ABOVE the candidate join (never a
     # cartesian of texts)

@@ -21,8 +21,8 @@ from anime_data_pipeline_spark.operators.bucketing import (
 from anime_data_pipeline_spark.operators.tags import (
     clean_tags_df,
     clean_tags_py,
+    novelai_order_df,
     novelai_order_py,
-    novelai_ordered_tags,
 )
 
 # ---------------------------------------------------------------------------
@@ -108,26 +108,26 @@ def test_clean_tags_random_equivalence(spark):
 
 
 def test_novelai_order_random_equivalence(spark):
-    vocab = ["long hair", "short hair", "blue eyes", "smile", "standing"]
+    # more than 10 names, so the names form runs as a hashed InSet probe
+    vocab = ["long hair", "short hair", "blue eyes", "smile", "standing",
+             "o'neil", "back\\slash", "a,b", "café", " pad ", "sitting", "open mouth"]
     extra = ["hatsune miku", "1girl", "tall boy", "high resolution",
-             "16:9", "x ray", "aspect control", "ratio thing", "holo"]
+             "16:9", "x ray", "aspect control", "ratio thing", "holo",
+             "o'neil char", "pad", ",edge", "edge,", None]
     rng = random.Random(11)
     rowset = []
     for i in range(300):
         n = rng.randint(0, 10)
         rowset.append(
-            (i, [rng.choice(vocab + extra) for _ in range(n)])
+            (i, [rng.choice(vocab + extra) for _ in range(n)] if i % 50 else None)
         )
     df = spark.createDataFrame(rowset, "id int, tags array<string>")
-    out = df.select(
-        "id",
-        novelai_ordered_tags(
-            F.col("tags"), F.array(*[F.lit(v) for v in vocab])
-        ).alias("ordered"),
-    )
-    got = {r["id"]: r["ordered"] for r in out.collect()}
-    for i, tags in rowset:
-        assert got[i] == novelai_order_py(list(tags), set(vocab)), (i, tags)
+    for v in (vocab, F.array(*[F.lit(t) for t in vocab])):
+        out = novelai_order_df(df, F.col("tags"), v, out="ordered")
+        got = {r["id"]: r["ordered"] for r in out.select("id", "ordered").collect()}
+        for i, tags in rowset:
+            kept = [t for t in tags or [] if t is not None]
+            assert got[i] == novelai_order_py(kept, set(vocab)), (type(v).__name__, i, tags)
 
 
 # ---------------------------------------------------------------------------

@@ -9,8 +9,9 @@ from anime_data_pipeline_spark.operators.tags import (
     clean_caption_udf,
     clean_tags_df,
     clean_tags_py,
+    novelai_order_df,
     novelai_order_py,
-    novelai_ordered_tags,
+    sql_str,
 )
 
 VOCAB = {"long hair", "smile", "blue eyes", "open mouth", "hair ornament"}
@@ -24,6 +25,24 @@ ORDER_CASES = [
     [],
     ["onlychar"],
 ]
+
+# Untrusted names: quotes, backslashes, commas, non-ASCII and stray
+# spaces in both the vocab and the tags. Every vocab name also appears
+# as a tag, so a mis-escaped literal shows as a mis-classified tag.
+HOSTILE_VOCAB = {"o'neil", "back\\slash", "trailing\\", "a,b", "café", " pad ", "'",
+                 "\\'", "smile"}
+HOSTILE_CASES = [
+    ["o'neil", "back\\slash", "trailing\\", "a,b", "café", " pad ", "'", "\\'"],
+    ["o'neil girl", "naïve char", "pad", "smile", "cafe", "back\\slash char"],
+    [",leading", "trailing,", "1girl,", ",", "a,b", "kanji 初音ミク"],
+    ["smile", "smile", "o'neil", "o'neil", "café", "café"],  # duplicates
+    ["dup char", "1girl", "dup char", "1girl"],
+    [None, "smile", None, "o'neil"],  # null elements drop
+    [None],
+    [],
+    None,  # null array orders as empty
+]
+
 
 CLEAN_CASES = [
     ["1girl", "long_hair", "blue_eyes", "^_^"],
@@ -52,16 +71,40 @@ CAPTION_CASES = [
 ]
 
 
+def _order_both_vocab_forms(spark, cases, vocab):
+    """Order ``cases`` once with a names list and once with a Column
+    vocab; both must equal the spec (nulls dropped, null array = [])."""
+    df = spark.createDataFrame(list(enumerate(cases)), "id int, tags array<string>")
+    names = sorted(vocab)
+    for v in (names, F.array(*[F.lit(n) for n in names]).cast("array<string>")):
+        got = {
+            r["id"]: r["ordered"]
+            for r in novelai_order_df(df, F.col("tags"), v, out="ordered")
+            .select("id", "ordered").collect()
+        }
+        for i, tags in enumerate(cases):
+            want = novelai_order_py([t for t in tags or [] if t is not None], set(vocab))
+            assert got[i] == want, (type(v).__name__, tags)
+
+
 def test_novelai_order_matches_spec(spark):
-    rows = [(i, tags) for i, tags in enumerate(ORDER_CASES)]
-    df = spark.createDataFrame(rows, "id int, tags array<string>")
-    vocab = F.lit(sorted(VOCAB))
-    got = {
-        r["id"]: r["ordered"]
-        for r in df.select("id", novelai_ordered_tags(F.col("tags"), vocab).alias("ordered")).collect()
-    }
-    for i, tags in enumerate(ORDER_CASES):
-        assert got[i] == novelai_order_py(tags, VOCAB), tags
+    _order_both_vocab_forms(spark, ORDER_CASES, VOCAB)
+
+
+def test_novelai_order_hostile_names_match_spec(spark):
+    _order_both_vocab_forms(spark, HOSTILE_CASES, HOSTILE_VOCAB)
+
+
+def test_novelai_order_empty_vocab_matches_spec(spark):
+    _order_both_vocab_forms(spark, ORDER_CASES + HOSTILE_CASES, set())
+
+
+def test_sql_str_round_trips_through_the_parser(spark):
+    names = sorted(HOSTILE_VOCAB) + ["", "\\\\", "''", "\\n", "tab\there", "line\nbreak"]
+    row = spark.range(1).select(
+        *[F.expr(sql_str(n)).alias(f"c{i}") for i, n in enumerate(names)]
+    ).first()
+    assert list(row) == names
 
 
 def test_clean_tags_matches_spec(spark):
