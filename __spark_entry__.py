@@ -67,6 +67,10 @@ def entry(spark: SparkSession) -> DataFrame:
 # (3) NovelAI tag ordering became one DataFrame-level function with a
 #     parsed, hashed vocab probe (operators/tags.novelai_order_df) —
 #     q24.
+# (4) SemDeDup became one grouped pass per cell sharing the CC small
+#     path's min-label kernel, and assign_cells scores with try_divide
+#     — q36, q44, q60, q85, q86, q91, q93, q125, q133, q142, all
+#     already drifted above.
 _CHANGED_THIS_ROUND: list[str] = [
     "q100_bloom_contamination",
     "q101_span_dedup",

@@ -416,18 +416,49 @@ def _small_star(edges: DataFrame) -> DataFrame:
 CC_SMALL_EDGE_THRESHOLD = 500_000
 
 
+def min_label_components(u, v):
+    """``(ids, roots)`` for the undirected edge list ``(u[i], v[i])``
+    (int64 arrays): the sorted distinct node ids and, per id, the min
+    node id of its component. Vectorized min-propagation with pointer
+    jumping: per sweep, every node takes the min label over its
+    neighborhood (sort-once + ``np.minimum.reduceat``), then labels
+    compress to their fixpoint (labels are node indices, so ``m[m]``
+    jumps); sweeps stop at a full fixpoint, bounded by the graph
+    diameter. Shared by the CC small path and the SemDeDup cell
+    kernel."""
+    import numpy as np
+
+    ids, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
+    ui, vi = inv[: len(u)], inv[len(u) :]
+    nd = np.concatenate([ui, vi])
+    nb = np.concatenate([vi, ui])
+    order = np.argsort(nd, kind="stable")
+    nd_s, nb_s = nd[order], nb[order]
+    present, starts = np.unique(nd_s, return_index=True)
+    lab = np.arange(len(ids), dtype=np.int64)
+    while True:
+        prev = lab
+        m = lab.copy()
+        seg_min = np.minimum.reduceat(lab[nb_s], starts)
+        m[present] = np.minimum(m[present], seg_min)
+        while True:  # pointer-jump to fixpoint (O(n) gathers)
+            m2 = m[m]
+            if np.array_equal(m2, m):
+                break
+            m = m2
+        lab = m
+        if np.array_equal(lab, prev):
+            break
+    return ids, ids[lab]
+
+
 def _cc_small_star_table(e: DataFrame) -> DataFrame:
     """(node, _root) for every node occurring in ``e``: exact min-label
     connected components of a MEASURED-small edge set, computed in one
     task (coalesce(1) is a narrow read of the checkpointed partitions —
-    no shuffle). Vectorized min-propagation with pointer jumping: per
-    sweep, every node takes the min label over its neighborhood
-    (sort-once + ``np.minimum.reduceat``), then labels compress to
-    their fixpoint (labels are node indices, so ``m[m]`` jumps); sweeps
-    stop at a full fixpoint, bounded by the remaining graph diameter.
-    Labels are the min node id per component — identical to star
-    contraction's output (pinned by tests on both sides of the
-    threshold)."""
+    no shuffle) by :func:`min_label_components`. Labels are the min
+    node id per component — identical to star contraction's output
+    (pinned by tests on both sides of the threshold)."""
 
     def kernel(batches):
         import numpy as np
@@ -440,30 +471,8 @@ def _cc_small_star_table(e: DataFrame) -> DataFrame:
                 vs.append(b["dst"].to_numpy(dtype="int64"))
         if not us:
             return
-        u = np.concatenate(us)
-        v = np.concatenate(vs)
-        ids, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
-        ui, vi = inv[: len(u)], inv[len(u) :]
-        nd = np.concatenate([ui, vi])
-        nb = np.concatenate([vi, ui])
-        order = np.argsort(nd, kind="stable")
-        nd_s, nb_s = nd[order], nb[order]
-        present, starts = np.unique(nd_s, return_index=True)
-        lab = np.arange(len(ids), dtype=np.int64)
-        while True:
-            prev = lab
-            m = lab.copy()
-            seg_min = np.minimum.reduceat(lab[nb_s], starts)
-            m[present] = np.minimum(m[present], seg_min)
-            while True:  # pointer-jump to fixpoint (O(n) gathers)
-                m2 = m[m]
-                if np.array_equal(m2, m):
-                    break
-                m = m2
-            lab = m
-            if np.array_equal(lab, prev):
-                break
-        yield pd.DataFrame({"node": ids, "_root": ids[lab]})
+        ids, roots = min_label_components(np.concatenate(us), np.concatenate(vs))
+        yield pd.DataFrame({"node": ids, "_root": roots})
 
     return e.coalesce(1).mapInPandas(kernel, "node long, _root long")
 

@@ -378,61 +378,17 @@ def centroid_norm(cv: list[float]) -> float:
     return math.sqrt(_seq_sq_norm_py(cv))
 
 
-def ivf_assign(
-    v: Column,
-    centroids: list[tuple[int, list[float]]],
-    vn: Column | None = None,
-) -> Column:
-    """Nearest-centroid id (max cosine, min-id tiebreak) via array_max
-    over per-centroid (score, -id) structs — the IVF-flat coarse
-    quantizer as a pure expression. ``v`` must be a materialized
-    double-array column.
-
-    Deliberately NOT a chained when(score > best, ...) scan: that form
-    re-embeds the running best into every successor, tripling the
-    expression tree per centroid — it analyzed fine with 5 centroids
-    and blew up Catalyst with 50. The struct-array form is linear in
-    the centroid count; struct comparison is (score, then -id), i.e.
-    highest score with the smallest id on ties.
-
-    ``vn`` is an optional pre-materialized ``sqrt(sq_norm(v))`` column
-    so the vector norm folds once per row, not once per centroid;
-    centroid norms are Python-precomputed constants (same IEEE fold —
-    see :func:`centroid_norm`). Values are bit-identical either way.
-
-    This literal-expression form is the SMALL-k strategy (expression
-    tree is O(k·dim) literals; fine to ~:data:`LITERAL_CENTROID_MAX`).
-    For large k use :func:`assign_cells`, which switches to a broadcast
-    centroid-DataFrame join so the plan stays O(1) in k.
-
-    :func:`assign_cells` builds the PARSED twin
-    (:func:`ivf_assign_expr` — identical nodes, ~1 py4j round-trip);
-    this Column spelling is kept as the readable mirror, pinned equal
-    by ``tests/test_ann_recall.py``.
-    """
-    if vn is None:
-        vn = F.sqrt(sq_norm(v))
-    entries = []
-    for cid, cv in centroids:
-        lit_c = F.array(*[F.lit(float(x)) for x in cv])
-        score = dot(v, lit_c) / (vn * F.lit(centroid_norm(cv)))
-        entries.append(
-            F.struct(score.alias("s"), F.lit(-int(cid)).cast("long").alias("negid"))
-        )
-    best = F.array_max(F.array(*entries))
-    return (-best["negid"]).cast("long")
-
-
 def ivf_assign_expr(v_name: str, centroids: list[tuple[int, list[float]]], vn_name: str) -> Column:
-    """:func:`ivf_assign` rendered as ONE ``F.expr`` string — identical
-    Catalyst nodes after parsing (same zip_with/aggregate left-fold,
-    same shortest-roundtrip double literals via :func:`_fmt_double`,
-    same (s, -cid) struct-max tiebreak) at ~1 py4j round-trip instead
-    of ~k·(dim+6): the Column-API spelling cost ~2-9 s of driver
-    plan-build per call at k=16 × dim=64 (every ``F.lit`` element and
-    HOF lambda is a round-trip) — the same latency class, and the same
-    fix, as ``_srp_bucket_expr``. Takes column NAMES (the expr is
-    parsed, not composed)."""
+    """Nearest-centroid id as ONE parsed ``F.expr``: ``array_max`` over
+    per-centroid ``(score, -cid)`` structs, i.e. max cosine, min id on
+    ties (linear in k, unlike a chained ``when`` scan). ``vn_name`` is
+    the row's ``sqrt(sq_norm(v))``; centroid norms are Python constants
+    from the same fold (:func:`centroid_norm`). The score is
+    ``try_divide`` because ANSI double division by zero raises: a
+    zero-norm vector or centroid scores null, and a vector that scores
+    null everywhere lands in the min-id cell. One parsed string is ~1
+    py4j round-trip where the Column-API spelling cost ~2-9 s of plan
+    build at k=16 × dim=64 (same fix as ``_srp_bucket_expr``)."""
     entries = []
     for cid, cv in centroids:
         arr = ", ".join(_fmt_double(float(x)) for x in cv)
@@ -440,7 +396,7 @@ def ivf_assign_expr(v_name: str, centroids: list[tuple[int, list[float]]], vn_na
             f"aggregate(zip_with(`{v_name}`, array({arr}), (x, y) -> x * y), "
             f"0.0D, (acc, t) -> acc + t)"
         )
-        score = f"({d}) / (`{vn_name}` * {_fmt_double(centroid_norm(cv))})"
+        score = f"try_divide({d}, `{vn_name}` * {_fmt_double(centroid_norm(cv))})"
         entries.append(
             f"named_struct('s', {score}, 'negid', CAST({-int(cid)} AS BIGINT))"
         )
@@ -529,7 +485,7 @@ def assign_cells(
 ) -> DataFrame:
     """``df`` + nearest-centroid ``out_col``, strategy-dispatched on k:
 
-    - **k ≤ literal_max** — map-only :func:`ivf_assign` literal
+    - **k ≤ literal_max** — map-only :func:`ivf_assign_expr` literal
       expression (zero shuffle; the right call for the coarse-quantizer
       sizes a bench/test corpus uses);
     - **k > literal_max** — broadcast the centroid DataFrame, score
@@ -557,7 +513,8 @@ def assign_cells(
         .withColumn("_vn", F.sqrt(sq_norm(F.col(vec_col))))
         .join(F.broadcast(cent))
         .withColumn(
-            "_s", dot(F.col(vec_col), F.col("_ccv")) / (F.col("_vn") * F.col("_cn"))
+            "_s",
+            F.try_divide(dot(F.col(vec_col), F.col("_ccv")), F.col("_vn") * F.col("_cn")),
         )
         .groupBy(id_col)
         .agg(
@@ -759,7 +716,7 @@ def kmeans_refine(
         )
         refined = sorted((r["cell"], list(r["cv"])) for r in means)
         if not refined:  # empty corpus: keep the seeds rather than
-            return centroids  # hand ivf_assign an empty centroid list
+            return centroids  # hand assign_cells an empty centroid list
         centroids = refined
     return centroids
 
@@ -776,59 +733,74 @@ def semantic_dedup(
     cosine-≥-threshold pairs WITHIN each cell only, connect them into
     components, keep one representative (the min id) per component.
 
-    Scale shape: the quadratic pair step is confined to single cells —
-    (N/cells)² per cell instead of N² global, the paper's core trick —
-    and the cell equi-join shuffles only (cell, id, vector) rows.
-    Components come from the O(log n) star-contraction CC, whose
-    labels are canonical min-ids, so the representative needs no extra
-    aggregation: keep ⇔ id == component.
+    Scale shape: pairs never cross cells, so neither do components —
+    the whole step is one ``groupBy(cell).applyInPandas`` pass, and the
+    quadratic pair work is (N/cells)² per cell, never N² global (the
+    paper's core trick). Inside a cell, rows of one vector length are
+    scored 512 × 512 at a time, so memory stays linear in the cell size
+    even under skew. Norms and dot products are the same left fold as
+    :func:`sq_norm` / :func:`dot`, so every cosine is bit-identical to
+    the Spark and DuckDB spellings. A NaN cosine (zero-norm or NaN
+    vector) never pairs; a null vector, or vectors of different
+    lengths, never pair. Components come from
+    :func:`~anime_data_pipeline_spark.operators.dedup.min_label_components`,
+    whose labels are min ids, so keep ⇔ id == component. Lazy like
+    every other operator: no job, no cache, no checkpoint.
 
     Returns (vec_id, cell, component, keep)."""
-    from pyspark import StorageLevel
+    from anime_data_pipeline_spark.operators.dedup import min_label_components
 
-    from anime_data_pipeline_spark.operators.dedup import connected_components
-
-    c = (
-        assign_cells(
-            corpus.select(
-                F.col(id_col).alias("vec_id"), to_double_array(F.col(vec_col)).alias("v")
-            ),
-            "vec_id",
-            "v",
-            centroids,
-        )
-        .withColumn("n", F.sqrt(sq_norm(F.col("v"))))
-        # The assignment subtree feeds FOUR consumers (both self-join
-        # sides, the CC node list, the final labelling join) and its
-        # lineage holds the scan + float→double conversion + k-way
-        # centroid scoring — persist the (cell, id, v, n) rows once
-        # instead of recomputing that forest per consumer. Cache
-        # lifecycle follows plans/curation.curate_corpus: the persist
-        # rides behind the returned lazy plan, CALLERS release it
-        # (clearCache / unpersist) after materialization. At 100 TB
-        # this is the stage boundary you'd parquet-checkpoint.
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    a, b = c.alias("a"), c.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.cell") == F.col("b.cell"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .withColumn(
-            "cosine",
-            dot(F.col("a.v"), F.col("b.v")) / (F.col("a.n") * F.col("b.n")),
-        )
-        .filter(F.col("cosine") >= threshold)
-        .select(F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b"))
-    )
-    comp = connected_components(c.select(F.col("vec_id").alias("node")), pairs)
-    return c.join(comp, c.vec_id == comp.node).select(
+    c = assign_cells(
+        corpus.select(
+            F.col(id_col).alias("vec_id"), to_double_array(F.col(vec_col)).alias("v")
+        ),
         "vec_id",
-        "cell",
-        "component",
-        (F.col("vec_id") == F.col("component")).alias("keep"),
+        "v",
+        centroids,
+    )
+
+    def dedup_cell(pdf):
+        import numpy as np
+        import pandas as pd
+
+        pdf = pdf.sort_values("vec_id", kind="stable")
+        ids = pdf["vec_id"].to_numpy(dtype="int64")
+        vecs = pdf["v"].to_numpy()
+        dims = np.array([-1 if x is None else len(x) for x in vecs])
+        us, vs = [np.empty(0, "int64")], [np.empty(0, "int64")]
+        tile = 512
+        for d in np.unique(dims[dims >= 0]):
+            rows = np.nonzero(dims == d)[0]
+            x = np.stack(vecs[rows])
+            sq = np.zeros(len(rows))
+            for j in range(d):
+                sq = sq + x[:, j] * x[:, j]
+            n = np.sqrt(sq)
+            for s in range(0, len(rows), tile):
+                for t in range(s, len(rows), tile):
+                    a, b = x[s : s + tile], x[t : t + tile]
+                    acc = np.zeros((len(a), len(b)))
+                    for j in range(d):
+                        acc = acc + np.multiply.outer(a[:, j], b[:, j])
+                    with np.errstate(divide="ignore", invalid="ignore"):
+                        cos = acc / np.multiply.outer(n[s : s + tile], n[t : t + tile])
+                    i, k = np.nonzero(cos >= threshold)  # NaN compares false
+                    upper = i + s < k + t
+                    us.append(rows[i[upper] + s])
+                    vs.append(rows[k[upper] + t])
+        u, v = np.concatenate(us), np.concatenate(vs)
+        comp = ids.copy()
+        if len(u):
+            nodes, roots = min_label_components(u, v)
+            comp[nodes] = ids[roots]  # rows are id-sorted: min row = min id
+        return pd.DataFrame({
+            "vec_id": ids, "cell": pdf["cell"].to_numpy(),
+            "component": comp, "keep": ids == comp,
+        })
+
+    id_type = c.schema["vec_id"].dataType.simpleString()
+    return c.groupBy("cell").applyInPandas(
+        dedup_cell, f"vec_id {id_type}, cell long, component long, keep boolean"
     )
 
 

@@ -121,13 +121,16 @@ def test_assign_cells_join_path_matches_literal_path(spark, sf_dir):
     assert lit == join and len(lit) == corpus.count()
 
 
-def test_ivf_assign_expr_matches_column_mirror(spark, sf_dir):
-    """r13: assign_cells' literal path parses ONE SQL string
-    (ivf_assign_expr); the Column-API spelling stays as the readable
-    mirror. Both must produce the identical (vec_id → cell) map —
-    same fold order, same double literals, same (s, -cid) tiebreak."""
+def test_ivf_assign_expr_matches_python_fold(spark, sf_dir):
+    """assign_cells' literal path parses ONE SQL string
+    (ivf_assign_expr). An independent pure-Python replay — the same
+    sequential double folds for the dot product and the norms, max
+    score, then min cid — must give the identical (vec_id → cell)
+    map."""
+    import math
+
     from anime_data_pipeline_spark.operators.similarity import (
-        ivf_assign,
+        centroid_norm,
         ivf_assign_expr,
         seed_centroids,
         sq_norm,
@@ -138,20 +141,26 @@ def test_ivf_assign_expr_matches_column_mirror(spark, sf_dir):
         "vec_id", to_double_array(F.col("embedding")).alias("v")
     )
     cents = seed_centroids(corpus, "vec_id", "v", 16)
-    base = corpus.withColumn("_vn", F.sqrt(sq_norm(F.col("v"))))
-    mirror = {
-        r["vec_id"]: r["cell"]
-        for r in base.withColumn(
-            "cell", ivf_assign(F.col("v"), cents, vn=F.col("_vn"))
-        ).collect()
-    }
-    parsed = {
-        r["vec_id"]: r["cell"]
-        for r in base.withColumn(
-            "cell", ivf_assign_expr("v", cents, "_vn")
-        ).collect()
-    }
-    assert mirror == parsed and len(parsed) == corpus.count()
+    rows = (
+        corpus.withColumn("_vn", F.sqrt(sq_norm(F.col("v"))))
+        .withColumn("cell", ivf_assign_expr("v", cents, "_vn"))
+        .collect()
+    )
+
+    def fold_dot(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc = acc + x * y
+        return acc
+
+    def nearest(v):
+        vn = math.sqrt(fold_dot(v, v))
+        scores = [(fold_dot(v, cv) / (vn * centroid_norm(cv)), -cid) for cid, cv in cents]
+        return -max(scores)[1]
+
+    got = {r["vec_id"]: r["cell"] for r in rows}
+    want = {r["vec_id"]: nearest(list(r["v"])) for r in rows}
+    assert got == want and len(got) == corpus.count()
 
 
 def test_probe_cells_join_path_matches_literal_path(spark, sf_dir):
@@ -223,7 +232,11 @@ def test_srp_bucket_literal_planes_match_elementwise_form(spark, sf_dir):
 def test_semantic_dedup_drops_scaled_copies_keeps_originals(spark):
     """A scaled copy (cosine 1.0) must land in the same cell as its
     original, join its component, and lose the keep flag; unrelated
-    vectors keep themselves."""
+    vectors keep themselves. Hostile rows keep themselves too: Spark
+    orders NaN above every double, so a NaN cosine must never decide a
+    pair; a null vector, a null element or a length that differs from
+    its cell-mates scores null everywhere (min-id cell) and never pairs
+    across lengths, while two copies of one such length still pair."""
     from anime_data_pipeline_spark.operators.similarity import semantic_dedup
 
     rows = [
@@ -231,15 +244,120 @@ def test_semantic_dedup_drops_scaled_copies_keeps_originals(spark):
         (2, [2.0, 0.0, 0.0]),   # scaled copy of 1
         (3, [0.0, 1.0, 0.0]),
         (4, [0.0, 0.0, 1.0]),
+        (5, [float("nan"), 0.0, 0.0]),
+        (6, None),
+        (7, [1.0, 0.0, None]),
+        (8, [1.0, 0.0, 0.0, 0.0]),
+        (9, [0.0, 0.0, 0.0, 3.0]),
+        (10, [0.0, 0.0, 0.0, 6.0]),  # scaled copy of 9
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     cents = [(10, [1.0, 0.1, 0.0]), (20, [0.0, 1.0, 0.1]), (30, [0.1, 0.0, 1.0])]
-    out = {r["vec_id"]: r for r in semantic_dedup(
-        df, "vec_id", "embedding", cents, threshold=0.99).collect()}
-    assert out[1]["component"] == 1 and out[1]["keep"]
-    assert out[2]["component"] == 1 and not out[2]["keep"]
-    assert out[1]["cell"] == out[2]["cell"] == 10
-    assert out[3]["keep"] and out[4]["keep"]
+    out = semantic_dedup(df, "vec_id", "embedding", cents, threshold=0.99).collect()
+    assert {r["vec_id"]: (r["cell"], r["component"], r["keep"]) for r in out} == {
+        1: (10, 1, True),
+        2: (10, 1, False),
+        3: (20, 3, True),
+        4: (30, 4, True),
+        5: (10, 5, True),
+        6: (10, 6, True),
+        7: (10, 7, True),
+        8: (10, 8, True),
+        9: (10, 9, True),
+        10: (10, 9, False),
+    }
+
+
+def test_semantic_dedup_survives_zero_vectors_through_kmeans(spark):
+    """ANSI double division by zero raises, so a zero-norm embedding, or
+    a zero-vector seed centroid, used to fail the cell assignment. The
+    whole chain seed_centroids → kmeans_refine → semantic_dedup must
+    run: a zero vector scores null everywhere, lands in the min-id
+    cell, never pairs and keeps itself; real copies still dedup."""
+    import random
+
+    from anime_data_pipeline_spark.functions.hashing import P
+    from anime_data_pipeline_spark.operators.similarity import (
+        kmeans_refine,
+        seed_centroids,
+        seed_constants,
+        semantic_dedup,
+    )
+
+    rng = random.Random(7)
+    vecs = {i: [rng.gauss(0.0, 1.0) for _ in range(8)] for i in range(1, 41)}
+    a, b = seed_constants()
+    first_seed = min(vecs, key=lambda i: ((a * (i % P) + b) % P, i))
+    src = min(i for i in vecs if i != first_seed)
+    vecs[first_seed] = [0.0] * 8  # becomes a zero-vector seed centroid
+    vecs[41] = [0.0] * 8
+    vecs[42] = [2.0 * x for x in vecs[src]]
+    df = spark.createDataFrame(
+        sorted(vecs.items()), "vec_id long, embedding array<double>"
+    )
+    seeds = seed_centroids(df, "vec_id", "embedding", 4)
+    assert [0.0] * 8 in [cv for _, cv in seeds]
+    cents = kmeans_refine(df, "vec_id", "embedding", seeds, iters=2)
+    out = {
+        r["vec_id"]: r
+        for r in semantic_dedup(df, "vec_id", "embedding", cents).collect()
+    }
+    assert sorted(out) == sorted(vecs)
+    min_cell = min(cid for cid, _ in cents)
+    for z in (first_seed, 41):
+        assert (out[z]["cell"], out[z]["component"], out[z]["keep"]) == (min_cell, z, True)
+    assert out[42]["cell"] == out[src]["cell"]
+    assert (out[42]["component"], out[42]["keep"]) == (src, False)
+    assert out[src]["keep"]
+
+
+def test_semantic_dedup_tile_edges_match_union_find(spark):
+    """One cell of 1,100 vectors spans three 512-row score tiles. Copies
+    straddle both tile edges (rows 511/512 and 1023/1024) and
+    non-adjacent tiles, and a three-link chain runs through all three
+    tiles (each link ≥ threshold, its ends below it). Components must
+    equal a NumPy union-find over every in-cell pair."""
+    import numpy as np
+
+    from anime_data_pipeline_spark.operators.similarity import semantic_dedup
+
+    n, dim, thr = 1100, 16, 0.99
+    rng = np.random.default_rng(11)
+    x = rng.standard_normal((n, dim))
+    for src, dst in [(511, 512), (1023, 1024), (3, 1050), (700, 20)]:
+        x[dst] = 2.0 * x[src]
+    u, w = np.eye(dim)[0], np.eye(dim)[1]
+    for row, deg in [(100, 0.0), (600, 6.0), (1090, 12.0)]:
+        t = np.radians(deg)
+        x[row] = np.cos(t) * u + np.sin(t) * w
+
+    unit = x / np.linalg.norm(x, axis=1)[:, None]
+    gram = unit @ unit.T
+    # no pair decided by rounding
+    assert np.all(np.abs(gram[np.triu_indices(n, 1)] - thr) > 1e-9)
+    parent = list(range(n))
+
+    def find(i):
+        while parent[i] != i:
+            parent[i] = parent[parent[i]]
+            i = parent[i]
+        return i
+
+    ii, jj = np.nonzero(np.triu(gram >= thr, k=1))
+    for i, j in zip(ii.tolist(), jj.tolist()):
+        ri, rj = find(i), find(j)
+        if ri != rj:
+            parent[max(ri, rj)] = min(ri, rj)
+    want = {i: find(i) for i in range(n)}
+    assert want[512] == 511 and want[1024] == 1023 and want[1050] == 3
+    assert want[700] == 20 and want[600] == 100 and want[1090] == 100
+
+    df = spark.createDataFrame(
+        [(i, x[i].tolist()) for i in range(n)], "vec_id long, embedding array<double>"
+    )
+    out = semantic_dedup(df, "vec_id", "embedding", [(0, [1.0] * dim)], threshold=thr)
+    got = {r["vec_id"]: r["component"] for r in out.collect()}
+    assert got == want
 
 
 def test_knn_graph_mutual_flag_and_recall(spark, sf_dir):

@@ -669,7 +669,8 @@ def test_persisted_stage_boundaries_release_with_the_session_cache(spark, sf_dir
     bench.py and driver_check now clearCache per query / after the
     pass; this pins the whole lifecycle: materializing the plan pins
     blocks, clearCache frees ALL of them (the persist rides Spark's
-    CacheManager, so no targeted handle is needed)."""
+    CacheManager, so no targeted handle is needed). q86 persists
+    nothing, so repeated runs must pin nothing."""
     from anime_data_pipeline_spark.registry import all_queries
 
     def n_pinned() -> int:
@@ -695,18 +696,47 @@ def test_persisted_stage_boundaries_release_with_the_session_cache(spark, sf_dir
     assert n_pinned() > 0  # the probe sees the leak the fix targets
     spark.catalog.clearCache()
     assert n_pinned() == 0
-    # r12 ADVICE #5: q86's cell-assignment persist follows the same
-    # caller-released convention — cover its lifecycle too. Its CC
-    # checkpoint (outside the CacheManager by design, released only
-    # for superseded generations) may remain; assert the CACHE is
-    # empty rather than the raw pinned count.
+    # q86 (SemDeDup) persists nothing and pins nothing: three runs in
+    # one long-lived session with no clearCache in between must leave
+    # the CacheManager empty and no pinned RDD behind.
     cache = spark._jsparkSession.sharedState().cacheManager()
-    all_queries()["q86_semantic_dedup"](spark, sf_dir).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    assert not cache.isEmpty()  # the persist is live behind the plan
-    spark.catalog.clearCache()
-    assert cache.isEmpty()
+    for _ in range(3):
+        all_queries()["q86_semantic_dedup"](spark, sf_dir).write.format(
+            "noop"
+        ).mode("overwrite").save()
+        assert cache.isEmpty()
+        assert n_pinned() == 0
+
+
+def test_semantic_dedup_call_starts_no_spark_job(spark, sf_dir):
+    """semantic_dedup is lazy like every other operator: the call only
+    builds a plan, so no job runs under the call's job group until a
+    sink materializes the result."""
+    from anime_data_pipeline_spark.catalog import load_table
+    from anime_data_pipeline_spark.operators.similarity import (
+        seed_centroids,
+        semantic_dedup,
+    )
+
+    corpus = load_table(spark, sf_dir, "embeddings")
+    cents = seed_centroids(corpus, "vec_id", "embedding", 16)
+    sc = spark.sparkContext
+    group = "semantic_dedup_call"
+
+    def in_group(fn):
+        sc.setJobGroup(group, "semantic_dedup call")
+        try:
+            return fn()
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description",
+                        "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+
+    out = in_group(lambda: semantic_dedup(corpus, "vec_id", "embedding", cents))
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    # the probe sees jobs once the plan actually runs
+    assert in_group(out.count) == corpus.count()
+    assert list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_cc_releases_superseded_checkpoint_generations(spark):
