@@ -71,11 +71,17 @@ def entry(spark: SparkSession) -> DataFrame:
 #     path's min-label kernel, and assign_cells scores with try_divide
 #     — q36, q44, q60, q85, q86, q91, q93, q125, q133, q142, all
 #     already drifted above.
+# (5) nearest-centroid assignment became one NumPy kernel for every k
+#     (operators/similarity), and the DuckDB token split in
+#     operators/textstats now comes from functions.text.tokens_sql
+#     (byte-identical SQL) — every query whose closure imports either
+#     module drifts: 20 more.
 _CHANGED_THIS_ROUND: list[str] = [
     "q100_bloom_contamination",
     "q101_span_dedup",
     "q102_incremental_dedup",
     "q104_curation_v2",
+    "q105_quality_drift",
     "q106_image_neardup",
     "q108_stream_incremental_dedup",
     "q110_bm25_rerank",
@@ -86,12 +92,20 @@ _CHANGED_THIS_ROUND: list[str] = [
     "q125_signature_sidetable",
     "q126_curation_report",
     "q127_cdc_chunks",
+    "q128_length_buckets",
+    "q130_pq_adc_topk",
+    "q131_hard_negatives",
     "q133_cluster_balanced_sample",
     "q135_doc_stitching",
+    "q139_ann_recall_audit",
     "q142_ivf_drift_audit",
     "q156_source_js_divergence",
+    "q158_readability",
     "q161_containment_dedup",
+    "q165_calibration_bins",
+    "q191_index_retrieval_metrics",
     "q193_fasttext_quality_filter",
+    "q194_repetition_signals",
     "q24_novelai_order",
     "q29_seeded_shuffle",
     "q30_map_zip_filter",
@@ -101,24 +115,35 @@ _CHANGED_THIS_ROUND: list[str] = [
     "q34_ngram_jaccard_neardup",
     "q35_curation_pipeline",
     "q36_neardup_clusters",
+    "q42_ann_srp_lsh_topk",
     "q44_ann_ivf_topk",
+    "q48_ann_multiprobe_topk",
     "q50_ngram_repetition",
+    "q51_token_counts",
+    "q52_quality_score",
+    "q53_language_id",
     "q54_winnow_fingerprints",
+    "q55_quality_rollup",
+    "q58_pack_chunks",
     "q60_cluster_resolve",
+    "q67_pack_greedy",
     "q72_multimodal_features",
     "q73_tag_inference",
     "q76_salted_join_hot_key",
     "q78_contamination_check",
     "q80_video_frame_sample",
     "q81_line_dedup",
+    "q82_gopher_rules",
     "q85_ann_ivf_kmeans",
     "q86_semantic_dedup",
     "q88_pretraining_corpus",
     "q90_stream_quality_dedup",
     "q91_leakage_safe_split",
+    "q92_pack_barriered",
     "q93_ann_ivf_multiprobe",
     "q95_dsir_logweights",
     "q96_editdist_verify",
+    "q99_adaptive_quality_filter",
 ]
 
 # (b) never rowed: none — registry growth is frozen at 195 (r8 rule).
@@ -134,23 +159,17 @@ _PRIORITY = [
     *_REWORKED_LAST_ROUND,
     # (d) stalest first. Round 13's window sampled the whole former
     # round-6/7 queue, so the stalest rows left are round 7's tail,
-    # then the round-8 cohort. With 47 changed entries the 50-row
-    # window takes the first 3; the rest stays queued for the next
+    # then the round-8 cohort. With 67 changed entries the 50-row
+    # window takes none of them; they stay queued for the next
     # rotation.
     "q89_temperature_mix",
-    "q92_pack_barriered",
     "q94_rag_chunking",
-    "q105_quality_drift",
     "q103_perplexity_band",
-    "q99_adaptive_quality_filter",
     "q41_ann_bruteforce_topk",
-    "q42_ann_srp_lsh_topk",
-    "q48_ann_multiprobe_topk",
     "q97_knn_graph",
     "q98_embedding_quantize",
     "q43_embedding_neardup",
     "q183_retrieval_metrics",
-    "q191_index_retrieval_metrics",
     "q65_stream_stream_join",
     "q64_stream_dedup",
     "q141_stream_blocklist",

@@ -3,7 +3,10 @@
 Spark's ``hash()`` (Murmur3) and DuckDB's ``hash()`` are different
 functions, so oracle-checked dedup/similarity operators use an explicit
 31-base polynomial rolling hash mod p — plain integer arithmetic that
-is bit-identical in any engine (and cheap under whole-stage codegen).
+is bit-identical in any engine. It is not cheap in Spark: the fold is a
+higher-order ``aggregate``, and every higher-order function is
+``CodegenFallback`` — interpreted, one lambda call per character,
+outside whole-stage codegen.
 
 h(s) = fold(chars(s), 0, (acc, c) -> (acc * 31 + codepoint(c)) mod P)
 

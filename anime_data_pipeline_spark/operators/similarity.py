@@ -347,7 +347,7 @@ def srp_lsh_topk(
     if neg_label_col is not None:
         scored = scored.filter(F.col("label") != F.col("_qlabel"))
     scored = scored.withColumn(
-        "cosine", dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
+        "cosine", F.try_divide(dot(F.col("qv"), F.col("cv")), F.col("qn") * F.col("cn"))
     )
     w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
     out_cols = ["query_id", "vec_id"] + (
@@ -378,35 +378,25 @@ def centroid_norm(cv: list[float]) -> float:
     return math.sqrt(_seq_sq_norm_py(cv))
 
 
-def ivf_assign_expr(v_name: str, centroids: list[tuple[int, list[float]]], vn_name: str) -> Column:
-    """Nearest-centroid id as ONE parsed ``F.expr``: ``array_max`` over
-    per-centroid ``(score, -cid)`` structs, i.e. max cosine, min id on
-    ties (linear in k, unlike a chained ``when`` scan). ``vn_name`` is
-    the row's ``sqrt(sq_norm(v))``; centroid norms are Python constants
-    from the same fold (:func:`centroid_norm`). The score is
-    ``try_divide`` because ANSI double division by zero raises: a
-    zero-norm vector or centroid scores null, and a vector that scores
-    null everywhere lands in the min-id cell. One parsed string is ~1
-    py4j round-trip where the Column-API spelling cost ~2-9 s of plan
-    build at k=16 × dim=64 (same fix as ``_srp_bucket_expr``)."""
-    entries = []
-    for cid, cv in centroids:
-        arr = ", ".join(_fmt_double(float(x)) for x in cv)
-        d = (
-            f"aggregate(zip_with(`{v_name}`, array({arr}), (x, y) -> x * y), "
-            f"0.0D, (acc, t) -> acc + t)"
-        )
-        score = f"try_divide({d}, `{vn_name}` * {_fmt_double(centroid_norm(cv))})"
-        entries.append(
-            f"named_struct('s', {score}, 'negid', CAST({-int(cid)} AS BIGINT))"
-        )
-    return F.expr(
-        f"CAST(-(array_max(array({', '.join(entries)})).negid) AS BIGINT)"
-    )
+def _fold_products(a, b, outer: bool = False):
+    """NumPy twin of :func:`dot` / :func:`sq_norm`: the left fold
+    ``((0 + a1*b1) + a2*b2) + ...`` over the columns of the 2-D arrays
+    ``a`` and ``b`` — row by row (``outer=False``), or for every
+    (row of ``a``, row of ``b``) pair. Each output element sees the
+    identical IEEE op sequence as the Spark fold, so it is
+    bit-identical."""
+    import numpy as np
+
+    mul = np.multiply.outer if outer else np.multiply
+    acc = np.zeros((len(a), len(b)) if outer else len(a))
+    with np.errstate(over="ignore", invalid="ignore"):  # inf/NaN as in Spark
+        for j in range(a.shape[1]):
+            acc = acc + mul(a[:, j], b[:, j])
+    return acc
 
 
 # ---------------------------------------------------------------------------
-# Fixed-k centroid seeding + strategy-dispatched cell assignment.
+# Fixed-k centroid seeding + nearest-centroid cell assignment.
 #
 # The r3 design seeded centroids with `vec_id % 101 == 0`, which ties
 # the centroid count (and the driver collect, and the assignment
@@ -414,11 +404,12 @@ def ivf_assign_expr(v_name: str, centroids: list[tuple[int, list[float]]], vn_na
 # centroids on the driver: the one O(n) scale-killer the r3 judge
 # flagged. The replacement: a FIXED k, chosen by a deterministic seeded
 # hash over ids (so it is corpus-size-independent AND oracle-mirrorable
-# in plain SQL), plus a broadcast-join assignment path once k outgrows
-# what a literal expression tree should carry.
+# in plain SQL), and one map-only assignment kernel whose plan does not
+# grow with k.
 # ---------------------------------------------------------------------------
+
+
 SEED_PERM = 997  # perm-family index reserved for centroid seeding
-LITERAL_CENTROID_MAX = 64  # above this, assignment joins instead of inlining
 
 
 def seed_constants(perm: int = SEED_PERM) -> tuple[int, int]:
@@ -439,7 +430,8 @@ def seed_centroids(
     footprint is k·dim doubles REGARDLESS of corpus size (vs the old
     ``id % 101`` rule whose centroid count grew with the data). The
     hash is pure int64 math (< 2^60, no overflow) mirrored verbatim by
-    :func:`seed_centroids_sql`."""
+    :func:`seed_centroids_sql`. Only rows with a complete vector (not
+    null, no null element) are ranked."""
     a, b = seed_constants(perm)
     ranked = corpus.select(
         F.col(id_col).alias("cid"),
@@ -447,7 +439,7 @@ def seed_centroids(
         (
             (F.lit(a) * (F.col(id_col).cast("long") % F.lit(P)) + F.lit(b)) % F.lit(P)
         ).alias("h"),
-    )
+    ).filter(F.forall("cv", lambda x: x.isNotNull()))
     rows = ranked.orderBy(F.asc("h"), F.asc("cid")).limit(int(k)).collect()
     return sorted((int(r["cid"]), [float(x) for x in r["cv"]]) for r in rows)
 
@@ -460,19 +452,86 @@ def seed_centroids_sql(
     a, b = seed_constants(perm)
     return (
         f"SELECT {id_col} AS cid, CAST({vec_col} AS DOUBLE[]) AS cv FROM {table} "
+        f"WHERE len(list_filter({vec_col}, x -> x IS NULL)) = 0 "
         f"ORDER BY ({a} * ({id_col} % {P}) + {b}) % {P}, {id_col} LIMIT {int(k)}"
     )
 
 
-def _centroid_df(spark, centroids: list[tuple[int, list[float]]]) -> DataFrame:
-    """Centroids as a tiny broadcastable DataFrame with Python-
-    precomputed norms (k×dim doubles — kilobytes even at k=65536)."""
-    rows = [
-        (int(cid), [float(x) for x in cv], centroid_norm(cv)) for cid, cv in centroids
+_CELLS = "_cells"  # the kernel's output column: best-first centroid ids
+
+
+def _nearest_cells(
+    df: DataFrame, vec_col: str, centroids: list[tuple[int, list[float]]], nprobe: int
+) -> DataFrame:
+    """``df`` + ``_cells``: the ids of each row's ``nprobe`` nearest
+    centroids, best first, from one map-only ``mapInArrow`` pass. The
+    centroids ride in the closure, so the plan is the same at any k: no
+    shuffle, no join, no literal tree.
+
+    A score is ``dot(v, c) / (vn · cn)`` with the :func:`dot` /
+    :func:`sq_norm` left fold (:func:`_fold_products`) and
+    :func:`centroid_norm` constants, so it is bit-identical to the Spark
+    spelling. It is null when the row is null, holds a null element or
+    differs in length from the centroid, or when ``vn · cn == 0`` (what
+    ``try_divide`` gives). Ranking is Spark's order on ``(score, -cid)``:
+    NaN highest, null lowest, equal scores (±0 too) to the lower cid, so
+    a row with no score anywhere lists the cids in ascending order.
+    Arrow keeps null elements, which pandas would turn into NaN. Rows
+    are scored 512 at a time against every centroid, so memory stays
+    bounded at production k."""
+    import numpy as np
+    from pyspark.sql.types import ArrayType, LongType, StructField, StructType
+
+    cents = sorted((int(cid), [float(x) for x in cv]) for cid, cv in centroids)
+    cids = np.array([cid for cid, _ in cents], dtype=np.int64)
+    by_len: dict[int, list[int]] = {}
+    for i, (_, cv) in enumerate(cents):
+        by_len.setdefault(len(cv), []).append(i)
+    groups = [
+        (
+            d,
+            np.array(ix),
+            np.array([cents[i][1] for i in ix]).reshape(len(ix), d),
+            np.array([centroid_norm(cents[i][1]) for i in ix]),
+        )
+        for d, ix in by_len.items()
     ]
-    return spark.createDataFrame(
-        rows, "_cid long, _ccv array<double>, _cn double"
-    )
+    m = min(nprobe, len(cids))
+
+    def rank(batches):
+        import pyarrow as pa
+
+        tile = 512
+        for batch in batches:
+            v = batch.column(batch.schema.get_field_index(vec_col))
+            best = np.tile(cids[:m], (len(v), 1))
+            off = v.offsets.to_numpy()
+            lens = np.where(v.is_valid().to_numpy(zero_copy_only=False), np.diff(off), -1)
+            x = v.values.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+            hole = v.values.is_null().to_numpy(zero_copy_only=False)
+            for d, ix, cv, cn in groups:
+                rows = np.nonzero(lens == d)[0]
+                at = off[rows][:, None] + np.arange(d)
+                whole = ~hole[at].any(axis=1)
+                rows, at = rows[whole], at[whole]
+                for s in range(0, len(rows), tile):
+                    xs = x[at[s : s + tile]]
+                    with np.errstate(all="ignore"):
+                        den = np.multiply.outer(np.sqrt(_fold_products(xs, xs)), cn)
+                        score = _fold_products(xs, cv, outer=True) / den
+                    cls = np.zeros((len(xs), len(cids)), np.int8)  # 0 = null
+                    val = np.zeros(cls.shape)
+                    cls[:, ix] = np.where(den == 0, 0, np.where(np.isnan(score), 2, 1))
+                    val[:, ix] = np.where(cls[:, ix] == 1, score, 0.0)
+                    order = np.lexsort((-val, -cls), axis=-1)  # stable: cid ties
+                    best[rows[s : s + tile]] = cids[order[:, :m]]
+            cells = pa.ListArray.from_arrays(
+                pa.array(np.arange(len(v) + 1, dtype=np.int32) * m), pa.array(best.ravel())
+            )
+            yield batch.append_column(_CELLS, cells)
+
+    schema = StructType(df.schema.fields + [StructField(_CELLS, ArrayType(LongType()))])
+    return df.mapInArrow(rank, schema)
 
 
 def assign_cells(
@@ -481,142 +540,18 @@ def assign_cells(
     vec_col: str,
     centroids: list[tuple[int, list[float]]],
     out_col: str = "cell",
-    literal_max: int = LITERAL_CENTROID_MAX,
 ) -> DataFrame:
-    """``df`` + nearest-centroid ``out_col``, strategy-dispatched on k:
-
-    - **k ≤ literal_max** — map-only :func:`ivf_assign_expr` literal
-      expression (zero shuffle; the right call for the coarse-quantizer
-      sizes a bench/test corpus uses);
-    - **k > literal_max** — broadcast the centroid DataFrame, score
-      every (row × centroid) pair map-side, take the per-id argmax with
-      a map-side-combinable ``max(struct(score, -cid))`` partial agg,
-      then join the (id, cell) assignment back. Plan size is O(1) in k,
-      driver memory O(k·dim); shuffle volume is |df| narrow rows twice
-      — the price of not inlining 4096 centroids into the plan, and the
-      same shape MLlib's KMeansModel.transform uses.
-
-    Both paths run the identical double math (dot / (vn · cn), Python-
-    precomputed centroid norms), so the chosen strategy never changes a
-    result. ``vec_col`` must already be a double array; ``id_col`` must
-    be unique per row (it keys the join-back).
+    """``df`` + nearest-centroid ``out_col`` (max cosine, min id on
+    ties; ranking and null rules in :func:`_nearest_cells`). Map-only
+    at any k: plan size O(1) in k, driver memory O(k·dim). ``vec_col``
+    must already be a double array. ``id_col`` is unused (the kernel
+    needs no key); it stays so that call sites do not change.
     """
-    if len(centroids) <= literal_max:
-        return df.withColumn(
-            "_vn", F.sqrt(sq_norm(F.col(vec_col)))
-        ).withColumn(
-            out_col, ivf_assign_expr(vec_col, centroids, "_vn")
-        ).drop("_vn")
-    cent = _centroid_df(df.sparkSession, centroids)
-    assign = (
-        df.select(F.col(id_col), F.col(vec_col))
-        .withColumn("_vn", F.sqrt(sq_norm(F.col(vec_col))))
-        .join(F.broadcast(cent))
-        .withColumn(
-            "_s",
-            F.try_divide(dot(F.col(vec_col), F.col("_ccv")), F.col("_vn") * F.col("_cn")),
-        )
-        .groupBy(id_col)
-        .agg(
-            F.max(
-                F.struct(
-                    F.col("_s").alias("s"),
-                    (-F.col("_cid")).cast("long").alias("negid"),
-                )
-            ).alias("_best")
-        )
-        .select(F.col(id_col), (-F.col("_best.negid")).cast("long").alias(out_col))
+    return (
+        _nearest_cells(df, vec_col, centroids, 1)
+        .withColumn(out_col, F.get(F.col(_CELLS), 0))
+        .drop(_CELLS)
     )
-    return df.join(assign, id_col)
-
-
-def assign_cells_two_level(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    centroids: list[tuple[int, list[float]]],
-    out_col: str = "cell",
-    n_groups: int | None = None,
-    probes: int = 2,
-) -> DataFrame:
-    """Two-level nearest-centroid assignment — the production shape
-    past the point where flat assignment's O(n·k) score work stops
-    scaling (the caveat SCALE.md records for cells-∝-n SemDeDup/IVF):
-    centroids are clustered driver-side into G ≈ √k groups (numpy
-    Lloyd, k·dim doubles already in driver memory), each row routes to
-    its ``probes`` nearest group centers (O(n·G) map-side), then
-    exact-assigns against ONLY those groups' member centroids via a
-    broadcast join (O(n·probes·k/G)). Total per-row work is
-    O(G + p·k/G) ≈ O(√k) instead of O(k).
-
-    Approximate by construction — the true nearest centroid can live
-    in a non-probed group; ``probes`` is the recall knob, and
-    ``probes >= G`` degenerates to the exact flat assignment (pinned
-    by test). Ties break min-cid like :func:`assign_cells`."""
-    import numpy as np
-
-    k = len(centroids)
-    if n_groups is None:
-        n_groups = max(1, int(round(k**0.5)))
-    probes = min(probes, n_groups)
-    cids = np.array([c for c, _ in centroids], dtype=np.int64)
-    cvs = np.array([v for _, v in centroids], dtype=np.float64)
-    cns = np.linalg.norm(cvs, axis=1)
-    cns[cns == 0] = 1.0
-    unit = cvs / cns[:, None]
-    # driver-side Lloyd over the (small) centroid set, cosine metric,
-    # deterministic min-cid seeds
-    seeds = unit[np.argsort(cids)[:n_groups]]
-    for _ in range(8):
-        sim = unit @ seeds.T
-        grp = sim.argmax(axis=1)
-        new = np.stack(
-            [
-                unit[grp == g].mean(axis=0) if (grp == g).any() else seeds[g]
-                for g in range(n_groups)
-            ]
-        )
-        norms = np.linalg.norm(new, axis=1)
-        norms[norms == 0] = 1.0
-        new /= norms[:, None]
-        if np.allclose(new, seeds):
-            break
-        seeds = new
-    group_centers = [(g, [float(x) for x in seeds[g]]) for g in range(n_groups)]
-    spark = df.sparkSession
-    members = spark.createDataFrame(
-        [
-            (int(grp[i]), int(cids[i]), [float(x) for x in cvs[i]], float(cns[i]))
-            for i in range(k)
-        ],
-        "gid long, _cid long, _ccv array<double>, _cn double",
-    )
-    routed = probe_cells(
-        df.select(F.col(id_col), F.col(vec_col)),
-        id_col,
-        vec_col,
-        group_centers,
-        nprobe=probes,
-        out_col="gid",
-    )
-    assign = (
-        routed.withColumn("_vn", F.sqrt(sq_norm(F.col(vec_col))))
-        .join(F.broadcast(members), "gid")
-        .withColumn(
-            "_s", dot(F.col(vec_col), F.col("_ccv")) / (F.col("_vn") * F.col("_cn"))
-        )
-        .groupBy(id_col)
-        .agg(
-            F.max(
-                F.struct(
-                    F.col("_s").alias("s"),
-                    (-F.col("_cid")).cast("long").alias("negid"),
-                )
-            ).alias("_best")
-        )
-        .select(F.col(id_col), (-F.col("_best.negid")).cast("long").alias(out_col))
-    )
-    return df.join(assign, id_col)
 
 
 def probe_cells(
@@ -626,42 +561,17 @@ def probe_cells(
     centroids: list[tuple[int, list[float]]],
     nprobe: int,
     out_col: str = "cell",
-    literal_max: int = LITERAL_CENTROID_MAX,
 ) -> DataFrame:
-    """``df`` exploded to one row per probed cell (the ``nprobe``
-    nearest centroids per row, cosine desc / min-id ties). Same
-    strategy dispatch as :func:`assign_cells`; the join path ranks the
-    broadcast-scored pairs with a per-id window instead of building
-    O(k) sort structs into the plan."""
-    if nprobe <= 1:
-        return assign_cells(df, id_col, vec_col, centroids, out_col, literal_max)
-    if len(centroids) <= literal_max:
-        return (
-            df.withColumn("_vn", F.sqrt(sq_norm(F.col(vec_col))))
-            .withColumn(
-                out_col,
-                F.explode(
-                    ivf_probe_cells(
-                        F.col(vec_col), centroids, nprobe, vn=F.col("_vn")
-                    )
-                ),
-            )
-            .drop("_vn")
-        )
-    cent = _centroid_df(df.sparkSession, centroids)
-    w = W.partitionBy(id_col).orderBy(F.desc("_s"), F.asc("_cid"))
-    probes = (
-        df.select(F.col(id_col), F.col(vec_col))
-        .withColumn("_vn", F.sqrt(sq_norm(F.col(vec_col))))
-        .join(F.broadcast(cent))
-        .withColumn(
-            "_s", dot(F.col(vec_col), F.col("_ccv")) / (F.col("_vn") * F.col("_cn"))
-        )
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= nprobe)
-        .select(F.col(id_col), F.col("_cid").cast("long").alias(out_col))
+    """``df`` exploded to one row per probed cell: the ``nprobe``
+    nearest centroids per row, in :func:`assign_cells`' ranking order —
+    the standard IVF recall knob: probing 2-4 cells recovers the
+    neighbors that straddle a cell boundary for a proportional (not
+    quadratic) extra scan cost. ``nprobe <= 1`` is :func:`assign_cells`."""
+    return (
+        _nearest_cells(df, vec_col, centroids, max(1, nprobe))
+        .withColumn(out_col, F.explode(F.col(_CELLS)))
+        .drop(_CELLS)
     )
-    return df.join(probes, id_col)
 
 
 def kmeans_refine(
@@ -772,16 +682,11 @@ def semantic_dedup(
         for d in np.unique(dims[dims >= 0]):
             rows = np.nonzero(dims == d)[0]
             x = np.stack(vecs[rows])
-            sq = np.zeros(len(rows))
-            for j in range(d):
-                sq = sq + x[:, j] * x[:, j]
-            n = np.sqrt(sq)
+            n = np.sqrt(_fold_products(x, x))
             for s in range(0, len(rows), tile):
                 for t in range(s, len(rows), tile):
                     a, b = x[s : s + tile], x[t : t + tile]
-                    acc = np.zeros((len(a), len(b)))
-                    for j in range(d):
-                        acc = acc + np.multiply.outer(a[:, j], b[:, j])
+                    acc = _fold_products(a, b, outer=True)
                     with np.errstate(divide="ignore", invalid="ignore"):
                         cos = acc / np.multiply.outer(n[s : s + tile], n[t : t + tile])
                     i, k = np.nonzero(cos >= threshold)  # NaN compares false
@@ -804,32 +709,6 @@ def semantic_dedup(
     )
 
 
-def ivf_probe_cells(
-    v: Column,
-    centroids: list[tuple[int, list[float]]],
-    nprobe: int,
-    vn: Column | None = None,
-) -> Column:
-    """The ``nprobe`` nearest centroid ids (cosine desc, min-id ties)
-    as an array — the standard IVF recall knob: probing 2-4 cells
-    recovers the neighbors that straddle a cell boundary for a
-    proportional (not quadratic) extra scan cost. Small-k literal form;
-    :func:`probe_cells` dispatches to a broadcast join for large k."""
-    if vn is None:
-        vn = F.sqrt(sq_norm(v))
-    entries = []
-    for cid, cv in centroids:
-        lit_c = F.array(*[F.lit(float(x)) for x in cv])
-        score = dot(v, lit_c) / (vn * F.lit(centroid_norm(cv)))
-        entries.append(
-            F.struct(score.alias("s"), F.lit(-int(cid)).cast("long").alias("negid"))
-        )
-    ranked = F.reverse(F.array_sort(F.array(*entries)))
-    return F.transform(
-        F.slice(ranked, 1, nprobe), lambda e: (-e["negid"]).cast("long")
-    )
-
-
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -849,10 +728,11 @@ def ivf_topk(
     Centroids come from any trainer; for determinism here they are
     fixed-k seeded-hash rows of the corpus itself (see
     :func:`seed_centroids`; kmeans_refine drops in unchanged).
-    Assignment strategy — literal expression vs broadcast centroid
-    join — is picked by :func:`assign_cells` from the centroid count,
-    so a 4096-centroid production quantizer never inlines into the
-    plan or scales the driver collect with the corpus.
+    Assignment is :func:`assign_cells`' map-only kernel, so a
+    4096-centroid production quantizer never inlines into the plan or
+    scales the driver collect with the corpus. The final cosine is
+    ``try_divide``: a zero query or corpus vector scores null (ranked
+    last) instead of raising ANSI ``DIVIDE_BY_ZERO``.
     """
     c = assign_cells(
         corpus.select(
@@ -873,7 +753,7 @@ def ivf_topk(
         nprobe,
     ).withColumn("qn", F.sqrt(sq_norm(F.col("qv"))))
     scored = c.join(F.broadcast(q), "cell").withColumn(
-        "cosine", dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
+        "cosine", F.try_divide(dot(F.col("qv"), F.col("cv")), F.col("qn") * F.col("cn"))
     )
     w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
     return (

@@ -26,7 +26,7 @@ from anime_data_pipeline_spark.functions.hashing import (
     token_hashes_spark_expr,
     tokens_spark_expr,
 )
-from anime_data_pipeline_spark.functions.text import tokens
+from anime_data_pipeline_spark.functions.text import tokens, tokens_sql
 
 # Engine-portable "BPE-ish" pre-tokenizer: letter runs, digit runs,
 # single symbols. (Same regex text is valid in Java and RE2/DuckDB.)
@@ -48,7 +48,7 @@ def ws_token_count(text: Column) -> Column:
 
 
 def ws_token_count_sql(expr: str) -> str:
-    return f"CAST(len(list_filter(string_split({expr}, ' '), t -> t <> '')) AS BIGINT)"
+    return f"CAST(len({tokens_sql(expr)}) AS BIGINT)"
 
 
 def bpe_token_count(text: Column) -> Column:
@@ -122,7 +122,7 @@ def quality_columns(df: DataFrame, text_col: str) -> DataFrame:
 
 def quality_sql_projection(text_expr: str) -> dict[str, str]:
     """DuckDB spelling of every quality_columns output, keyed by name."""
-    toks = f"list_filter(string_split({text_expr}, ' '), t -> t <> '')"
+    toks = tokens_sql(text_expr)
     n_chars = f"CAST(length({text_expr}) AS BIGINT)"
     n_tokens = f"CAST(len({toks}) AS BIGINT)"
     punct = (
@@ -177,7 +177,7 @@ def language_id(df: DataFrame, text_col: str) -> DataFrame:
 
 def language_id_sql(text_expr: str) -> tuple[str, str]:
     """(pred_lang_expr, profile_hits_expr) in DuckDB SQL."""
-    toks = f"list_filter(string_split({text_expr}, ' '), t -> t <> '')"
+    toks = tokens_sql(text_expr)
     hits = {
         lang: _stop_hits_sql(toks, profile) for lang, profile in LANG_PROFILES.items()
     }
@@ -224,7 +224,7 @@ def winnow_fingerprints(
 def winnow_fingerprints_sql(corpus_sql: str, id_expr: str, text_expr: str,
                             k: int = 3, w: int = 4) -> str:
     """DuckDB mirror of winnow_fingerprints over a corpus subquery."""
-    toks = f"list_filter(string_split({text_expr}, ' '), t -> t <> '')"
+    toks = tokens_sql(text_expr)
     from anime_data_pipeline_spark.functions.hashing import (
         polyhash_sql,
         shingle_hashes_sql,
@@ -384,7 +384,7 @@ def gopher_sql_projection(
     min_stop_hits: int = 2,
 ) -> dict[str, str]:
     """DuckDB spelling of every gopher_rules output, keyed by name."""
-    toks = f"list_filter(string_split({text_expr}, ' '), t -> t <> '')"
+    toks = tokens_sql(text_expr)
     n_words = f"CAST(len({toks}) AS BIGINT)"
     safe_n = f"greatest({n_words}, 1)"
     mean_wl = (
@@ -594,7 +594,7 @@ def readability_columns(df: DataFrame, text_col: str) -> DataFrame:
 
 def readability_sql_projection(text_expr: str) -> dict[str, str]:
     """DuckDB twins of readability_columns, same clamps and classes."""
-    toks = f"list_filter(string_split(lower({text_expr}), ' '), t -> t <> '')"
+    toks = tokens_sql(f"lower({text_expr})")
     n_words = f"greatest(len({toks}), 1)"
     n_sent = f"greatest(len(regexp_extract_all(lower({text_expr}), '[.!?]+')), 1)"
     syl = (
@@ -920,7 +920,6 @@ def repetition_sql(
     with the shared dround formula, keep flag computed pre-rounding.
     NULL text counts as empty, matching the Spark side's coalesce."""
     from anime_data_pipeline_spark.functions.compat import dround_sql
-    from anime_data_pipeline_spark.functions.text import tokens_sql
 
     if not top_ns and not dup_ns:
         raise ValueError("at least one of top_ns/dup_ns must be non-empty")

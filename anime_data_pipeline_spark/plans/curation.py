@@ -215,10 +215,18 @@ def curate_corpus(
     BEHIND the returned lazy plan (two consumers), so this function
     cannot unpersist it without forcing eager evaluation — CALLERS own
     the release, after materializing the result:
-    ``spark.catalog.clearCache()`` (what bench.py and driver_check do
-    between queries) or a targeted ``unpersist()``. Same convention as
+    ``spark.catalog.clearCache()`` (what perfbench's ``run_llm`` does
+    after writing the chain, and ``scripts/driver_check.py`` between
+    queries) or a targeted ``unpersist()``. Same convention as
     ``operators/terms.py`` tf/vocab side-tables. At 100 TB the persist
     becomes a parquet checkpoint and the question disappears.
+
+    The persists stay because every consumer would otherwise re-run the
+    scoring and hash folds: dropping all three (this survivor set,
+    ``prepare_pretraining_corpus``' survivors, ``minhash_lsh_pairs``'
+    signature table) raised the chain's warm noop CPU from 5.43 to
+    7.52 s (+38%; perfbench ``llm_curation`` seed-1 documents,
+    ``local[4]`` on 4 vCPU, process-tree CPU less JIT, median of 5).
     """
     scored = quality_columns(ensure_map_parallelism(df), text_col)
     # Project before the exchange (same discipline as
@@ -272,7 +280,9 @@ def prepare_pretraining_corpus(
 
     Cache lifecycle: as in ``curate_corpus`` — the two persisted stage
     boundaries ride behind the returned lazy plan; callers release
-    them after materialization (clearCache / unpersist)."""
+    them after materialization (perfbench's ``run_llm`` and
+    ``scripts/driver_check.py`` call ``clearCache``; ``curate_corpus``
+    says why the persists stay)."""
     from anime_data_pipeline_spark.operators.dedup import benchmark_contamination
     from anime_data_pipeline_spark.operators.packing import pack_greedy
     from anime_data_pipeline_spark.operators.textstats import language_id

@@ -240,7 +240,7 @@ def q98_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # q44 — IVF-flat ANN: coarse quantizer = nearest of FIXED-K seeded-hash
 # centroids (seed_centroids — corpus-size-independent, so the driver
-# collect and the assignment plan are O(k) at any data scale; a kmeans
+# collect is O(k) and the assignment plan O(1) at any data scale; a kmeans
 # trainer would drop in unchanged); each query probes only its cell.
 # Seeding, assignment + probe mirrored exactly in SQL.
 # ---------------------------------------------------------------------------
@@ -787,7 +787,7 @@ def q131_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 # RNG state). The diversity-preserving subsample a pretraining mix
 # wants: dense regions of embedding space can't crowd out sparse ones
 # the way a uniform sample lets them. Cell assignment reuses q44's
-# coarse quantizer (broadcast/literal centroids, map-only); the cap is
+# coarse quantizer (one map-only pass at any k); the cap is
 # a per-cell window rank — partitioned by cell, never global.
 # ---------------------------------------------------------------------------
 _Q133_CAP = 20
@@ -1031,9 +1031,9 @@ def q139_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # vec_ids) and compare per-cell occupancy shares and mean
 # assignment-cosine between history and batch — the monitoring query
 # that tells a serving ANN index "your coarse quantizer has drifted,
-# retrain". Everything is cell-keyed: two assigns (map-only literal
-# centroids), two |cells|-row aggs, one join on cell. The shares
-# compare against 1-row totals via broadcast.
+# retrain". Everything is cell-keyed: two assigns (map-only), two
+# |cells|-row aggs, one join on cell. The shares compare against 1-row
+# totals via broadcast.
 # ---------------------------------------------------------------------------
 _Q142_SEED_SQL = seed_centroids_sql(
     "(SELECT * FROM embeddings WHERE vec_id % 2 = 0)",

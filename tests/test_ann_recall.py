@@ -5,6 +5,8 @@ empirical recall floor on the real embeddings table."""
 
 from __future__ import annotations
 
+import duckdb
+import pyarrow as pa
 from pyspark.sql import functions as F
 
 from anime_data_pipeline_spark.catalog import load_table
@@ -94,103 +96,79 @@ def test_seed_centroids_fixed_k_independent_of_corpus_size(spark):
     assert cs == seed_centroids(small, "vec_id", "embedding", 8)
 
 
-def test_assign_cells_join_path_matches_literal_path(spark, sf_dir):
-    """Strategy dispatch must never change a result: forcing the
-    broadcast-join assignment (literal_max=0) gives the identical
-    (vec_id → cell) map as the literal expression path."""
+def test_seed_centroids_skips_incomplete_vectors(spark):
+    """A null vector or one with a null element is never a seed, in
+    either engine: the Spark side ranks only complete vectors instead of
+    crashing in the driver-side float conversion."""
     from anime_data_pipeline_spark.operators.similarity import (
-        assign_cells,
         seed_centroids,
-        to_double_array,
+        seed_centroids_sql,
     )
 
-    corpus = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", to_double_array(F.col("embedding")).alias("v")
-    )
-    cents = seed_centroids(corpus, "vec_id", "v", 12)
-    lit = {
-        r["vec_id"]: r["cell"]
-        for r in assign_cells(corpus, "vec_id", "v", cents).collect()
-    }
-    join = {
-        r["vec_id"]: r["cell"]
-        for r in assign_cells(
-            corpus, "vec_id", "v", cents, literal_max=0
-        ).collect()
-    }
-    assert lit == join and len(lit) == corpus.count()
+    rows = [(i, [float(i), 1.0]) for i in range(12)]
+    rows[3], rows[5], rows[8] = (3, None), (5, [1.0, None]), (8, [])
+    df = spark.createDataFrame(rows, "vec_id long, v array<double>")
+    got = seed_centroids(df, "vec_id", "v", 6)
+    con = duckdb.connect()  # from Arrow: pandas would turn null elements into NaN
+    con.register("seed_rows", pa.table({"vec_id": [i for i, _ in rows], "v": [v for _, v in rows]}))
+    sql = seed_centroids_sql("seed_rows", "vec_id", "v", 6)
+    want = [(int(cid), list(cv)) for cid, cv in con.execute(sql).fetchall()]
+    assert len(got) == 6 and not {3, 5} & {cid for cid, _ in got}
+    assert got == sorted(want)
+    complete = [r for r in rows if r[1] is not None and None not in r[1]]
+    assert len(seed_centroids(df, "vec_id", "v", 100)) == len(complete)
 
 
-def test_ivf_assign_expr_matches_python_fold(spark, sf_dir):
-    """assign_cells' literal path parses ONE SQL string
-    (ivf_assign_expr). An independent pure-Python replay — the same
-    sequential double folds for the dot product and the norms, max
-    score, then min cid — must give the identical (vec_id → cell)
-    map."""
+def _score_py(v, cv):
+    """Independent replay of one assignment score: the sequential double
+    folds for the dot product and the norms; None where Spark's
+    ``try_divide`` gives null (null row or element, length mismatch,
+    zero denominator)."""
     import math
 
-    from anime_data_pipeline_spark.operators.similarity import (
-        centroid_norm,
-        ivf_assign_expr,
-        seed_centroids,
-        sq_norm,
-        to_double_array,
-    )
+    from anime_data_pipeline_spark.operators.similarity import centroid_norm
 
-    corpus = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", to_double_array(F.col("embedding")).alias("v")
-    )
-    cents = seed_centroids(corpus, "vec_id", "v", 16)
-    rows = (
-        corpus.withColumn("_vn", F.sqrt(sq_norm(F.col("v"))))
-        .withColumn("cell", ivf_assign_expr("v", cents, "_vn"))
-        .collect()
-    )
-
-    def fold_dot(a, b):
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc = acc + x * y
-        return acc
-
-    def nearest(v):
-        vn = math.sqrt(fold_dot(v, v))
-        scores = [(fold_dot(v, cv) / (vn * centroid_norm(cv)), -cid) for cid, cv in cents]
-        return -max(scores)[1]
-
-    got = {r["vec_id"]: r["cell"] for r in rows}
-    want = {r["vec_id"]: nearest(list(r["v"])) for r in rows}
-    assert got == want and len(got) == corpus.count()
+    if v is None or None in v or len(v) != len(cv):
+        return None
+    d = vv = 0.0
+    for x, y in zip(v, cv):
+        d, vv = d + x * y, vv + x * x
+    den = math.sqrt(vv) * centroid_norm(cv)
+    return None if den == 0 else d / den
 
 
-def test_probe_cells_join_path_matches_literal_path(spark, sf_dir):
-    from anime_data_pipeline_spark.operators.similarity import (
-        probe_cells,
-        seed_centroids,
-        to_double_array,
-    )
+def _ranked_py(v, cents):
+    """cids best first: NaN highest, null lowest, equal scores to the
+    lower cid."""
+    import math
 
-    corpus = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", to_double_array(F.col("embedding")).alias("v")
-    )
-    cents = seed_centroids(corpus, "vec_id", "v", 12)
+    def key(entry):
+        s, cid = _score_py(v, entry[1]), entry[0]
+        if s is None:
+            return (0, 0.0, -cid)
+        return (2, 0.0, -cid) if math.isnan(s) else (1, s, -cid)
 
-    def pairs(literal_max):
-        return sorted(
-            (r["vec_id"], r["cell"])
-            for r in probe_cells(
-                corpus, "vec_id", "v", cents, nprobe=2, literal_max=literal_max
-            ).collect()
-        )
-
-    lit, join = pairs(64), pairs(0)
-    assert lit == join and len(lit) == 2 * corpus.count()
+    return [cid for cid, _ in sorted(cents, key=key, reverse=True)]
 
 
-def test_assign_cells_join_path_plan_is_broadcast(spark, sf_dir):
-    """Above literal_max the assignment must be a BroadcastHashJoin on
-    the centroid table (O(1) plan size in k), not an inlined literal
-    expression tree."""
+def _probe_lists(df, cents, nprobe):
+    from anime_data_pipeline_spark.operators.similarity import probe_cells
+
+    got: dict[int, list[int]] = {}
+    for r in probe_cells(df, "vec_id", "v", cents, nprobe=nprobe).collect():
+        got.setdefault(r["vec_id"], []).append(r["cell"])
+    return got
+
+
+def test_assign_cells_matches_python_fold(spark, sf_dir):
+    """The assignment kernel against an independent pure-Python replay
+    on the real embeddings, at k below and above 64 (the size where the
+    assignment used to switch strategy), and on 1,100 rows in one Arrow
+    batch so that rows cross the kernel's 512-row tile edges, with
+    hostile rows at 511/512 and 1023/1024: assign_cells gives the top
+    cid and probe_cells the top three, in rank order."""
+    import random
+
     from anime_data_pipeline_spark.operators.similarity import (
         assign_cells,
         seed_centroids,
@@ -200,14 +178,100 @@ def test_assign_cells_join_path_plan_is_broadcast(spark, sf_dir):
     corpus = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", to_double_array(F.col("embedding")).alias("v")
     )
-    cents = seed_centroids(corpus, "vec_id", "v", 12)
-    plan = (
-        assign_cells(corpus, "vec_id", "v", cents, literal_max=0)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+    rng = random.Random(3)
+    rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(1100)]
+    for i, v in zip((511, 512, 1023, 1024), ([0.0] * 8, None, [1.0] * 7, [1.0, None] * 4)):
+        rows[i] = (i, v)
+    tiled = spark.createDataFrame(rows, "vec_id long, v array<double>").coalesce(1)
+    # cid 0 has another length, so a null element (no score anywhere:
+    # cid order) and a NaN element (NaN first among length 8) rank apart
+    tiled_cents = [(0, [1.0] * 7), (1, [0.0] * 8)]
+    tiled_cents += [(c, [rng.uniform(-1, 1) for _ in range(8)]) for c in range(2, 70)]
+    cases = [
+        (corpus, seed_centroids(corpus, "vec_id", "v", 16)),
+        (corpus, seed_centroids(corpus, "vec_id", "v", 100)),
+        (tiled, tiled_cents),
+    ]
+    for df, cents in cases:
+        k = len(cents)
+        vecs = {r["vec_id"]: r["v"] for r in df.collect()}
+        want = {i: _ranked_py(v, cents)[:3] for i, v in vecs.items()}
+        got = {
+            r["vec_id"]: r["cell"]
+            for r in assign_cells(df, "vec_id", "v", cents).collect()
+        }
+        assert got == {i: w[0] for i, w in want.items()}, k
+        assert _probe_lists(df, cents, 3) == want, k
+
+
+_HOSTILE_CENTS = [
+    (3, [1.0, 0.0, 0.0]),
+    (1, [0.0, 1.0, 0.0]),
+    (7, [0.0, 0.0, 0.0]),
+    (5, [1.0, 0.0, 0.0]),
+    (9, [1.0, 1.0]),
+    (2, [0.0, 0.0, 1.0]),
+]
+_HOSTILE_VECS = [
+    [1.0, 0.0, 0.0],
+    [0.0, 0.0, 0.0],
+    [float("nan"), 1.0, 0.0],
+    None,
+    [1.0, None, 0.0],
+    [1.0, 1.0],
+    [1.0, 2.0, 3.0, 4.0],
+    [-1.0, -1.0, -1.0],
+    [0.0, -0.0, 1.0],
+    [float("inf"), 0.0, 0.0],
+    [1e308, 1e308, 0.0],
+    [0.5, 0.5, 0.0],
+    [],
+]
+
+
+def test_assign_and_probe_cells_hostile_golden(spark):
+    """Zero, NaN, inf, overflowing, null, null-element, empty and
+    wrong-length vectors against a zero centroid, duplicate centroids and
+    a centroid of another length. Null scores rank last, NaN first, ties
+    go to the lower cid; the cells are the ones the earlier literal
+    expression gave, and probing no longer raises DIVIDE_BY_ZERO."""
+    from anime_data_pipeline_spark.operators.similarity import assign_cells
+
+    df = spark.createDataFrame(
+        list(enumerate(_HOSTILE_VECS, 1)), "vec_id long, v array<double>"
     )
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
+    got = {
+        r["vec_id"]: r["cell"]
+        for r in assign_cells(df, "vec_id", "v", _HOSTILE_CENTS).collect()
+    }
+    assert [got[i] for i in range(1, 14)] == [3, 1, 1, 1, 1, 9, 1, 1, 2, 1, 7, 1, 1]
+    want = {
+        1: [3, 5, 1], 2: [1, 2, 3], 3: [1, 2, 3], 4: [1, 2, 3], 5: [1, 2, 3],
+        6: [9, 1, 2], 7: [1, 2, 3], 8: [1, 2, 3], 9: [2, 1, 3], 10: [1, 2, 3],
+        11: [7, 1, 2], 12: [1, 3, 5], 13: [1, 2, 3],
+    }
+    assert _probe_lists(df, _HOSTILE_CENTS, 3) == want
+    assert {i: _ranked_py(v, _HOSTILE_CENTS)[:3] for i, v in enumerate(_HOSTILE_VECS, 1)} == want
+
+
+def test_ivf_topk_zero_query_vector_scores_null(spark):
+    """A zero query vector (and a zero corpus vector) gives a null
+    cosine, ranked after every real score, instead of raising ANSI
+    DIVIDE_BY_ZERO in the final scoring."""
+    from anime_data_pipeline_spark.operators.similarity import ivf_topk
+
+    corpus = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 0.0]), (3, [2.0, 0.0]), (4, [0.0, 1.0])],
+        "vec_id long, v array<double>",
+    )
+    queries = spark.createDataFrame(
+        [(10, [0.0, 0.0]), (11, [3.0, 0.0])], "vec_id long, v array<double>"
+    )
+    cents = [(1, [1.0, 0.0])]
+    rows = ivf_topk(corpus, queries, cents, "vec_id", "v", k=4).collect()
+    got = {(r["query_id"], r["rank"]): (r["vec_id"], r["cosine"]) for r in rows}
+    assert [got[(10, i)] for i in range(1, 5)] == [(i, None) for i in (1, 2, 3, 4)]
+    assert [got[(11, i)] for i in range(1, 5)] == [(1, 1.0), (3, 1.0), (4, 0.0), (2, None)]
 
 
 def test_srp_bucket_literal_planes_match_elementwise_form(spark, sf_dir):
@@ -553,83 +617,3 @@ def test_suggested_planes_sizing_rule():
     assert suggested_planes(10**12) == 24      # clamps high
     # doubling the corpus adds ~1 plane: occupancy stays flat
     assert suggested_planes(40_000) == suggested_planes(20_000) + 1
-
-
-def test_assign_cells_two_level(spark, sf_dir):
-    """Two-level routing: probes >= n_groups must equal the exact flat
-    assignment bit-for-bit; probes=2 must agree on nearly all rows of
-    a real embedding table (the recall knob's documented tradeoff)."""
-    from anime_data_pipeline_spark.operators.similarity import (
-        assign_cells,
-        assign_cells_two_level,
-        seed_centroids,
-        to_double_array,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", to_double_array("embedding").alias("v")
-    )
-    cents = seed_centroids(emb, "vec_id", "v", 25)
-    exact = {
-        r["vec_id"]: r["cell"]
-        for r in assign_cells(emb, "vec_id", "v", cents).collect()
-    }
-    full = {
-        r["vec_id"]: r["cell"]
-        for r in assign_cells_two_level(
-            emb, "vec_id", "v", cents, n_groups=5, probes=5
-        ).collect()
-    }
-    assert full == exact  # probing every group == exact
-    # on the near-random synthetic table cluster structure is weak, so
-    # partial probing is a soft floor + monotone-in-probes property
-    agrees = []
-    for p in (2, 3):
-        two = {
-            r["vec_id"]: r["cell"]
-            for r in assign_cells_two_level(
-                emb, "vec_id", "v", cents, n_groups=5, probes=p
-            ).collect()
-        }
-        assert set(two) == set(exact)
-        agrees.append(sum(two[i] == exact[i] for i in exact) / len(exact))
-    assert agrees[0] >= 0.6 and agrees[1] >= agrees[0], agrees
-
-
-def test_assign_cells_two_level_clustered_data(spark):
-    """On data with real cluster structure (what embedding spaces look
-    like), probes=2 routing agrees with exact assignment on ~all rows:
-    each point's nearest centroid lives in its own coarse group."""
-    import numpy as np
-
-    from anime_data_pipeline_spark.operators.similarity import (
-        assign_cells,
-        assign_cells_two_level,
-    )
-
-    r = np.random.default_rng(11)
-    anchors = r.normal(size=(9, 16))
-    anchors /= np.linalg.norm(anchors, axis=1)[:, None]
-    rows, cents = [], []
-    vid = 0
-    for a_i, a in enumerate(anchors):
-        for c in range(4):  # 4 centroids per anchor neighborhood
-            cv = a + r.normal(scale=0.05, size=16)
-            cents.append((a_i * 10 + c, [float(x) for x in cv]))
-        for _ in range(40):
-            v = a + r.normal(scale=0.05, size=16)
-            rows.append((vid, [float(x) for x in v]))
-            vid += 1
-    df = spark.createDataFrame(rows, "vec_id long, v array<double>")
-    exact = {
-        r2["vec_id"]: r2["cell"]
-        for r2 in assign_cells(df, "vec_id", "v", cents).collect()
-    }
-    two = {
-        r2["vec_id"]: r2["cell"]
-        for r2 in assign_cells_two_level(
-            df, "vec_id", "v", cents, n_groups=9, probes=2
-        ).collect()
-    }
-    agree = sum(two[i] == exact[i] for i in exact) / len(exact)
-    assert agree >= 0.97, agree

@@ -357,38 +357,32 @@ def test_no_unbounded_global_window_anywhere(spark, sf_dir):
     assert not offenders, f"single-partition global windows in: {offenders}"
 
 
-def test_assign_cells_strategy_switch(spark, sf_dir):
-    """assign_cells must dispatch on k: ≤ literal_max inlines a literal
-    expression tree (map-only, zero joins), > literal_max broadcasts
-    the centroid DataFrame (no O(k·dim) literal tree in the plan) —
-    and BOTH strategies produce the identical assignment."""
+def test_assign_cells_plan_is_one_map_at_any_k(spark, sf_dir):
+    """Cell assignment is one map-only Arrow pass whatever the centroid
+    count: at k=16 and k=512 the plan has no Exchange and no join, and
+    the same physical node list (the centroids ride in the closure, not
+    in the plan)."""
+    import random
+
     from anime_data_pipeline_spark.catalog import load_table
     from anime_data_pipeline_spark.operators.similarity import (
         assign_cells,
-        seed_centroids,
         to_double_array,
     )
 
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", to_double_array(F.col("embedding")).alias("v"))
-        .limit(200)
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", to_double_array(F.col("embedding")).alias("v")
     )
-    cents = seed_centroids(emb, "vec_id", "v", k=8)
-
-    lit_df = assign_cells(emb, "vec_id", "v", cents, literal_max=64)
-    lit_plan = plan_of(lit_df)
-    assert "Join" not in lit_plan, f"literal path must be map-only:\n{lit_plan[:800]}"
-    assert "Exchange" not in lit_plan
-
-    join_df = assign_cells(emb, "vec_id", "v", cents, literal_max=0)
-    join_plan = plan_of(join_df)
-    assert "Join" in join_plan, "large-k path must join, not inline"
-    assert "Broadcast" in join_plan, f"centroid side must broadcast:\n{join_plan[:800]}"
-
-    a = {r["vec_id"]: r["cell"] for r in lit_df.select("vec_id", "cell").collect()}
-    b = {r["vec_id"]: r["cell"] for r in join_df.select("vec_id", "cell").collect()}
-    assert a == b, "strategies disagree on assignment"
+    dim = len(emb.first()["v"])
+    rng = random.Random(7)
+    nodes = []
+    for k in (16, 512):
+        cents = [(c, [rng.uniform(-1, 1) for _ in range(dim)]) for c in range(k)]
+        plan = plan_of(assign_cells(emb, "vec_id", "v", cents))
+        assert "Exchange" not in plan and "Join" not in plan, plan[:800]
+        assert "MapInArrow" in plan, plan[:800]
+        nodes.append(re.findall(r"^\(\d+\) (\w+)", plan, re.M))
+    assert nodes[0] == nodes[1], nodes
 
 
 def test_ep1_ordering_is_one_hashed_vocab_probe(spark):
