@@ -76,6 +76,9 @@ def entry(spark: SparkSession) -> DataFrame:
 #     operators/textstats now comes from functions.text.tokens_sql
 #     (byte-identical SQL) — every query whose closure imports either
 #     module drifts: 20 more.
+# (6) assign_cells / probe_cells lost their unused id_col argument and
+#     q142 assigns each vector once (one conditional groupBy per cell)
+#     — all already drifted above; the set is unchanged.
 _CHANGED_THIS_ROUND: list[str] = [
     "q100_bloom_contamination",
     "q101_span_dedup",

@@ -536,7 +536,6 @@ def _nearest_cells(
 
 def assign_cells(
     df: DataFrame,
-    id_col: str,
     vec_col: str,
     centroids: list[tuple[int, list[float]]],
     out_col: str = "cell",
@@ -544,8 +543,7 @@ def assign_cells(
     """``df`` + nearest-centroid ``out_col`` (max cosine, min id on
     ties; ranking and null rules in :func:`_nearest_cells`). Map-only
     at any k: plan size O(1) in k, driver memory O(k·dim). ``vec_col``
-    must already be a double array. ``id_col`` is unused (the kernel
-    needs no key); it stays so that call sites do not change.
+    must already be a double array.
     """
     return (
         _nearest_cells(df, vec_col, centroids, 1)
@@ -556,7 +554,6 @@ def assign_cells(
 
 def probe_cells(
     df: DataFrame,
-    id_col: str,
     vec_col: str,
     centroids: list[tuple[int, list[float]]],
     nprobe: int,
@@ -607,7 +604,6 @@ def kmeans_refine(
                 F.col(id_col).alias("_kid"),
                 to_double_array(F.col(vec_col)).alias("v"),
             ),
-            "_kid",
             "v",
             centroids,
         )
@@ -664,7 +660,6 @@ def semantic_dedup(
         corpus.select(
             F.col(id_col).alias("vec_id"), to_double_array(F.col(vec_col)).alias("v")
         ),
-        "vec_id",
         "v",
         centroids,
     )
@@ -738,7 +733,6 @@ def ivf_topk(
         corpus.select(
             F.col(id_col).alias("vec_id"), to_double_array(F.col(vec_col)).alias("cv")
         ),
-        "vec_id",
         "cv",
         centroids,
     ).withColumn("cn", F.sqrt(sq_norm(F.col("cv"))))
@@ -747,7 +741,6 @@ def ivf_topk(
             F.col(id_col).alias("query_id"),
             to_double_array(F.col(vec_col)).alias("qv"),
         ),
-        "query_id",
         "qv",
         centroids,
         nprobe,

@@ -824,7 +824,7 @@ def q133_cluster_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = raw.select(
         "vec_id", to_double_array(F.col("embedding")).alias("v")
     )
-    assigned = assign_cells(corpus, "vec_id", "v", _centroids(raw), out_col="cell")
+    assigned = assign_cells(corpus, "v", _centroids(raw), out_col="cell")
     hk = (
         F.lit(_Q133_A) * (F.col("vec_id").cast("long") % F.lit(P)) + F.lit(_Q133_B)
     ) % F.lit(P)
@@ -1092,7 +1092,7 @@ def q142_ivf_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         to_double_array(F.col("embedding")).alias("v"),
         (F.col("vec_id") % 2 == 0).alias("is_hist"),
     )
-    assigned = assign_cells(corpus, "vec_id", "v", cents, out_col="cell")
+    assigned = assign_cells(corpus, "v", cents, out_col="cell")
     # assignment cosine to the OWN cell centroid, recomputed against the
     # tiny centroid table (broadcast) — assign_cells returns the argmax
     # cell; the audit also needs its score.
@@ -1103,46 +1103,40 @@ def q142_ivf_drift_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = assigned.join(F.broadcast(cent_df), "cell").withColumn(
         "c", cosine(F.col("v"), F.col("cv"))
     )
-    hist = (
-        scored.filter(F.col("is_hist"))
-        .groupBy("cell")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_hist"),
-            dround(F.avg("c"), 6).alias("cos_hist"),
+    # one assignment pass: conditional aggregates per cell, then one
+    # global aggregate over those k rows that carries them along with
+    # the totals (a null is_hist counts as new only in ``tn``, as the
+    # oracle's NOT-filter and CASE total have it)
+    h = F.col("is_hist")
+    cells = scored.groupBy("cell").agg(
+        F.count(F.when(h, 1)).alias("n_hist"),
+        F.count(F.when(~h, 1)).alias("n_new"),
+        F.count(F.lit(1)).alias("n"),
+        F.coalesce(dround(F.avg(F.when(h, F.col("c"))), 6), F.lit(0.0)).alias("cos_hist"),
+        F.coalesce(dround(F.avg(F.when(~h, F.col("c"))), 6), F.lit(0.0)).alias("cos_new"),
+    )
+    hs = F.col("n_hist") / F.col("th").cast("double")
+    ns = F.col("n_new") / F.col("tn").cast("double")
+    return (
+        cells.agg(
+            F.collect_list(
+                F.struct("cell", "n_hist", "n_new", "cos_hist", "cos_new")
+            ).alias("rows"),
+            F.sum("n_hist").alias("th"),
+            (F.sum("n") - F.sum("n_hist")).alias("tn"),
         )
-    )
-    newb = (
-        scored.filter(~F.col("is_hist"))
-        .groupBy("cell")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_new"),
-            dround(F.avg("c"), 6).alias("cos_new"),
+        .select(F.inline("rows"), "th", "tn")
+        .filter(F.col("n_hist") + F.col("n_new") > 0)
+        .select(
+            "cell",
+            "n_hist",
+            "n_new",
+            dround(hs, 6).alias("hist_share"),
+            dround(ns, 6).alias("new_share"),
+            "cos_hist",
+            "cos_new",
+            (F.abs(ns - hs) > 0.02).alias("drift_flag"),
         )
-    )
-    tot = scored.agg(
-        F.sum(F.when(F.col("is_hist"), 1).otherwise(0)).alias("th"),
-        F.sum(F.when(F.col("is_hist"), 0).otherwise(1)).alias("tn"),
-    )
-    joined = (
-        hist.withColumnRenamed("cell", "h_cell")
-        .join(
-            newb.withColumnRenamed("cell", "n_cell"),
-            F.col("h_cell") == F.col("n_cell"),
-            "full_outer",
-        )
-        .crossJoin(F.broadcast(tot))
-    )
-    hs = F.coalesce(F.col("n_hist"), F.lit(0)) / F.col("th").cast("double")
-    ns = F.coalesce(F.col("n_new"), F.lit(0)) / F.col("tn").cast("double")
-    return joined.select(
-        F.coalesce(F.col("h_cell"), F.col("n_cell")).alias("cell"),
-        F.coalesce(F.col("n_hist"), F.lit(0)).cast("long").alias("n_hist"),
-        F.coalesce(F.col("n_new"), F.lit(0)).cast("long").alias("n_new"),
-        dround(hs, 6).alias("hist_share"),
-        dround(ns, 6).alias("new_share"),
-        F.coalesce(F.col("cos_hist"), F.lit(0.0)).alias("cos_hist"),
-        F.coalesce(F.col("cos_new"), F.lit(0.0)).alias("cos_new"),
-        (F.abs(ns - hs) > 0.02).alias("drift_flag"),
     )
 
 

@@ -155,7 +155,7 @@ def _probe_lists(df, cents, nprobe):
     from anime_data_pipeline_spark.operators.similarity import probe_cells
 
     got: dict[int, list[int]] = {}
-    for r in probe_cells(df, "vec_id", "v", cents, nprobe=nprobe).collect():
+    for r in probe_cells(df, "v", cents, nprobe=nprobe).collect():
         got.setdefault(r["vec_id"], []).append(r["cell"])
     return got
 
@@ -198,7 +198,7 @@ def test_assign_cells_matches_python_fold(spark, sf_dir):
         want = {i: _ranked_py(v, cents)[:3] for i, v in vecs.items()}
         got = {
             r["vec_id"]: r["cell"]
-            for r in assign_cells(df, "vec_id", "v", cents).collect()
+            for r in assign_cells(df, "v", cents).collect()
         }
         assert got == {i: w[0] for i, w in want.items()}, k
         assert _probe_lists(df, cents, 3) == want, k
@@ -242,7 +242,7 @@ def test_assign_and_probe_cells_hostile_golden(spark):
     )
     got = {
         r["vec_id"]: r["cell"]
-        for r in assign_cells(df, "vec_id", "v", _HOSTILE_CENTS).collect()
+        for r in assign_cells(df, "v", _HOSTILE_CENTS).collect()
     }
     assert [got[i] for i in range(1, 14)] == [3, 1, 1, 1, 1, 9, 1, 1, 2, 1, 7, 1, 1]
     want = {

@@ -378,7 +378,7 @@ def test_assign_cells_plan_is_one_map_at_any_k(spark, sf_dir):
     nodes = []
     for k in (16, 512):
         cents = [(c, [rng.uniform(-1, 1) for _ in range(dim)]) for c in range(k)]
-        plan = plan_of(assign_cells(emb, "vec_id", "v", cents))
+        plan = plan_of(assign_cells(emb, "v", cents))
         assert "Exchange" not in plan and "Join" not in plan, plan[:800]
         assert "MapInArrow" in plan, plan[:800]
         nodes.append(re.findall(r"^\(\d+\) (\w+)", plan, re.M))
