@@ -79,6 +79,10 @@ def entry(spark: SparkSession) -> DataFrame:
 # (6) assign_cells / probe_cells lost their unused id_col argument and
 #     q142 assigns each vector once (one conditional groupBy per cell)
 #     — all already drifted above; the set is unchanged.
+# (7) the upscale bucket lookup became one parsed CASE with no
+#     higher-order function (operators/bucketing) — every query whose
+#     closure imports it drifts: q21, q22, q23, q28, q115, q151, q177,
+#     q187 (8 more, 75 in all).
 _CHANGED_THIS_ROUND: list[str] = [
     "q100_bloom_contamination",
     "q101_span_dedup",
@@ -89,6 +93,7 @@ _CHANGED_THIS_ROUND: list[str] = [
     "q108_stream_incremental_dedup",
     "q110_bm25_rerank",
     "q114_gumbel_resample",
+    "q115_png_decode_bucket",
     "q118_span_decontaminate",
     "q120_minhash_quality_audit",
     "q122_source_overlap_matrix",
@@ -102,14 +107,21 @@ _CHANGED_THIS_ROUND: list[str] = [
     "q135_doc_stitching",
     "q139_ann_recall_audit",
     "q142_ivf_drift_audit",
+    "q151_gif_jpeg_decode_bucket",
     "q156_source_js_divergence",
     "q158_readability",
     "q161_containment_dedup",
     "q165_calibration_bins",
+    "q177_raster_decode_bucket",
+    "q187_webp_decode_bucket",
     "q191_index_retrieval_metrics",
     "q193_fasttext_quality_filter",
     "q194_repetition_signals",
+    "q21_bucket_assign",
+    "q22_bucket_assign_noupscale",
+    "q23_bucket_stats",
     "q24_novelai_order",
+    "q28_crop_ltrb",
     "q29_seeded_shuffle",
     "q30_map_zip_filter",
     "q31_exact_dedup",

@@ -5,12 +5,15 @@ B1-B5; behavior studied from /root/reference/dataruu/bucketing/
 bucket_manager.py) Spark-first:
 
 - B1 ``make_bucket_resolutions`` (bucket_manager.py:8-27) runs on the
-  driver — it yields ~40 rows, embedded as a literal array of structs.
+  driver — it yields ~40 rows, rendered into the lookup expression as
+  literals.
 - B2/B3 ``select_bucket`` (bucket_manager.py:99-159) becomes a pure
   column-expression projection: per-row math with NO join, NO shuffle,
   NO UDF. The 1-NN aspect-ratio search (np.argmin at
-  bucket_manager.py:108-109) is an ``F.aggregate`` scan over the
-  literal reso array — whole-stage codegen keeps it JVM-side, and at
+  bucket_manager.py:108-109) is one parsed ``CASE``: an ``InSet`` probe
+  for an exact size, then a binary search over the sorted ratios that
+  compares the two bracketing entries (``_bucket_lookup_sql``). It has
+  no higher-order function, so whole-stage codegen compiles it, and at
   100 TB it scales embarrassingly (map-only).
 - B4 ``get_crop_ltrb`` (bucket_manager.py:161-179) is likewise a
   projection.
@@ -20,9 +23,9 @@ bucket_manager.py) Spark-first:
   reference itself settles on after ``sort()`` (bucket_manager.py:61-75).
 
 Tie-breaking parity notes:
-- np.argmin returns the FIRST minimal index; the aggregate scan keeps
-  the earlier element on ties (strict ``<``), over the same sorted
-  reso order.
+- np.argmin returns the FIRST minimal index; the lookup's final
+  comparison keeps the entry with the lower table index on ties
+  (strict ``<``), over the same sorted reso order.
 - ``int(x + 0.5)`` on positive floats == ``floor(x + 0.5)``.
 - All arithmetic is IEEE double / integer ops, bit-identical across
   engines; the DuckDB oracle (``bucket_oracle_sql``) embeds the exact
@@ -161,10 +164,65 @@ def crop_ltrb_py(bucket_w: int, bucket_h: int, img_w: int, img_h: int) -> tuple:
 # ---------------------------------------------------------------------------
 # Spark column expressions
 # ---------------------------------------------------------------------------
+def _sql_name(col: str) -> str:
+    return "`" + col.replace("`", "``") + "`"
+
+
 def _round_steps(x: Column, steps: int) -> Column:
     # Clamped to one step (see select_bucket_py.round_steps).
     r = F.floor(x + F.lit(0.5))
     return F.greatest(F.lit(steps), r - r % F.lit(steps))
+
+
+def _bucket_lookup_sql(w: str, h: str, ar: str, cfg: BucketConfig) -> str:
+    """One SQL expression for the upscale path's bucket (B2/B3) of the
+    SQL names ``w``, ``h`` and their double ratio ``ar``: a
+    ``struct<w int, h int>`` per row, ``(-1, -1)`` for a null dimension.
+
+    An exact-size hit is ``(w, h) IN (<table>)`` (an ``InSet``). Any
+    other size gets the first table entry nearest in aspect ratio
+    (np.argmin): a binary-search ``CASE`` over the distinct ratios in
+    ascending order, each kept with its lowest table index, that ends by
+    comparing the two ratios bracketing ``ar`` with the strict
+    ``abs(r_j - ar) < abs(r_i - ar)`` test (``i`` the lower index, so
+    ties go to it). Floating ``ar - r`` is monotone in ``r``, so no
+    entry beyond a bracketing one can be nearer, and none can tie with
+    it while the ratios are further apart than the rounding error of
+    ``ar - r`` (about 1e-15 * |ar|; 0.008 apart against |ar| < 2^31 for
+    the default table and int dimensions)."""
+    resos = make_bucket_resolutions(cfg)
+    first: dict[float, int] = {}
+    for i, (bw, bh) in enumerate(resos):
+        first.setdefault(bw / bh, i)
+    table = sorted(first.items())  # [(ratio, lowest table index)] by ratio
+
+    def entry(i: int) -> str:
+        return f"named_struct('w', {resos[i][0]}, 'h', {resos[i][1]})"
+
+    def nearer(k: int) -> str:  # the bracketing pair table[k], table[k + 1]
+        (ra, ia), (rb, ib) = sorted((table[k], table[k + 1]), key=lambda t: t[1])
+        return (
+            f"CASE WHEN abs({rb!r}D - {ar}) < abs({ra!r}D - {ar}) "
+            f"THEN {entry(ib)} ELSE {entry(ia)} END"
+        )
+
+    def search(lo: int, hi: int) -> str:  # pair k in [lo, hi] brackets ar
+        if lo == hi:
+            return nearer(lo)
+        mid = (lo + hi + 1) // 2
+        return (
+            f"CASE WHEN {ar} < {table[mid][0]!r}D "
+            f"THEN {search(lo, mid - 1)} ELSE {search(mid, hi)} END"
+        )
+
+    nearest = entry(table[0][1]) if len(table) == 1 else search(0, len(table) - 2)
+    pairs = ", ".join(f"({bw}, {bh})" for bw, bh in resos)
+    return (
+        f"CASE WHEN ({w}, {h}) IN ({pairs}) "
+        f"THEN named_struct('w', CAST({w} AS INT), 'h', CAST({h} AS INT)) "
+        f"WHEN {ar} IS NULL THEN named_struct('w', -1, 'h', -1) "
+        f"ELSE {nearest} END"
+    )
 
 
 def assign_bucket_columns(
@@ -175,102 +233,82 @@ def assign_bucket_columns(
 ) -> DataFrame:
     """Append bucket_w/bucket_h/resized_w/resized_h/ar_error/train_w/train_h.
 
-    Map-only: scales linearly with the scan; no shuffle, no UDF. The
-    predefined-reso table rides along as a literal array (≤ ~100 elems),
-    equivalent to a broadcast of the B1 table but cheaper (no join).
+    Map-only: scales linearly with the scan; no shuffle, no UDF and no
+    higher-order function. The upscale path is three parsed projections
+    that whole-stage codegen compiles: the ratio ``_ar``, the table
+    lookup (``_bucket_lookup_sql``: an ``InSet`` probe plus about six
+    comparisons per row), then the derived sizes. The lookup names
+    ``_ar`` some 120 times; as a column (which CollapseProject does not
+    inline into a multi-reference) it keeps small the expression that
+    every execution re-optimizes and re-generates.
     """
     cfg = cfg or BucketConfig()
+    if not cfg.no_upscale:
+        wq, hq = _sql_name(width_col), _sql_name(height_col)
+        bw, bh = "_bucket.w", "_bucket.h"
+        scale = (
+            f"CASE WHEN _ar > CAST({bw} AS DOUBLE) / CAST({bh} AS DOUBLE) "
+            f"THEN {bh} / CAST({hq} AS DOUBLE) ELSE {bw} / CAST({wq} AS DOUBLE) END"
+        )
+        return (
+            df.selectExpr("*", f"CAST({wq} AS DOUBLE) / CAST({hq} AS DOUBLE) AS _ar")
+            .selectExpr("*", f"{_bucket_lookup_sql(wq, hq, '_ar', cfg)} AS _bucket")
+            .selectExpr(
+                *map(_sql_name, df.columns),
+                f"{bw} AS bucket_w",
+                f"{bh} AS bucket_h",
+                f"CAST(floor(CAST({wq} AS DOUBLE) * {scale} + 0.5D) AS INT) AS resized_w",
+                f"CAST(floor(CAST({hq} AS DOUBLE) * {scale} + 0.5D) AS INT) AS resized_h",
+                f"CAST({bw} AS DOUBLE) / CAST({bh} AS DOUBLE) - _ar AS ar_error",
+                f"{bw} - {bw} % 8 AS train_w",
+                f"{bh} - {bh} % 8 AS train_h",
+            )
+        )
+
     w = F.col(width_col).cast("double")
     h = F.col(height_col).cast("double")
     ar = w / h
     steps = cfg.reso_steps
-
-    if not cfg.no_upscale:
-        resos = make_bucket_resolutions(cfg)
-        reso_arr = F.array(
-            *[
-                F.struct(
-                    F.lit(bw).alias("bw"),
-                    F.lit(bh).alias("bh"),
-                    F.lit(bw / bh).alias("ar"),  # python-float literal == np float64
-                )
-                for bw, bh in resos
-            ]
+    area_over = (F.col(width_col).cast("long") * F.col(height_col).cast("long")) > F.lit(
+        cfg.max_area
+    )
+    rw = F.sqrt(F.lit(float(cfg.max_area)) * ar)
+    rh = F.lit(float(cfg.max_area)) / rw
+    bwr = _round_steps(rw, steps)
+    bh_in_wr = _round_steps(bwr / ar, steps)
+    ar_wr = bwr / bh_in_wr
+    bhr = _round_steps(rh, steps)
+    bw_in_hr = _round_steps(bhr * ar, steps)
+    ar_hr = bw_in_hr / bhr
+    use_wr = F.abs(ar_wr - ar) < F.abs(ar_hr - ar)
+    resized_w = (
+        F.when(
+            area_over,
+            F.when(use_wr, bwr).otherwise(F.floor(bhr * ar + F.lit(0.5))),
         )
-        # 1-NN on aspect ratio: linear scan keeping the FIRST minimum
-        # (strict <), matching np.argmin over the sorted reso order.
-        init = F.struct(
-            F.lit(-1).alias("bw"), F.lit(-1).alias("bh"), F.lit(float("inf")).alias("err")
+        .otherwise(F.col(width_col))
+        .cast("int")
+    )
+    resized_h = (
+        F.when(
+            area_over,
+            F.when(use_wr, F.floor(bwr / ar + F.lit(0.5))).otherwise(bhr),
         )
-        best = F.aggregate(
-            reso_arr,
-            init,
-            lambda acc, x: F.when(
-                F.abs(x["ar"] - ar) < acc["err"],
-                F.struct(
-                    x["bw"].alias("bw"),
-                    x["bh"].alias("bh"),
-                    F.abs(x["ar"] - ar).alias("err"),
-                ),
-            ).otherwise(acc),
-        )
-        exact = F.exists(
-            reso_arr,
-            lambda x: (x["bw"] == F.col(width_col)) & (x["bh"] == F.col(height_col)),
-        )
-        bucket_w = F.when(exact, F.col(width_col)).otherwise(best["bw"]).cast("int")
-        bucket_h = F.when(exact, F.col(height_col)).otherwise(best["bh"]).cast("int")
-        ar_reso = bucket_w.cast("double") / bucket_h.cast("double")
-        scale = F.when(ar > ar_reso, bucket_h / h).otherwise(bucket_w / w)
-        resized_w = F.floor(w * scale + F.lit(0.5)).cast("int")
-        resized_h = F.floor(h * scale + F.lit(0.5)).cast("int")
-        out = (
-            df.withColumn("bucket_w", bucket_w)
-            .withColumn("bucket_h", bucket_h)
-            .withColumn("resized_w", resized_w)
-            .withColumn("resized_h", resized_h)
-        )
-    else:
-        area_over = (F.col(width_col).cast("long") * F.col(height_col).cast("long")) > F.lit(
-            cfg.max_area
-        )
-        rw = F.sqrt(F.lit(float(cfg.max_area)) * ar)
-        rh = F.lit(float(cfg.max_area)) / rw
-        bwr = _round_steps(rw, steps)
-        bh_in_wr = _round_steps(bwr / ar, steps)
-        ar_wr = bwr / bh_in_wr
-        bhr = _round_steps(rh, steps)
-        bw_in_hr = _round_steps(bhr * ar, steps)
-        ar_hr = bw_in_hr / bhr
-        use_wr = F.abs(ar_wr - ar) < F.abs(ar_hr - ar)
-        resized_w = (
-            F.when(
-                area_over,
-                F.when(use_wr, bwr).otherwise(F.floor(bhr * ar + F.lit(0.5))),
-            )
-            .otherwise(F.col(width_col))
-            .cast("int")
-        )
-        resized_h = (
-            F.when(
-                area_over,
-                F.when(use_wr, F.floor(bwr / ar + F.lit(0.5))).otherwise(bhr),
-            )
-            .otherwise(F.col(height_col))
-            .cast("int")
-        )
-        out = df.withColumn("resized_w", resized_w).withColumn("resized_h", resized_h)
-        out = out.withColumn(
-            "bucket_w",
-            F.greatest(
-                F.lit(steps), F.col("resized_w") - F.col("resized_w") % steps
-            ).cast("int"),
-        ).withColumn(
-            "bucket_h",
-            F.greatest(
-                F.lit(steps), F.col("resized_h") - F.col("resized_h") % steps
-            ).cast("int"),
-        )
+        .otherwise(F.col(height_col))
+        .cast("int")
+    )
+    out = df.withColumn("resized_w", resized_w).withColumn("resized_h", resized_h)
+    out = out.withColumn(
+        "bucket_w",
+        F.greatest(
+            F.lit(steps), F.col("resized_w") - F.col("resized_w") % steps
+        ).cast("int"),
+    ).withColumn(
+        "bucket_h",
+        F.greatest(
+            F.lit(steps), F.col("resized_h") - F.col("resized_h") % steps
+        ).cast("int"),
+    )
 
     return (
         out.withColumn(

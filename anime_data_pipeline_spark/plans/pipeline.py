@@ -40,10 +40,14 @@ class PipelineConfig:
 
 def bucketing_stage(images: DataFrame, cfg: BucketConfig) -> DataFrame:
     """Corrupt-row filter (P6, bucket_manager.py:219-221) + bucket
-    assignment (B2/B3) + train resolution (P4)."""
-    ok = images
+    assignment (B2/B3) + train resolution (P4).
+
+    Rows without a positive width and height are dropped like corrupt
+    ones: a zero side divides by zero under ANSI and fails the whole
+    run, and a null one would be written as bucket (-1, -1)."""
+    ok = images.filter((F.col("width") > 0) & (F.col("height") > 0))
     if "is_corrupt" in images.columns:
-        ok = images.filter(~F.coalesce(F.col("is_corrupt"), F.lit(False)))
+        ok = ok.filter(~F.coalesce(F.col("is_corrupt"), F.lit(False)))
     assigned = assign_bucket_columns(ok, cfg=cfg)
     # train_resolution derives from the SELECTED BUCKET reso, not the
     # original image size (bucket_manager.py:196: reso[0] - reso[0] % 8).

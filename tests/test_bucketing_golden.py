@@ -174,3 +174,39 @@ def test_full_input_lattice_three_way_parity(spark):
         ):
             bad.append(((r["width"], r["height"]), r, e))
     assert not bad, f"{len(bad)} Spark deviations, first: {bad[:3]}"
+
+
+def test_nearest_ratio_search_matches_spec_at_every_entry_and_midpoint(spark):
+    """The binary-search lookup against the linear argmin spec where it
+    can go wrong: at every table entry and at ±1 px around the midpoint
+    between each pair of adjacent sorted ratios, at several heights
+    (the midpoint is where the bracketing comparison flips)."""
+    cfg = BucketConfig()
+    resos = make_bucket_resolutions(cfg)
+    ratios = sorted({bw / bh for bw, bh in resos})
+    pairs = set(resos)
+    for h in (61, 256, 777, 1024, 1536, 4099):
+        for r in ratios:
+            pairs.update((round(r * h) + d, h) for d in (-1, 0, 1))
+        for a, b in zip(ratios, ratios[1:]):
+            mid = round((a + b) / 2 * h)
+            pairs.update((mid + d, h) for d in (-1, 0, 1))
+    pairs = sorted(pairs)
+    df = spark.createDataFrame(pairs, "width int, height int")
+    bad = []
+    for r in assign_bucket_columns(df, cfg=cfg).collect():
+        exp = select_bucket_py(r["width"], r["height"], cfg, resos)
+        if {k: r[k] for k in exp} != exp:
+            bad.append(((r["width"], r["height"]), exp))
+    assert not bad, f"{len(bad)} of {len(pairs)} deviate, first: {bad[:3]}"
+
+
+def test_null_dimension_buckets_to_minus_one(spark):
+    """A null width or height has no aspect ratio: the upscale lookup
+    gives bucket (-1, -1) and a null ar_error, as the linear scan did."""
+    df = spark.createDataFrame(
+        [(1, None, 5), (2, 5, None), (3, None, None)], "image_key int, width int, height int"
+    )
+    for r in assign_bucket_columns(df, cfg=BucketConfig()).collect():
+        assert (r["bucket_w"], r["bucket_h"]) == (-1, -1), r
+        assert r["ar_error"] is None and r["resized_h"] is None, r

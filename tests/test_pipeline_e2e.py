@@ -101,6 +101,59 @@ def test_aesthetic_last_write_wins(spark, fixture_dir):
     assert scores.count() == scores.select("image_id").distinct().count()
 
 
+def _scores(spark, files: list[str]) -> dict:
+    return {r["image_id"]: r["score"] for r in read_aesthetic_scores(spark, files).collect()}
+
+
+def test_aesthetic_files_are_matched_as_spark_names_them(spark, tmp_path):
+    """A file's priority is its last position in the list, matched to
+    the scan's ``_metadata.file_path``: an absolute path and a path
+    relative to the JVM's working directory, in a directory whose name
+    holds a space and a '%', and a file listed twice."""
+    d = tmp_path / "aes scores%20"
+    d.mkdir()
+    (d / "a.json").write_text(json.dumps([{"/x/img1_p0.jpg": 0.1}, {"/x/img2_p0.jpg": 0.2}]))
+    (d / "b.json").write_text(json.dumps([{"/x/img1_p1.jpg": 0.8}]))
+    a = str(d / "a.json")
+    b = os.path.relpath(d / "b.json", spark._jvm.System.getProperty("user.dir"))
+    assert _scores(spark, [a, b]) == {"img1": 0.8, "img2": 0.2}
+    assert _scores(spark, [b, a]) == {"img1": 0.1, "img2": 0.2}
+    assert _scores(spark, [a, b, a]) == {"img1": 0.1, "img2": 0.2}
+    # a glob matches files that are not in the list, whose priority is unknown
+    with pytest.raises(Exception, match="not in the list"):
+        _scores(spark, [str(d / "*.json")])
+
+
+def test_aesthetic_later_key_in_one_object_wins(spark, tmp_path):
+    """Two keys of one JSON object that normalise to one image_id: the
+    later key wins, as in the reference's dict rebuild."""
+    p = tmp_path / "multi.json"
+    p.write_text(json.dumps([
+        {"/x/img1_p0.jpg": 0.3, "/x/img1_p1.jpg": 0.6},
+        {"/x/img2_p1.jpg": 0.4, "/x/img2_p0.jpg": 0.1},
+    ]))
+    assert _scores(spark, [str(p)]) == {"img1": 0.6, "img2": 0.1}
+
+
+def test_ep1_drops_rows_without_positive_dims(spark, fixture_dir, images_df):
+    """Rows with a zero, negative or null side leave the output (a zero
+    side used to fail the run with DIVIDE_BY_ZERO, a null one to write
+    bucket (-1, -1)); every other row is unchanged."""
+    dims = [(5, 0), (0, 5), (None, 7), (7, None), (-3, 9), (0, 0)]
+    bad = derive_keys(spark.createDataFrame(
+        [(f"/data/img{i:03d}_p9.jpg", w, h, False) for i, (w, h) in enumerate(dims)],
+        "path string, width int, height int, is_corrupt boolean",
+    )).withColumnRenamed("path", "image_key")
+    sidecars = read_sidecar_tags(spark, os.path.join(fixture_dir, "sidecars"))
+    cfg = PipelineConfig(use_aesthetic=False)
+
+    def rows(images):
+        meta, _ = run_ep1(images, sidecars, None, VOCAB, cfg)
+        return {r["image_key"]: r.asDict(recursive=True) for r in meta.collect()}
+
+    assert rows(images_df.unionByName(bad)) == rows(images_df)
+
+
 def test_ep1_end_to_end(spark, fixture_dir, images_df):
     sidecars = read_sidecar_tags(spark, os.path.join(fixture_dir, "sidecars"))
     scores = read_aesthetic_scores(

@@ -771,3 +771,38 @@ def test_cc_releases_superseded_checkpoint_generations(spark):
     it = spark.sparkContext._jsc.getPersistentRDDs().entrySet().iterator()
     while it.hasNext():
         it.next().getValue().unpersist(False)
+
+
+def test_bucket_lookup_has_no_higher_order_function(spark):
+    """The upscale bucket lookup is code-generated: no aggregate/exists
+    lambda (every higher-order function is CodegenFallback) in the
+    optimized plan, and the exact-size hit is one hashed InSet probe."""
+    from anime_data_pipeline_spark.operators.bucketing import (
+        BucketConfig,
+        assign_bucket_columns,
+    )
+
+    df = spark.createDataFrame([(832, 1216)], "width int, height int")
+    plan = assign_bucket_columns(df, cfg=BucketConfig())._jdf.queryExecution().optimizedPlan()
+    text = plan.toString().lower()
+    for word in ("aggregate", "exists", "lambda"):
+        assert word not in text, (word, text)
+    assert text.count(" inset ") == 1, text
+
+
+def test_aesthetic_scores_are_one_scan_and_no_window(spark, tmp_path):
+    """Every score file is read by one text FileScan, and last-write-wins
+    is a hash aggregate, not a row_number window."""
+    import json
+
+    from anime_data_pipeline_spark.sources.aesthetic import read_aesthetic_scores
+
+    files = []
+    for i in range(3):
+        p = tmp_path / f"aes{i}.json"
+        p.write_text(json.dumps([{f"/d/img{i}_p0.jpg": 0.5}]))
+        files.append(str(p))
+    plan = plan_of(read_aesthetic_scores(spark, files))
+    assert len(re.findall(r"^\(\d+\) Scan text", plan, re.M)) == 1, plan
+    assert "Window" not in plan and "SortAggregate" not in plan, plan
+    assert "HashAggregate" in plan, plan
