@@ -83,6 +83,12 @@ def entry(spark: SparkSession) -> DataFrame:
 #     higher-order function (operators/bucketing) — every query whose
 #     closure imports it drifts: q21, q22, q23, q28, q115, q151, q177,
 #     q187 (8 more, 75 in all).
+# (8) the curation chain keys exact dedup on the native hash pair and
+#     carries one token-hash column to its n-gram folds; contamination
+#     is one outer-explode pass; the stop-word probes are parsed IN
+#     lists; bucketing_stage drops rows whose resized size overflows
+#     an int — every importer was already drifted; the set is
+#     unchanged (75).
 _CHANGED_THIS_ROUND: list[str] = [
     "q100_bloom_contamination",
     "q101_span_dedup",

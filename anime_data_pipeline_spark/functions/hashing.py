@@ -17,11 +17,19 @@ resumable pipelines at scale).
 This module is the one home of the family's Spark spellings: the char
 hash (:func:`polyhash`, :func:`polyhash_spark_expr`), the token split
 (:func:`tokens_spark_expr`; the Column form is ``functions.text.tokens``),
-the shingle fold (:func:`shingle_hashes_spark_expr`), the MinHash
-signature (:func:`minhash_signature_expr`) and the LSH band fold
+the per-token hash array (:func:`token_hashes_spark_expr`), the shingle
+fold (:func:`shingle_hashes_spark_expr`), the MinHash signature
+(:func:`minhash_signature_expr`) and the LSH band fold
 (:func:`band_values_expr`). The char hash and the shingle fold have
 DuckDB ``*_sql`` twins; the char hash also has the pure-Python
 :func:`polyhash_py`.
+
+Where no engine has to reproduce a hash value, only its equalities,
+Spark's native hashes are the cheaper choice: the curation chain keys
+exact dedup on ``xxhash64(text)`` + ``hash(text)`` (code-generated),
+and computes each document's token-hash array once, carrying it as a
+column to every shingle fold that needs it (``th_col`` on
+``operators/dedup``'s shingle consumers).
 """
 
 from __future__ import annotations

@@ -174,6 +174,14 @@ def _round_steps(x: Column, steps: int) -> Column:
     return F.greatest(F.lit(steps), r - r % F.lit(steps))
 
 
+def _ratio_table(resos: list[tuple[int, int]]) -> list[tuple[float, int]]:
+    """[(ratio, lowest table index)] of the distinct ratios, by ratio."""
+    first: dict[float, int] = {}
+    for i, (bw, bh) in enumerate(resos):
+        first.setdefault(bw / bh, i)
+    return sorted(first.items())
+
+
 def _bucket_lookup_sql(w: str, h: str, ar: str, cfg: BucketConfig) -> str:
     """One SQL expression for the upscale path's bucket (B2/B3) of the
     SQL names ``w``, ``h`` and their double ratio ``ar``: a
@@ -191,10 +199,7 @@ def _bucket_lookup_sql(w: str, h: str, ar: str, cfg: BucketConfig) -> str:
     ``ar - r`` (about 1e-15 * |ar|; 0.008 apart against |ar| < 2^31 for
     the default table and int dimensions)."""
     resos = make_bucket_resolutions(cfg)
-    first: dict[float, int] = {}
-    for i, (bw, bh) in enumerate(resos):
-        first.setdefault(bw / bh, i)
-    table = sorted(first.items())  # [(ratio, lowest table index)] by ratio
+    table = _ratio_table(resos)
 
     def entry(i: int) -> str:
         return f"named_struct('w', {resos[i][0]}, 'h', {resos[i][1]})"
@@ -265,6 +270,39 @@ def assign_bucket_columns(
             )
         )
 
+    resized_w, resized_h = _no_upscale_resized(width_col, height_col, cfg)
+    steps = cfg.reso_steps
+    out = df.withColumn("resized_w", resized_w.cast("int")).withColumn(
+        "resized_h", resized_h.cast("int")
+    )
+    out = out.withColumn(
+        "bucket_w",
+        F.greatest(
+            F.lit(steps), F.col("resized_w") - F.col("resized_w") % steps
+        ).cast("int"),
+    ).withColumn(
+        "bucket_h",
+        F.greatest(
+            F.lit(steps), F.col("resized_h") - F.col("resized_h") % steps
+        ).cast("int"),
+    )
+
+    ar = F.col(width_col).cast("double") / F.col(height_col).cast("double")
+    return (
+        out.withColumn(
+            "ar_error",
+            F.col("bucket_w").cast("double") / F.col("bucket_h").cast("double") - ar,
+        )
+        .withColumn("train_w", (F.col("bucket_w") - F.col("bucket_w") % 8).cast("int"))
+        .withColumn("train_h", (F.col("bucket_h") - F.col("bucket_h") % 8).cast("int"))
+    )
+
+
+def _no_upscale_resized(
+    width_col: str, height_col: str, cfg: BucketConfig
+) -> tuple[Column, Column]:
+    """The no-upscale path's resized (w, h) as bigint, before the cast
+    to int."""
     w = F.col(width_col).cast("double")
     h = F.col(height_col).cast("double")
     ar = w / h
@@ -281,42 +319,55 @@ def assign_bucket_columns(
     bw_in_hr = _round_steps(bhr * ar, steps)
     ar_hr = bw_in_hr / bhr
     use_wr = F.abs(ar_wr - ar) < F.abs(ar_hr - ar)
-    resized_w = (
-        F.when(
-            area_over,
-            F.when(use_wr, bwr).otherwise(F.floor(bhr * ar + F.lit(0.5))),
-        )
-        .otherwise(F.col(width_col))
-        .cast("int")
-    )
-    resized_h = (
-        F.when(
-            area_over,
-            F.when(use_wr, F.floor(bwr / ar + F.lit(0.5))).otherwise(bhr),
-        )
-        .otherwise(F.col(height_col))
-        .cast("int")
-    )
-    out = df.withColumn("resized_w", resized_w).withColumn("resized_h", resized_h)
-    out = out.withColumn(
-        "bucket_w",
-        F.greatest(
-            F.lit(steps), F.col("resized_w") - F.col("resized_w") % steps
-        ).cast("int"),
-    ).withColumn(
-        "bucket_h",
-        F.greatest(
-            F.lit(steps), F.col("resized_h") - F.col("resized_h") % steps
-        ).cast("int"),
-    )
+    resized_w = F.when(
+        area_over,
+        F.when(use_wr, bwr).otherwise(F.floor(bhr * ar + F.lit(0.5))),
+    ).otherwise(F.col(width_col))
+    resized_h = F.when(
+        area_over,
+        F.when(use_wr, F.floor(bwr / ar + F.lit(0.5))).otherwise(bhr),
+    ).otherwise(F.col(height_col))
+    return resized_w, resized_h
 
-    return (
-        out.withColumn(
-            "ar_error",
-            F.col("bucket_w").cast("double") / F.col("bucket_h").cast("double") - ar,
-        )
-        .withColumn("train_w", (F.col("bucket_w") - F.col("bucket_w") % 8).cast("int"))
-        .withColumn("train_h", (F.col("bucket_h") - F.col("bucket_h") % 8).cast("int"))
+
+_INT_MAX = 2**31 - 1
+
+
+def bucketable(
+    width_col: str = "width",
+    height_col: str = "height",
+    cfg: BucketConfig | None = None,
+) -> Column:
+    """True for the rows :func:`assign_bucket_columns` can place: a
+    positive width and height whose resized size fits an int. False
+    otherwise, where a zero side divides by zero and an oversized
+    resized side overflows the int cast, either of which raises under
+    ANSI and fails the whole job.
+
+    No-upscale: the resized size itself, before the cast. Upscale: only
+    a ratio beyond the table's range can overflow (the nearest bucket's
+    scale keeps any ratio inside it within the largest bucket side
+    times the largest ratio), and there the bucket is the extreme entry
+    of ``_bucket_lookup_sql``, so its resized side is spelled with that
+    entry's literal — exactly the arithmetic of the lookup path, with no
+    lookup."""
+    cfg = cfg or BucketConfig()
+    if cfg.no_upscale:
+        rw, rh = _no_upscale_resized(width_col, height_col, cfg)
+        positive = (F.col(width_col) > 0) & (F.col(height_col) > 0)
+        return F.when(positive, (rw <= _INT_MAX) & (rh <= _INT_MAX)).otherwise(False)
+    resos = make_bucket_resolutions(cfg)
+    table = _ratio_table(resos)
+    (r_min, i_min), (r_max, i_max) = table[0], table[-1]
+    wq, hq = _sql_name(width_col), _sql_name(height_col)
+    wd, hd = f"CAST({wq} AS DOUBLE)", f"CAST({hq} AS DOUBLE)"
+    return F.expr(
+        f"CASE WHEN {wq} > 0 AND {hq} > 0 THEN "
+        f"CASE WHEN {wd} / {hd} > {r_max!r}D "
+        f"THEN floor({wd} * ({resos[i_max][1]} / {hd}) + 0.5D) <= {_INT_MAX} "
+        f"WHEN {wd} / {hd} < {r_min!r}D "
+        f"THEN floor({hd} * ({resos[i_min][0]} / {wd}) + 0.5D) <= {_INT_MAX} "
+        "ELSE true END ELSE false END"
     )
 
 

@@ -57,6 +57,8 @@ def shingle_hash_sets(
     text_col: str,
     n: int = 3,
     carry: tuple[str, ...] = (),
+    *,
+    th_col: str | None = None,
 ) -> DataFrame:
     """(doc, [carry...], hashes) — distinct n-token shingle hashes per
     document; ``carry`` columns ride through the projection (so callers
@@ -65,6 +67,10 @@ def shingle_hash_sets(
     Tokens are hashed once per row (materialized column), then shingle
     hashes are folded from the token-hash array in O(n) each — the
     hot-path cost is linear in tokens, not shingle characters.
+    ``th_col`` names a column of ``df`` that already holds that array
+    (``token_hashes_spark_expr(tokens_spark_expr(text_col))``); it
+    must be materialized (a persisted or projected column), and the
+    text is then not split again. ``None`` hashes ``text_col`` here.
 
     Both projections are rendered as ONE ``F.expr`` string each: the
     Column-API spelling costs a py4j round-trip per lambda/element
@@ -73,13 +79,12 @@ def shingle_hash_sets(
     while the parsed SQL produces the identical integer-math Catalyst
     nodes.
     """
-    th = token_hashes_spark_expr(tokens_spark_expr(text_col))
-    sh = f"array_distinct({shingle_hashes_spark_expr('_th', n)})"
-    return df.select(
-        F.col(id_col).alias("doc"),
-        *[F.col(c) for c in carry],
-        F.expr(th).alias("_th"),
-    ).select("doc", *carry, F.expr(sh).alias("hashes"))
+    if th_col is None:
+        th = token_hashes_spark_expr(tokens_spark_expr(text_col))
+        df = df.select(F.col(id_col).alias("doc"), *carry, F.expr(th).alias("_th"))
+        id_col, th_col = "doc", "_th"
+    sh = f"array_distinct({shingle_hashes_spark_expr(f'`{th_col}`', n)})"
+    return df.select(F.col(id_col).alias("doc"), *carry, F.expr(sh).alias("hashes"))
 
 
 def band_candidates(hashed: DataFrame, bands: int, rows: int) -> DataFrame:
@@ -170,16 +175,19 @@ def minhash_lsh_pairs(
     k: int = 12,
     bands: int = 4,
     threshold: float = 0.5,
+    *,
+    th_col: str | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs (id_a < id_b) with exact verified Jaccard.
 
     Plan shape: map (shingle+sign) → explode bands → self-equi-join on
     (band_idx, band_value) → distinct candidate pairs → join back the
     shingle-hash sets → exact Jaccard filter. Sub-quadratic: only
-    bucket-colliding pairs are ever compared.
+    bucket-colliding pairs are ever compared. ``th_col``: a
+    precomputed token-hash column, as in :func:`shingle_hash_sets`.
     """
     rows = k // bands
-    hashed = shingle_hash_sets(df, id_col, text_col, n).withColumn(
+    hashed = shingle_hash_sets(df, id_col, text_col, n, th_col=th_col).withColumn(
         "sig", minhash_signature_expr("hashes", k)
     )
     # The signature table is consumed four times (both band-join sides +
@@ -671,6 +679,8 @@ def benchmark_contamination(
     text_col: str,
     n: int = 8,
     min_overlap: float = 0.0,
+    *,
+    th_col: str | None = None,
 ) -> DataFrame:
     """Benchmark-contamination check (the pre-training hygiene pass:
     Brown et al. 2020 §C, Touvron et al. 2023 §5.1 measure train/eval
@@ -680,27 +690,28 @@ def benchmark_contamination(
 
     Scale shape: the benchmark shingle universe (eval suites are tiny —
     MBs against a 100 TB corpus) collapses to a distinct 8-byte-hash
-    set and BROADCASTS; corpus docs explode to (doc, shingle) rows and
-    the hit count is one partial-aggregated groupBy after a map-side
-    broadcast join — the corpus is never shuffled on text. Returns
-    (doc, n_shingles, n_hits, overlap_frac) for every corpus doc with
-    overlap_frac >= ``min_overlap`` (0.0 = report all)."""
-    c = shingle_hash_sets(corpus, id_col, text_col, n)
+    set and BROADCASTS; corpus docs are shingled once and explode to
+    (doc, n_shingles, shingle) rows — ``explode_outer``, so a document
+    without shingles keeps one row — and the hit count is one
+    partial-aggregated groupBy after a map-side broadcast left join —
+    the corpus is never shuffled on text. ``th_col``: a precomputed
+    token-hash column of ``corpus``, as in :func:`shingle_hash_sets`.
+    Returns (doc, n_shingles, n_hits, overlap_frac) for every corpus doc
+    (ids unique) with overlap_frac >= ``min_overlap`` (0.0 = report
+    all)."""
+    c = shingle_hash_sets(corpus, id_col, text_col, n, th_col=th_col)
     bench_universe = (
         shingle_hash_sets(bench, id_col, text_col, n)
-        .select(F.explode("hashes").alias("sh"))
+        .select(F.explode("hashes").alias("_bsh"))
         .distinct()
     )
-    exploded = c.select("doc", F.explode("hashes").alias("sh"))
-    hits = (
-        exploded.join(F.broadcast(bench_universe), "sh")
-        .groupBy("doc")
-        .agg(F.count(F.lit(1)).alias("n_hits"))
+    exploded = c.select(
+        "doc", F.size("hashes").alias("n_shingles"), F.explode_outer("hashes").alias("sh")
     )
     return (
-        c.select("doc", F.size("hashes").alias("n_shingles"))
-        .join(hits, "doc", "left")
-        .withColumn("n_hits", F.coalesce(F.col("n_hits"), F.lit(0)))
+        exploded.join(F.broadcast(bench_universe), F.col("sh") == F.col("_bsh"), "left")
+        .groupBy("doc", "n_shingles")
+        .agg(F.count("_bsh").alias("n_hits"))
         .withColumn(
             "overlap_frac",
             F.col("n_hits") / F.greatest(F.col("n_shingles"), F.lit(1)),

@@ -11,7 +11,7 @@ mirrored in DuckDB SQL for the oracle gate.
 - quality scoring: length, token-length, punctuation/digit/stopword
   ratios folded into one composite score (Gopher/C4-style filters)
 - language ID: function-word profile matching (the trigram-free n=1
-  heuristic; profiles are literal arrays broadcast into the expression)
+  heuristic; each profile is a literal ``IN`` list in the expression)
 - fingerprinting: winnowing (Schleimer et al., SIGMOD'03) over rolling
   token-hash k-grams — the standard local document fingerprint.
 """
@@ -27,6 +27,7 @@ from anime_data_pipeline_spark.functions.hashing import (
     tokens_spark_expr,
 )
 from anime_data_pipeline_spark.functions.text import tokens, tokens_sql
+from anime_data_pipeline_spark.operators.tags import sql_str
 
 # Engine-portable "BPE-ish" pre-tokenizer: letter runs, digit runs,
 # single symbols. (Same regex text is valid in Java and RE2/DuckDB.)
@@ -69,9 +70,12 @@ def _count_class_sql(expr: str, char_class: str) -> str:
     return f"(length({expr}) - length(regexp_replace({expr}, '{char_class}', '', 'g')))"
 
 
-def _stop_hits(toks: Column, profile: tuple[str, ...]) -> Column:
-    lit_profile = F.array(*[F.lit(w) for w in profile])
-    return F.size(F.filter(toks, lambda t: F.array_contains(lit_profile, t)))
+def _stop_hits(toks: str, profile: tuple[str, ...]) -> Column:
+    """Tokens of the array column ``toks`` that are in ``profile``: one
+    parsed ``t IN (...)`` probe per token, not a scan of a literal
+    array built over py4j."""
+    words = ", ".join(sql_str(w) for w in profile)
+    return F.expr(f"size(filter(`{toks}`, t -> t IN ({words})))")
 
 
 def _stop_hits_sql(toks_expr: str, profile: tuple[str, ...]) -> str:
@@ -97,7 +101,7 @@ def quality_columns(df: DataFrame, text_col: str) -> DataFrame:
     digits = _count_class(text, "[0-9]").cast("double") / F.greatest(
         F.length(text), F.lit(1)
     )
-    stop_ratio = _stop_hits(toks, STOPWORDS).cast("double") / F.greatest(
+    stop_ratio = _stop_hits("_q_toks", STOPWORDS).cast("double") / F.greatest(
         F.size(toks), F.lit(1)
     )
     mean_tok_len = n_chars.cast("double") / F.greatest(n_tokens, F.lit(1))
@@ -159,9 +163,8 @@ def language_id(df: DataFrame, text_col: str) -> DataFrame:
     """Predicted language by function-word profile hit count; ties go to
     the first language in fixed profile order; zero hits → 'und'."""
     df = df.withColumn("_l_toks", tokens(F.col(text_col)))
-    toks = F.col("_l_toks")
     for lang, profile in LANG_PROFILES.items():
-        df = df.withColumn(f"_hits_{lang}", _stop_hits(toks, profile))
+        df = df.withColumn(f"_hits_{lang}", _stop_hits("_l_toks", profile))
     best = F.greatest(*[F.col(f"_hits_{lang}") for lang in LANG_PROFILES])
     pred = F.lit("und")
     for lang in reversed(list(LANG_PROFILES)):

@@ -17,7 +17,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from anime_data_pipeline_spark.functions.hashing import polyhash
+from anime_data_pipeline_spark.functions.hashing import (
+    token_hashes_spark_expr,
+    tokens_spark_expr,
+)
 from anime_data_pipeline_spark.operators.dedup import minhash_lsh_pairs
 from anime_data_pipeline_spark.operators.textstats import quality_columns
 
@@ -164,13 +167,17 @@ def _dedup(
     jaccard_threshold: float,
 ) -> DataFrame:
     """The dedup steps both curation entry points share: exact dedup on
-    a content-hash pair, then MinHash-LSH near-dup removal.
+    a content-hash pair, then MinHash-LSH near-dup removal. Returns the
+    survivors with one extra column, ``_th``: each document's token-hash
+    array, which the caller drops before returning.
 
-    Exact dedup keeps the min-id row per content-hash PAIR. Two
-    independent polynomial hashes (base 31 + 37) push the per-pair
-    false-collapse probability from ~1/P to ~1/P² (≈1e-18) — a single
-    ~2^30 hash silently drops ~N²/2P unrelated docs at corpus scale.
-    The shuffle key stays two 8-byte ints, never the text payload.
+    Exact dedup keeps the min-id row per content-hash PAIR: Spark's
+    native ``xxhash64(text)`` and ``hash(text)`` (Murmur3), 64 + 32
+    independent bits. Both are code-generated, where a per-character
+    polynomial fold is an interpreted higher-order function, and two
+    distinct texts share a group only if both hashes collide (~2^-96
+    per pair, against ~2^-60 for two base-31/37 polynomial hashes mod
+    P). The shuffle key stays two ints, never the text payload.
 
     Near-dup policy: for every verified pair (id_a < id_b) the LARGER
     id is dropped — greedy, deterministic, one anti-join.
@@ -179,20 +186,24 @@ def _dedup(
     build and the anti-join left side) and its lineage holds the
     caller's scoring expression forest plus the dedup window — it is
     persisted rather than recomputed per consumer. At 100 TB this is
-    the stage boundary you'd parquet-checkpoint.
+    the stage boundary you'd parquet-checkpoint. ``_th`` is computed
+    once, after the keeper window (so neither the shuffle nor the
+    duplicates carry it), and rides the persist: the n-gram folds of
+    the LSH stage here and of the caller's contamination stage read it
+    instead of splitting and hashing the text again.
     """
-    hashed = kept.withColumn("_ch", polyhash(F.col(text_col))).withColumn(
-        "_ch2", polyhash(F.col(text_col), 37)
-    )
-    keeper = F.min(id_col).over(W.partitionBy("_ch", "_ch2"))
+    text = F.col(text_col)
+    keeper = F.min(id_col).over(W.partitionBy(F.xxhash64(text), F.hash(text)))
     uniq = (
-        hashed.withColumn("_keeper", keeper)
+        kept.withColumn("_keeper", keeper)
         .filter(F.col(id_col) == F.col("_keeper"))
-        .drop("_ch", "_ch2", "_keeper")
+        .drop("_keeper")
+        .withColumn("_th", F.expr(token_hashes_spark_expr(tokens_spark_expr(text_col))))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     pairs = minhash_lsh_pairs(
-        uniq, id_col, text_col, n=n, k=k, bands=bands, threshold=jaccard_threshold
+        uniq, id_col, text_col, n=n, k=k, bands=bands, threshold=jaccard_threshold,
+        th_col="_th",
     )
     losers = pairs.select(F.col("id_b").alias(id_col)).distinct()
     return uniq.join(losers, id_col, "left_anti")
@@ -231,11 +242,11 @@ def curate_corpus(
     scored = quality_columns(ensure_map_parallelism(df), text_col)
     # Project before the exchange (same discipline as
     # prepare_pretraining_corpus): the keeper window shuffles whole
-    # rows by (_ch, _ch2); every consumer of the curated corpus (q35's
-    # projection, the LSH signature build, the recall/editdist tests)
-    # reads only (id, text, n_tokens, quality_score), so the other six
-    # scored ratio columns are dead weight through the shuffle and the
-    # persisted survivor set. Input columns pass through; the two
+    # rows by their content hashes; every consumer of the curated
+    # corpus (q35's projection, the LSH signature build, the
+    # recall/editdist tests) reads only (id, text, n_tokens,
+    # quality_score), so the other six scored ratio columns are dead
+    # weight through the shuffle and the persisted survivor set. Input columns pass through; the two
     # explicitly re-selected quality outputs are excluded from them so
     # an input already carrying n_tokens/quality_score cannot project a
     # duplicate name (any other same-named input column, e.g.
@@ -246,7 +257,7 @@ def curate_corpus(
     kept = scored.filter(F.col("quality_score") >= quality_threshold).select(
         id_col, text_col, *other, "n_tokens", "quality_score"
     )
-    return _dedup(kept, id_col, text_col, n, k, bands, jaccard_threshold)
+    return _dedup(kept, id_col, text_col, n, k, bands, jaccard_threshold).drop("_th")
 
 
 def prepare_pretraining_corpus(
@@ -291,10 +302,10 @@ def prepare_pretraining_corpus(
         language_id(ensure_map_parallelism(docs), text_col), text_col
     )
     # Project before the exchange: the dedup window shuffles whole
-    # rows by (_ch, _ch2), and everything past the quality gate needs
-    # only (id, group, text) plus the token count the packing stage
-    # consumes — which quality_columns already computed (``n_tokens``
-    # IS ws_token_count's expression). Carrying the 8-byte count
+    # rows by their content hashes, and everything past the quality
+    # gate needs only (id, group, text) plus the token count the
+    # packing stage consumes — which quality_columns already computed
+    # (``n_tokens`` IS ws_token_count's expression). Carrying the 8-byte count
     # instead of re-tokenizing the survivors at the packing stage, and
     # dropping the other 9 scored columns, shrinks every downstream
     # shuffle and the persisted stage boundaries.
@@ -311,7 +322,9 @@ def prepare_pretraining_corpus(
     )
 
     contaminated = (
-        benchmark_contamination(survivors, bench, id_col, text_col, n=contam_n)
+        benchmark_contamination(
+            survivors, bench, id_col, text_col, n=contam_n, th_col="_th"
+        )
         .filter(F.col("n_hits") > 0)
         .select(F.col("doc").alias(id_col))
     )

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from anime_data_pipeline_spark.operators.bucketing import (
     BucketConfig,
     assign_bucket_columns,
+    bucketable,
 )
 from anime_data_pipeline_spark.operators.tags import novelai_order_df
 
@@ -42,10 +43,12 @@ def bucketing_stage(images: DataFrame, cfg: BucketConfig) -> DataFrame:
     """Corrupt-row filter (P6, bucket_manager.py:219-221) + bucket
     assignment (B2/B3) + train resolution (P4).
 
-    Rows without a positive width and height are dropped like corrupt
-    ones: a zero side divides by zero under ANSI and fails the whole
-    run, and a null one would be written as bucket (-1, -1)."""
-    ok = images.filter((F.col("width") > 0) & (F.col("height") > 0))
+    Rows without a positive width and height, or whose resized size
+    does not fit an int, are dropped like corrupt ones: a zero side
+    divides by zero and an oversized one overflows the int cast, either
+    of which fails the whole run under ANSI, and a null side would be
+    written as bucket (-1, -1)."""
+    ok = images.filter(bucketable(cfg=cfg))
     if "is_corrupt" in images.columns:
         ok = ok.filter(~F.coalesce(F.col("is_corrupt"), F.lit(False)))
     assigned = assign_bucket_columns(ok, cfg=cfg)

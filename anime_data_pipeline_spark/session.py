@@ -91,6 +91,10 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        # The curation chain alone generates more classes than the
+        # default 100-entry codegen cache holds, so every rerun in one
+        # session recompiled about half of them.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # InferFiltersFromGenerate turns explode(computed_array) into a
         # pushed-down size()>0 filter whose predicate INLINES the whole
         # array expression once per element_at reference — measured 16×

@@ -48,6 +48,11 @@ def _file_priorities(spark: SparkSession, files: list[str]) -> dict[str, tuple[i
     return out
 
 
+def _glob_escape(path: str) -> str:
+    """``path`` as a Hadoop glob pattern that matches only itself."""
+    return "".join("\\" + c if c in "\\[]{}*?" else c for c in path)
+
+
 def read_aesthetic_scores(spark: SparkSession, files: list[str]) -> DataFrame:
     """(image_id, score), deduped last-write-wins by (file order, entry
     order within file). ``files`` order = the reference's CLI order; a
@@ -55,8 +60,10 @@ def read_aesthetic_scores(spark: SparkSession, files: list[str]) -> DataFrame:
     prio = _file_priorities(spark, files)
     whens = " ".join(f"WHEN {sql_str(k)} THEN {i}" for k, (i, _) in prio.items())
     # Top-level JSON arrays of maps aren't directly readable with a Map
-    # schema, so each file is one wholetext row, from_json-parsed.
-    txt = spark.read.text([f for _, f in prio.values()], wholetext=True)
+    # schema, so each file is one wholetext row, from_json-parsed. The
+    # reader globs every path, so glob metacharacters are escaped to
+    # read each file as itself.
+    txt = spark.read.text([_glob_escape(f) for _, f in prio.values()], wholetext=True)
     entries = txt.selectExpr(
         f"CASE _metadata.file_path {whens} ELSE raise_error("
         "concat('aesthetic score file not in the list: ', _metadata.file_path)) END AS file_idx",

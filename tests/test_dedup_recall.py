@@ -257,3 +257,48 @@ def test_leakage_safe_split_never_splits_a_component(spark, sf_dir):
     assert counts.get("train", 0) / total > 0.8
     assert 0 < counts.get("val", 0) / total < 0.12
     assert 0 < counts.get("test", 0) / total < 0.12
+
+
+def test_exact_dedup_groups_exactly_like_text_equality(spark):
+    """The native (xxhash64, hash) key groups hostile texts exactly as
+    text equality does: '' against ' ' and against '\\x00' (equal under
+    both polynomial hashes), non-ASCII text, the base-31 collision
+    'XY'/'Y:', letter case, and one text under three ids, which keeps
+    its smallest id. No shingle is shared, so only exact dedup drops
+    rows. The token-hash column the chain carries stays internal."""
+    texts = ["", " ", "\x00", "héllo wörld", "日本語 テキスト", "XY", "Y:",
+             "same text", "Same text", "same text", "same text"]
+    corpus = spark.createDataFrame(
+        list(enumerate(texts, start=1)), "doc_id long, text string"
+    )
+    curated = curate_corpus(corpus, "doc_id", "text", quality_threshold=0.0)
+    assert curated.columns == ["doc_id", "text", "n_tokens", "quality_score"]
+    keepers = {}
+    for i, t in enumerate(texts, start=1):
+        keepers.setdefault(t, i)
+    assert sorted(r["doc_id"] for r in curated.collect()) == sorted(keepers.values())
+    spark.catalog.clearCache()
+
+
+def test_document_without_shingles_keeps_zero_hits(spark):
+    """benchmark_contamination reports a document with no n-gram
+    shingle (fewer than n tokens, or none) with n_hits = 0, whether it
+    hashes the text itself or reads a precomputed token-hash column."""
+    from anime_data_pipeline_spark.functions.hashing import (
+        token_hashes_spark_expr,
+        tokens_spark_expr,
+    )
+    from anime_data_pipeline_spark.operators.dedup import benchmark_contamination
+
+    corpus = spark.createDataFrame(
+        [(1, "two words"), (2, ""), (3, "the cat sat on the mat")],
+        "doc_id long, text string",
+    )
+    bench = spark.createDataFrame([(9, "the cat sat on")], "doc_id long, text string")
+    expected = {1: (0, 0, 0.0), 2: (0, 0, 0.0), 3: (4, 2, 0.5)}
+    th = corpus.withColumn("_th", F.expr(token_hashes_spark_expr(tokens_spark_expr("text"))))
+    for df, th_col in ((corpus, None), (th, "_th")):
+        out = benchmark_contamination(df, bench, "doc_id", "text", n=3, th_col=th_col)
+        assert out.columns == ["doc", "n_shingles", "n_hits", "overlap_frac"]
+        got = {r["doc"]: (r["n_shingles"], r["n_hits"], r["overlap_frac"]) for r in out.collect()}
+        assert got == expected, th_col

@@ -128,7 +128,8 @@ def test_exact_dup_survives_single_hash_collision(spark):
     (both 31·c1+c2 = 2817) but differ under base 37 — a single-hash
     exact stage would falsely drop the batch doc; the dual-hash join
     must keep it (its shingle sets share nothing, so no near_dup
-    either). The same dual-hash keeper window protects curate_corpus."""
+    either). curate_corpus keys its exact dedup on the native
+    (xxhash64, hash) pair instead, which tells the two apart too."""
     from anime_data_pipeline_spark.functions.hashing import polyhash_py
     from anime_data_pipeline_spark.operators.dedup import incremental_dedup_status
     from anime_data_pipeline_spark.plans.curation import curate_corpus

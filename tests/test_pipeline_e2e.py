@@ -109,7 +109,8 @@ def test_aesthetic_files_are_matched_as_spark_names_them(spark, tmp_path):
     """A file's priority is its last position in the list, matched to
     the scan's ``_metadata.file_path``: an absolute path and a path
     relative to the JVM's working directory, in a directory whose name
-    holds a space and a '%', and a file listed twice."""
+    holds a space and a '%', a file listed twice, and names holding
+    glob metacharacters, which are read as themselves."""
     d = tmp_path / "aes scores%20"
     d.mkdir()
     (d / "a.json").write_text(json.dumps([{"/x/img1_p0.jpg": 0.1}, {"/x/img2_p0.jpg": 0.2}]))
@@ -119,9 +120,13 @@ def test_aesthetic_files_are_matched_as_spark_names_them(spark, tmp_path):
     assert _scores(spark, [a, b]) == {"img1": 0.8, "img2": 0.2}
     assert _scores(spark, [b, a]) == {"img1": 0.1, "img2": 0.2}
     assert _scores(spark, [a, b, a]) == {"img1": 0.1, "img2": 0.2}
-    # a glob matches files that are not in the list, whose priority is unknown
-    with pytest.raises(Exception, match="not in the list"):
-        _scores(spark, [str(d / "*.json")])
+    (d / "a[1]{x}?.json").write_text(json.dumps([{"/x/img1_p2.jpg": 0.5}]))
+    (d / "*.json").write_text(json.dumps([{"/x/img3_p0.jpg": 0.3}]))
+    odd = os.path.relpath(d / "a[1]{x}?.json", spark._jvm.System.getProperty("user.dir"))
+    assert _scores(spark, [a, odd]) == {"img1": 0.5, "img2": 0.2}
+    assert _scores(spark, [odd, a]) == {"img1": 0.1, "img2": 0.2}
+    # "*.json" names one file, not every file in the directory
+    assert _scores(spark, [str(d / "*.json")]) == {"img3": 0.3}
 
 
 def test_aesthetic_later_key_in_one_object_wins(spark, tmp_path):
@@ -138,20 +143,44 @@ def test_aesthetic_later_key_in_one_object_wins(spark, tmp_path):
 def test_ep1_drops_rows_without_positive_dims(spark, fixture_dir, images_df):
     """Rows with a zero, negative or null side leave the output (a zero
     side used to fail the run with DIVIDE_BY_ZERO, a null one to write
-    bucket (-1, -1)); every other row is unchanged."""
+    bucket (-1, -1)), and so do rows whose resized size overflows an
+    int (a 2^31-1 side against 1 used to fail it with CAST_OVERFLOW),
+    on the upscale and the no-upscale path. The cut is exact: on either
+    side of each path's overflow boundary a row stays exactly when the
+    reference's resized size fits an int, with the reference's values;
+    every other row is unchanged."""
+    big, lim = 2**31 - 1, 2**31 - 1
     dims = [(5, 0), (0, 5), (None, 7), (7, None), (-3, 9), (0, 0)]
-    bad = derive_keys(spark.createDataFrame(
-        [(f"/data/img{i:03d}_p9.jpg", w, h, False) for i, (w, h) in enumerate(dims)],
-        "path string, width int, height int, is_corrupt boolean",
-    )).withColumnRenamed("path", "image_key")
+    huge = [(big, 1), (1, big), (big, big)] + [
+        d for w in (2**23 - 1, 2**23, 2**25 - 1, 2**25) for d in ((w, 1), (1, w))
+    ]
+
+    def images(dims, first):
+        return derive_keys(spark.createDataFrame(
+            [(f"/data/img{first + i:03d}_p9.jpg", w, h, False) for i, (w, h) in enumerate(dims)],
+            "path string, width int, height int, is_corrupt boolean",
+        )).withColumnRenamed("path", "image_key")
+
     sidecars = read_sidecar_tags(spark, os.path.join(fixture_dir, "sidecars"))
-    cfg = PipelineConfig(use_aesthetic=False)
+    for no_upscale in (False, True):
+        cfg = PipelineConfig(bucket=BucketConfig(no_upscale=no_upscale), use_aesthetic=False)
 
-    def rows(images):
-        meta, _ = run_ep1(images, sidecars, None, VOCAB, cfg)
-        return {r["image_key"]: r.asDict(recursive=True) for r in meta.collect()}
+        def rows(images):
+            meta, _ = run_ep1(images, sidecars, None, VOCAB, cfg)
+            return {r["image_key"]: r.asDict(recursive=True) for r in meta.collect()}
 
-    assert rows(images_df.unionByName(bad)) == rows(images_df)
+        assert rows(images_df.unionByName(images(dims, 0))) == rows(images_df)
+        got = rows(images(huge, 900))
+        expected = {}
+        for i, (w, h) in enumerate(huge):
+            e = select_bucket_py(w, h, cfg.bucket)
+            if max(e["resized_w"], e["resized_h"]) <= lim:
+                expected[f"/data/img{900 + i:03d}_p9.jpg"] = (
+                    {"w": e["resized_w"], "h": e["resized_h"]},
+                    {"w": e["bucket_w"], "h": e["bucket_h"]},
+                )
+        assert 0 < len(expected) < len(huge)
+        assert {k: (r["resized_size"], r["bucket_reso"]) for k, r in got.items()} == expected
 
 
 def test_ep1_end_to_end(spark, fixture_dir, images_df):

@@ -262,6 +262,50 @@ def test_pretraining_chain_plan_invariants(spark, sf_dir):
     assert plan.count("InMemoryTableScan") >= 2, "stage persists not in plan"
 
 
+def test_curation_hashes_text_natively_and_tokens_once(spark, sf_dir):
+    """Both curation entry points key exact dedup on the code-generated
+    xxhash64/hash pair, with no per-character polynomial fold over the
+    whole text (an interpreted higher-order function); and shingling
+    from a carried token-hash column never splits the text again."""
+    from anime_data_pipeline_spark.operators.dedup import shingle_hash_sets
+
+    for name in ("q35_curation_pipeline", "q88_pretraining_corpus"):
+        plan = QUERIES[name](spark, sf_dir)._jdf.queryExecution().optimizedPlan().toString()
+        assert "xxhash64(" in plan, name
+        assert "aggregate(transform(split(text" not in plan, name
+    spark.catalog.clearCache()
+    th = spark.createDataFrame([(1, [3, 1, 4, 1, 5])], "doc_id long, _th array<bigint>")
+    sh = shingle_hash_sets(th, "doc_id", "text", 3, th_col="_th")
+    assert "split(" not in sh._jdf.queryExecution().optimizedPlan().toString()
+    assert sh.count() == 1
+
+
+def test_rerun_of_the_pretraining_chain_compiles_no_class(spark, sf_dir):
+    """A second run of the pretraining chain in one session finds every
+    generated class in the codegen cache (with Spark's default
+    100-entry cache it recompiled about 60 of the ~110). Adaptive
+    execution is off here because it numbers whole-stage classes in
+    the order its stages materialize, which can vary between runs, and
+    a renumbered stage is new source code to the cache."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiles_of_one_run() -> int:
+        before = metrics.METRIC_COMPILATION_TIME().getCount()
+        QUERIES["q88_pretraining_corpus"](spark, sf_dir).write.format("noop").mode(
+            "overwrite"
+        ).save()
+        spark.catalog.clearCache()
+        return metrics.METRIC_COMPILATION_TIME().getCount() - before
+
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        compiles_of_one_run()
+        assert compiles_of_one_run() == 0
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+
+
 def test_quantize_map_only_and_pruned(spark, sf_dir):
     plan = plan_of(QUERIES["q98_embedding_quantize"](spark, sf_dir))
     assert "Exchange" not in plan, "int8 quantize must be map-only"
