@@ -251,10 +251,7 @@ def assign_bucket_columns(
     if not cfg.no_upscale:
         wq, hq = _sql_name(width_col), _sql_name(height_col)
         bw, bh = "_bucket.w", "_bucket.h"
-        scale = (
-            f"CASE WHEN _ar > CAST({bw} AS DOUBLE) / CAST({bh} AS DOUBLE) "
-            f"THEN {bh} / CAST({hq} AS DOUBLE) ELSE {bw} / CAST({wq} AS DOUBLE) END"
-        )
+        resized_w, resized_h = _upscale_resized_sql(wq, hq, bw, bh, "_ar")
         return (
             df.selectExpr("*", f"CAST({wq} AS DOUBLE) / CAST({hq} AS DOUBLE) AS _ar")
             .selectExpr("*", f"{_bucket_lookup_sql(wq, hq, '_ar', cfg)} AS _bucket")
@@ -262,8 +259,8 @@ def assign_bucket_columns(
                 *map(_sql_name, df.columns),
                 f"{bw} AS bucket_w",
                 f"{bh} AS bucket_h",
-                f"CAST(floor(CAST({wq} AS DOUBLE) * {scale} + 0.5D) AS INT) AS resized_w",
-                f"CAST(floor(CAST({hq} AS DOUBLE) * {scale} + 0.5D) AS INT) AS resized_h",
+                f"CAST({resized_w} AS INT) AS resized_w",
+                f"CAST({resized_h} AS INT) AS resized_h",
                 f"CAST({bw} AS DOUBLE) / CAST({bh} AS DOUBLE) - _ar AS ar_error",
                 f"{bw} - {bw} % 8 AS train_w",
                 f"{bh} - {bh} % 8 AS train_h",
@@ -295,6 +292,20 @@ def assign_bucket_columns(
         )
         .withColumn("train_w", (F.col("bucket_w") - F.col("bucket_w") % 8).cast("int"))
         .withColumn("train_h", (F.col("bucket_h") - F.col("bucket_h") % 8).cast("int"))
+    )
+
+
+def _upscale_resized_sql(w: str, h: str, bw: str, bh: str, ar: str) -> tuple[str, str]:
+    """The upscale path's resized (w, h) as bigint SQL, before the cast
+    to int: the SQL names ``w``, ``h`` (ratio ``ar``) scaled to cover
+    the bucket ``bw`` x ``bh``."""
+    scale = (
+        f"CASE WHEN {ar} > CAST({bw} AS DOUBLE) / CAST({bh} AS DOUBLE) "
+        f"THEN {bh} / CAST({h} AS DOUBLE) ELSE {bw} / CAST({w} AS DOUBLE) END"
+    )
+    return (
+        f"floor(CAST({w} AS DOUBLE) * {scale} + 0.5D)",
+        f"floor(CAST({h} AS DOUBLE) * {scale} + 0.5D)",
     )
 
 
@@ -333,40 +344,37 @@ def _no_upscale_resized(
 _INT_MAX = 2**31 - 1
 
 
-def bucketable(
-    width_col: str = "width",
-    height_col: str = "height",
-    cfg: BucketConfig | None = None,
-) -> Column:
-    """True for the rows :func:`assign_bucket_columns` can place: a
-    positive width and height whose resized size fits an int. False
-    otherwise, where a zero side divides by zero and an oversized
-    resized side overflows the int cast, either of which raises under
-    ANSI and fails the whole job.
+def bucketable(cfg: BucketConfig) -> Column:
+    """True for the rows :func:`assign_bucket_columns` can place in
+    the ``width`` and ``height`` columns: a positive width and height
+    whose resized size fits an int. False otherwise, where a zero side
+    divides by zero and an oversized resized side overflows the int
+    cast, either of which raises under ANSI and fails the whole job.
 
     No-upscale: the resized size itself, before the cast. Upscale: only
     a ratio beyond the table's range can overflow (the nearest bucket's
     scale keeps any ratio inside it within the largest bucket side
     times the largest ratio), and there the bucket is the extreme entry
-    of ``_bucket_lookup_sql``, so its resized side is spelled with that
-    entry's literal — exactly the arithmetic of the lookup path, with no
-    lookup."""
-    cfg = cfg or BucketConfig()
+    of ``_bucket_lookup_sql``, so its resized size is
+    ``_upscale_resized_sql`` of that entry's literals — the arithmetic
+    of the lookup path, with no lookup."""
     if cfg.no_upscale:
-        rw, rh = _no_upscale_resized(width_col, height_col, cfg)
-        positive = (F.col(width_col) > 0) & (F.col(height_col) > 0)
+        rw, rh = _no_upscale_resized("width", "height", cfg)
+        positive = (F.col("width") > 0) & (F.col("height") > 0)
         return F.when(positive, (rw <= _INT_MAX) & (rh <= _INT_MAX)).otherwise(False)
     resos = make_bucket_resolutions(cfg)
     table = _ratio_table(resos)
+    ar = "CAST(width AS DOUBLE) / CAST(height AS DOUBLE)"
+
+    def fits(i: int) -> str:  # the resized size under table entry i
+        rw, rh = _upscale_resized_sql("width", "height", *map(str, resos[i]), ar)
+        return f"{rw} <= {_INT_MAX} AND {rh} <= {_INT_MAX}"
+
     (r_min, i_min), (r_max, i_max) = table[0], table[-1]
-    wq, hq = _sql_name(width_col), _sql_name(height_col)
-    wd, hd = f"CAST({wq} AS DOUBLE)", f"CAST({hq} AS DOUBLE)"
     return F.expr(
-        f"CASE WHEN {wq} > 0 AND {hq} > 0 THEN "
-        f"CASE WHEN {wd} / {hd} > {r_max!r}D "
-        f"THEN floor({wd} * ({resos[i_max][1]} / {hd}) + 0.5D) <= {_INT_MAX} "
-        f"WHEN {wd} / {hd} < {r_min!r}D "
-        f"THEN floor({hd} * ({resos[i_min][0]} / {wd}) + 0.5D) <= {_INT_MAX} "
+        "CASE WHEN width > 0 AND height > 0 THEN "
+        f"CASE WHEN {ar} > {r_max!r}D THEN {fits(i_max)} "
+        f"WHEN {ar} < {r_min!r}D THEN {fits(i_min)} "
         "ELSE true END ELSE false END"
     )
 

@@ -48,7 +48,7 @@ def bucketing_stage(images: DataFrame, cfg: BucketConfig) -> DataFrame:
     divides by zero and an oversized one overflows the int cast, either
     of which fails the whole run under ANSI, and a null side would be
     written as bucket (-1, -1)."""
-    ok = images.filter(bucketable(cfg=cfg))
+    ok = images.filter(bucketable(cfg))
     if "is_corrupt" in images.columns:
         ok = ok.filter(~F.coalesce(F.col("is_corrupt"), F.lit(False)))
     assigned = assign_bucket_columns(ok, cfg=cfg)

@@ -127,6 +127,9 @@ def test_aesthetic_files_are_matched_as_spark_names_them(spark, tmp_path):
     assert _scores(spark, [odd, a]) == {"img1": 0.1, "img2": 0.2}
     # "*.json" names one file, not every file in the directory
     assert _scores(spark, [str(d / "*.json")]) == {"img3": 0.3}
+    # a listed directory scans its files, whose priority is unknown
+    with pytest.raises(Exception, match="not in the list"):
+        _scores(spark, [str(d)])
 
 
 def test_aesthetic_later_key_in_one_object_wins(spark, tmp_path):

@@ -281,12 +281,14 @@ def test_curation_hashes_text_natively_and_tokens_once(spark, sf_dir):
 
 
 def test_rerun_of_the_pretraining_chain_compiles_no_class(spark, sf_dir):
-    """A second run of the pretraining chain in one session finds every
-    generated class in the codegen cache (with Spark's default
-    100-entry cache it recompiled about 60 of the ~110). Adaptive
-    execution is off here because it numbers whole-stage classes in
-    the order its stages materialize, which can vary between runs, and
-    a renumbered stage is new source code to the cache."""
+    """A second run of the pretraining chain in one session finds its
+    generated classes in the codegen cache (with Spark's default
+    100-entry cache it recompiled about 50 of the ~100). With adaptive
+    execution off it finds every one. With it on, as ``get_spark``
+    ships, a rerun can still compile up to 2: adaptive execution
+    numbers whole-stage classes in the order its stages materialize,
+    which can vary between runs, and a renumbered stage is new source
+    code to the cache."""
     metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
 
     def compiles_of_one_run() -> int:
@@ -298,10 +300,11 @@ def test_rerun_of_the_pretraining_chain_compiles_no_class(spark, sf_dir):
         return metrics.METRIC_COMPILATION_TIME().getCount() - before
 
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        compiles_of_one_run()
-        assert compiles_of_one_run() == 0
+        for enabled, most in (("true", 2), ("false", 0)):
+            spark.conf.set("spark.sql.adaptive.enabled", enabled)
+            compiles_of_one_run()
+            assert compiles_of_one_run() <= most, f"adaptive execution {enabled}"
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
 
