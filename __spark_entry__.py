@@ -89,6 +89,13 @@ def entry(spark: SparkSession) -> DataFrame:
 #     lists; bucketing_stage drops rows whose resized size overflows
 #     an int — every importer was already drifted; the set is
 #     unchanged (75).
+# (9) the fan-out guard's split count comes from Spark's planned file
+#     scans (plans/curation.scan_input_splits) — every importer of
+#     plans/curation drifts, which adds the _spread decode chains: q71,
+#     q87, q178, q179, q181, q184, q188, q190, q192 (9 more, 84 in all);
+#     kmeans_refine lost its unread `_kid` select and `round_dp`, and
+#     benchmark_contamination its always-true `min_overlap` filter —
+#     their importers were already drifted.
 _CHANGED_THIS_ROUND: list[str] = [
     "q100_bloom_contamination",
     "q101_span_dedup",
@@ -119,8 +126,15 @@ _CHANGED_THIS_ROUND: list[str] = [
     "q161_containment_dedup",
     "q165_calibration_bins",
     "q177_raster_decode_bucket",
+    "q178_wav_decode_chunk",
+    "q179_video_frame_sample",
+    "q181_image_dedup",
+    "q184_audio_quality_filter",
     "q187_webp_decode_bucket",
+    "q188_webp_anim_sample",
+    "q190_webp_lossy_decode",
     "q191_index_retrieval_metrics",
+    "q192_foreign_stream_decode",
     "q193_fasttext_quality_filter",
     "q194_repetition_signals",
     "q21_bucket_assign",
@@ -148,6 +162,7 @@ _CHANGED_THIS_ROUND: list[str] = [
     "q58_pack_chunks",
     "q60_cluster_resolve",
     "q67_pack_greedy",
+    "q71_multimodal_decode",
     "q72_multimodal_features",
     "q73_tag_inference",
     "q76_salted_join_hot_key",
@@ -157,6 +172,7 @@ _CHANGED_THIS_ROUND: list[str] = [
     "q82_gopher_rules",
     "q85_ann_ivf_kmeans",
     "q86_semantic_dedup",
+    "q87_audio_chunk_plan",
     "q88_pretraining_corpus",
     "q90_stream_quality_dedup",
     "q91_leakage_safe_split",
@@ -180,7 +196,7 @@ _PRIORITY = [
     *_REWORKED_LAST_ROUND,
     # (d) stalest first. Round 13's window sampled the whole former
     # round-6/7 queue, so the stalest rows left are round 7's tail,
-    # then the round-8 cohort. With 67 changed entries the 50-row
+    # then the round-8 cohort. With 84 changed entries the 50-row
     # window takes none of them; they stay queued for the next
     # rotation.
     "q89_temperature_mix",

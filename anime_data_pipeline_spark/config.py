@@ -52,7 +52,6 @@ class RunConfig:
                 reso_steps=self.bucket_reso_steps,
             ),
             aesthetic_threshold=self.aesthetic_threshold,
-            use_aesthetic=bool(self.aesthetic_files),
         )
 
 

@@ -678,7 +678,6 @@ def benchmark_contamination(
     id_col: str,
     text_col: str,
     n: int = 8,
-    min_overlap: float = 0.0,
     *,
     th_col: str | None = None,
 ) -> DataFrame:
@@ -697,8 +696,7 @@ def benchmark_contamination(
     the corpus is never shuffled on text. ``th_col``: a precomputed
     token-hash column of ``corpus``, as in :func:`shingle_hash_sets`.
     Returns (doc, n_shingles, n_hits, overlap_frac) for every corpus doc
-    (ids unique) with overlap_frac >= ``min_overlap`` (0.0 = report
-    all)."""
+    (ids unique)."""
     c = shingle_hash_sets(corpus, id_col, text_col, n, th_col=th_col)
     bench_universe = (
         shingle_hash_sets(bench, id_col, text_col, n)
@@ -716,7 +714,6 @@ def benchmark_contamination(
             "overlap_frac",
             F.col("n_hits") / F.greatest(F.col("n_shingles"), F.lit(1)),
         )
-        .filter(F.col("overlap_frac") >= min_overlap)
     )
 
 

@@ -577,7 +577,6 @@ def kmeans_refine(
     vec_col: str,
     centroids: list[tuple[int, list[float]]],
     iters: int = 1,
-    round_dp: int = 6,
 ) -> list[tuple[int, list[float]]]:
     """Distributed Lloyd refinement of IVF centroids (spherical
     k-means step: assign by max cosine, re-estimate as the per-cell
@@ -591,26 +590,22 @@ def kmeans_refine(
     one shuffle of |corpus| × dim narrow rows. Empty cells drop (their
     seed attracted no points; both engines agree by construction).
 
-    Coordinates round to ``round_dp`` decimals so the refined
-    centroids are bit-identical across engines (partial-agg summation
-    order is partition-dependent; at 6 dp the ~1e-15 associativity
-    noise cannot surface, making downstream assignment + scoring
-    exactly reproducible by the DuckDB oracle)."""
+    Coordinates round to 6 decimals so the refined centroids are
+    bit-identical across engines (partial-agg summation order is
+    partition-dependent; at 6 dp the ~1e-15 associativity noise cannot
+    surface, making downstream assignment + scoring exactly
+    reproducible by the DuckDB oracle). ``id_col`` is not read; it
+    stays for positional callers."""
     from anime_data_pipeline_spark.functions.compat import dround
 
     for _ in range(iters):
         assigned = assign_cells(
-            corpus.select(
-                F.col(id_col).alias("_kid"),
-                to_double_array(F.col(vec_col)).alias("v"),
-            ),
-            "v",
-            centroids,
+            corpus.select(to_double_array(F.col(vec_col)).alias("v")), "v", centroids
         )
         means = (
             assigned.select("cell", F.posexplode("v").alias("pos", "val"))
             .groupBy("cell", "pos")
-            .agg(dround(F.avg("val"), round_dp).alias("m"))
+            .agg(dround(F.avg("val"), 6).alias("m"))
             .groupBy("cell")
             .agg(
                 F.transform(

@@ -25,136 +25,44 @@ from anime_data_pipeline_spark.operators.dedup import minhash_lsh_pairs
 from anime_data_pipeline_spark.operators.textstats import quality_columns
 
 
-def _parse_bytes(v: str | int) -> int:
-    """Spark size-string → bytes ("128MB", "4194304b", "1g", 42)."""
-    if isinstance(v, int):
-        return v
-    s = str(v).strip().lower()
-    mult = 1
-    for suffix, m in (
-        ("tb", 1 << 40), ("gb", 1 << 30), ("mb", 1 << 20), ("kb", 1 << 10),
-        ("t", 1 << 40), ("g", 1 << 30), ("m", 1 << 20), ("k", 1 << 10),
-        ("b", 1),
-    ):
-        if s.endswith(suffix):
-            s, mult = s[: -len(suffix)], m
-            break
-    return int(s) * mult
-
-
 def scan_input_splits(df: DataFrame) -> int | None:
-    """The number of input splits Spark's file-scan partitioning will
-    give this plan's LEAF scans — computed from the logical plan's
-    input files and the FilePartition split formula, WITHOUT forcing
-    physical planning (AQE-safe) and independent of whether the plan's
-    final stage is a shuffle.
-
-    Returns None when it can't know: no file-scan leaves (local
-    relation, memory sink) or non-local/unstat-able paths — callers
-    fall back to the partition-count heuristic there.
-
-    Formula mirror of BOTH halves of FilePartition.getFilePartitions
-    (r11 ADVICE #1: `Σ ceil(size/maxSplitBytes)` models file
-    *splitting* but not the *bin-packing* of small files into shared
-    partitions, so a many-tiny-files layout over-counted and the guard
-    silently no-opped while the scan was under-split):
-
-      maxSplitBytes = min(maxPartitionBytes,
-                          max(openCostInBytes, totalBytes/minPart))
-      chunks        = each file cut into maxSplitBytes pieces,
-                      sorted descending (parquet/orc are splittable;
-                      for non-splittable formats this over-cuts, which
-                      can only make the guard a no-op, never add a
-                      spurious exchange)
-      partitions    = greedy pack: close the open bin when
-                      cur + chunk > maxSplitBytes, then charge
-                      chunk + openCostInBytes to the bin
-
-    A multi-source plan (joined dims) counts every side's files, so
-    the guard is for scan/union-shaped inputs."""
-    import os
-    from urllib.parse import unquote, urlparse
-
-    files = df.inputFiles()
-    if not files:
-        return None
-    sizes = []
-    for f in files:
-        u = urlparse(f)
-        if u.scheme not in ("file", ""):
+    """The number of tasks Spark's file scans give this plan: the sum
+    of every ``FileSourceScanExec`` leaf's input-RDD partition count in
+    the physical plan before AQE (under AQE the executed plan is itself
+    one leaf), so a shuffle-final plan still reports its scans.
+    Planning lists and packs the files; nothing executes.
+    None when any leaf is not a file scan (local relation, range,
+    cached relation)."""
+    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+    splits = 0
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() != "FileSourceScanExec":
             return None
-        path = unquote(u.path)
-        try:
-            sizes.append(os.path.getsize(path))
-        except OSError:
-            return None
-    spark = df.sparkSession
-
-    def _conf(key: str, fallback: str) -> str:
-        # conf.get type-validates even the DEFAULT, so an unset
-        # optional conf probed with "" raises — catch instead.
-        try:
-            return spark.conf.get(key, fallback)
-        except Exception:
-            return fallback
-
-    max_part = _parse_bytes(_conf("spark.sql.files.maxPartitionBytes", "128MB"))
-    open_cost = _parse_bytes(_conf("spark.sql.files.openCostInBytes", "4MB"))
-    raw_min = _conf("spark.sql.files.minPartitionNum", "")
-    min_part = int(raw_min) if raw_min else spark.sparkContext.defaultParallelism
-    total = sum(s + open_cost for s in sizes)
-    bytes_per_core = total // max(min_part, 1)
-    max_split = min(max_part, max(open_cost, bytes_per_core))
-    chunks: list[int] = []
-    for s in sizes:
-        n_full, rem = divmod(s, max_split)
-        chunks.extend([max_split] * n_full)
-        if rem:
-            chunks.append(rem)
-    chunks.sort(reverse=True)
-    bins, cur = 0, 0
-    for c in chunks:
-        if cur + c > max_split and cur > 0:
-            bins, cur = bins + 1, 0
-        cur += c + open_cost
-    if cur > 0:
-        bins += 1
-    return max(bins, 1)
+        splits += leaf.inputRDD().getNumPartitions()
+    return splits
 
 
 def ensure_map_parallelism(df: DataFrame, *keys: str) -> DataFrame:
-    """Fan the corpus out ONLY when the scan yields fewer splits than
-    cores. The quality/langid scoring stage is the chain's largest
-    map-CPU block, and a single-row-group parquet layout (the test-SF
-    shape; in production, any source with fewer files than executors)
-    pins it to one task while the rest of the cluster idles — the
-    round-9 `_spread` finding, generalized to the text chains. The
-    guard keeps the policy scale-safe: a production scan already
-    carries >= parallelism splits, so NO shuffle is added there; in
-    the under-split regime one pass of the raw text buys full-width
-    scoring, dedup hashing, and shingling.
+    """Fan the input out to ``defaultParallelism`` tasks when its scans
+    give fewer splits than that. The map stage after it (the curation
+    chains' scoring, their largest CPU block) would otherwise run as
+    one task on a source with fewer splits than cores, such as one
+    file with one row group. A scan that already carries enough splits
+    passes through with no added shuffle.
 
-    The under-split probe is ``scan_input_splits`` — the LEAF scans'
-    split count from file sizes + the FilePartition formula — not
-    ``df.rdd.getNumPartitions()`` (r10 verdict #5): the RDD probe
-    forced physical planning outside AQE, and on a shuffle-final plan
-    it reports spark.sql.shuffle.partitions, silently no-opping even
-    when the upstream scan is one split. File-less plans (local
-    relations) fall back to the RDD probe, where partition count IS
-    the honest answer.
+    The count is :func:`scan_input_splits`, not the final stage's
+    partition count, which on a shuffle-final plan reports
+    ``spark.sql.shuffle.partitions``. Plans with a non-file leaf fall
+    back to ``df.rdd.getNumPartitions()``.
 
     ``keys``: optional hash-partitioning columns for the fan-out
-    exchange (the decode chains spread on ``doc_id`` so a downstream
-    keyed op can reuse the partitioning); empty → round-robin, the
-    right default for pure map stages."""
-    spark = df.sparkSession
-    p = spark.sparkContext.defaultParallelism
+    exchange; none gives round-robin."""
+    p = df.sparkSession.sparkContext.defaultParallelism
     splits = scan_input_splits(df)
     if splits is None:
         splits = df.rdd.getNumPartitions()
-    if splits < p:
-        return df.repartition(p, *[F.col(k) for k in keys]) if keys else df.repartition(p)
-    return df
+    return df.repartition(p, *keys) if splits < p else df
 
 
 def _dedup(

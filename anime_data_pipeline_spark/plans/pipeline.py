@@ -36,7 +36,6 @@ class PipelineConfig:
 
     bucket: BucketConfig = field(default_factory=BucketConfig)
     aesthetic_threshold: float = 0.5
-    use_aesthetic: bool = True
 
 
 def bucketing_stage(images: DataFrame, cfg: BucketConfig) -> DataFrame:
@@ -115,13 +114,14 @@ def run_ep1(
     is_corrupt]) — from sources.images.scan_image_dirs + derive_keys +
     a decode stage, or a fixture table.
     ``sidecars``: (image_stem, rating, tags) from sources.sidecar.
-    ``scores``: (image_id, score) from sources.aesthetic, or None.
+    ``scores``: (image_id, score) from sources.aesthetic, or None to
+    skip the aesthetic stage.
     """
     cfg = cfg or PipelineConfig()
     df = bucketing_stage(images, cfg.bucket)
     df = sidecar_join_stage(df, sidecars)
     audit = None
-    if cfg.use_aesthetic and scores is not None:
+    if scores is not None:
         df, audit = aesthetic_stage(df, scores, cfg.aesthetic_threshold)
     df = ordering_stage(df, vocab_names)
     meta = df.select(

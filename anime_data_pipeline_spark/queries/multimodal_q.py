@@ -51,16 +51,13 @@ def _spread(docs: DataFrame) -> DataFrame:
     (Found in round 9: q151's bench tail grew with the SOF3 slice and
     the whole decode matrix turned out to be running on one thread.)
 
-    Since round 12 this IS ``plans.curation.ensure_map_parallelism``
-    keyed on ``doc_id`` (the r11-deferred swap, landed with the decode
-    family's re-row): the under-split probe is the leaf-scan
-    split-math (``scan_input_splits`` — AQE-safe, shuffle-final-safe,
-    no forced physical planning), with the RDD partition count only as
-    the file-less fallback (q192's driver-built local relation), where
-    it is the honest answer. Repartitions ONLY when the plan carries
-    fewer input splits than cores — a production layout with
-    >= parallelism splits passes through untouched, no exchange of the
-    (doc_id, text) projection in front of the decode chain."""
+    This IS ``plans.curation.ensure_map_parallelism`` keyed on
+    ``doc_id``: it repartitions only when the planned file scans give
+    fewer splits than cores (``scan_input_splits``, which sees through
+    shuffle-final plans), and falls back to the RDD partition count for
+    q192's driver-built local relation. A production layout with
+    >= parallelism splits passes through untouched, with no exchange
+    of the (doc_id, text) projection in front of the decode chain."""
     from anime_data_pipeline_spark.plans.curation import ensure_map_parallelism
 
     return ensure_map_parallelism(docs, "doc_id")

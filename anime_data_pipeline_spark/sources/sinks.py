@@ -162,49 +162,6 @@ def upsert_table_partitioned(
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
 
-def compact_table(
-    spark: SparkSession,
-    path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
-    sort_by: list[str] | None = None,
-) -> int:
-    """Small-file compaction: rewrite a parquet table into
-    ~``target_file_bytes`` files, returning the new file count.
-
-    Streaming sinks and per-partition upserts accrete small files;
-    at 100 TB a scan's task count (and the namenode/liststatus bill)
-    is file-bound, so periodic compaction is table maintenance, not
-    optimization. Sizing comes from the table's CURRENT on-disk bytes
-    (compression-representative), not row counts. Optional
-    ``sort_by`` re-sorts within output files so parquet min/max
-    stats stay selective after the rewrite. Atomic via the same
-    tmp-dir + rename swap as :func:`upsert_table` (local/POSIX;
-    object stores should compact into Delta/Iceberg snapshots)."""
-    import math
-    import os
-    import shutil
-
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        total += sum(
-            os.path.getsize(os.path.join(root, f))
-            for f in files
-            if f.endswith(".parquet")
-        )
-    n_files = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(path).repartition(n_files)
-    if sort_by:
-        df = df.sortWithinPartitions(*sort_by)
-    tmp = path.rstrip("/") + "__tmp_compact"
-    old = path.rstrip("/") + "__old_compact"
-    df.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(path.rstrip("/"), old)
-    os.rename(tmp, path.rstrip("/"))
-    shutil.rmtree(old, ignore_errors=True)
-    return n_files
-
-
 def upsert_table(
     spark: SparkSession,
     updates: DataFrame,

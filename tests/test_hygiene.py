@@ -43,7 +43,7 @@ def test_contamination_flags_overlapping_doc(spark):
     assert 0 < rows[1]["overlap_frac"] <= 1.0
 
 
-def test_contamination_min_overlap_filters(spark):
+def test_contamination_reports_overlap_frac_for_every_doc(spark):
     bench = spark.createDataFrame(
         [(100, "alpha beta gamma delta")], "doc_id long, text string"
     )
@@ -51,10 +51,8 @@ def test_contamination_min_overlap_filters(spark):
         [(1, "alpha beta gamma delta"), (2, "unrelated words entirely here")],
         "doc_id long, text string",
     )
-    out = benchmark_contamination(
-        corpus, bench, "doc_id", "text", n=3, min_overlap=0.5
-    )
-    assert [r["doc"] for r in out.collect()] == [1]
+    out = benchmark_contamination(corpus, bench, "doc_id", "text", n=3)
+    assert {r["doc"]: r["overlap_frac"] for r in out.collect()} == {1: 1.0, 2: 0.0}
 
 
 def test_unigram_logprob_hand_computed(spark):

@@ -166,7 +166,7 @@ def test_ep1_drops_rows_without_positive_dims(spark, fixture_dir, images_df):
 
     sidecars = read_sidecar_tags(spark, os.path.join(fixture_dir, "sidecars"))
     for no_upscale in (False, True):
-        cfg = PipelineConfig(bucket=BucketConfig(no_upscale=no_upscale), use_aesthetic=False)
+        cfg = PipelineConfig(bucket=BucketConfig(no_upscale=no_upscale))
 
         def rows(images):
             meta, _ = run_ep1(images, sidecars, None, VOCAB, cfg)
@@ -236,7 +236,7 @@ def test_ep1_end_to_end(spark, fixture_dir, images_df):
 def test_keyed_json_roundtrip(spark, tmp_path, fixture_dir, images_df):
     sidecars = read_sidecar_tags(spark, os.path.join(fixture_dir, "sidecars"))
     meta, _ = run_ep1(images_df, sidecars, None, VOCAB,
-                      PipelineConfig(use_aesthetic=False))
+                      PipelineConfig())
     out_dir = str(tmp_path / "meta_json")
     write_keyed_json(meta.select("image_key", "rating", "ordered_tags"),
                      "image_key", out_dir)

@@ -526,8 +526,7 @@ def test_map_parallelism_guard_sees_through_shuffle_final_plans(spark, tmp_path)
     shuffle-final plan over a one-split file the old
     ``df.rdd.getNumPartitions()`` probe reports
     spark.sql.shuffle.partitions (>= cores here) and silently no-ops;
-    the split-math guard fans out anyway — and without forcing
-    physical planning on the untouched branch."""
+    the scan-count guard fans out anyway."""
     from pyspark.sql import functions as F
 
     from anime_data_pipeline_spark.plans.curation import (
@@ -558,29 +557,36 @@ def test_map_parallelism_guard_sees_through_shuffle_final_plans(spark, tmp_path)
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
 
-    # split math agrees with the scan partitioning Spark actually
-    # chooses on a real multi-file layout
+    # the count is the scan partitioning Spark actually chooses on a
+    # real multi-file layout
     multi = str(tmp_path / "multi")
     spark.range(0, 100_000).repartition(5).write.parquet(multi)
     scan = spark.read.parquet(multi)
     assert scan_input_splits(scan) == scan.rdd.getNumPartitions()
+    # a plan with several scans runs one task per split of each: a
+    # union of the one-split file with itself is 2 tasks (packing the
+    # plan's distinct files together gives 1), and a join adds both
+    # sides' scans
+    assert scan_input_splits(df.unionByName(df)) == 2
+    assert scan_input_splits(scan.join(df, "id")) == (
+        scan.rdd.getNumPartitions() + df.rdd.getNumPartitions()
+    )
 
     # file-less plans fall back to the honest RDD partition count
     local = spark.range(0, 10).coalesce(1)
     assert scan_input_splits(local) is None
+    assert scan_input_splits(df.unionByName(local)) is None
     assert ensure_map_parallelism(local).rdd.getNumPartitions() == p
 
 
 def test_split_math_mirrors_bin_packing_on_many_tiny_files(spark, tmp_path):
-    """r11 ADVICE #1: `Σ ceil(size/maxSplitBytes)` models file
-    SPLITTING but not Spark's BIN-PACKING of small files into shared
-    partitions, so a many-tiny-files layout over-counted (64 files →
-    "64 splits" ≥ cores → guard no-ops) while the actual scan packed
-    far fewer partitions — the silent under-split regime the probe
-    exists to catch. The estimator now mirrors both halves of
-    FilePartition.getFilePartitions; parity is asserted against the
-    partitioning Spark actually chooses, in an openCost-dominated
-    layout where the two formulas disagree."""
+    """r11 ADVICE #1: Spark BIN-PACKS small files into shared
+    partitions, so counting files over-counts a many-tiny-files layout
+    (64 files → "64 splits" ≥ cores → guard no-ops) while the actual
+    scan packs far fewer partitions — the silent under-split regime
+    the probe exists to catch. The count comes from Spark's planned
+    scan, so it equals the partitioning Spark actually chooses, here
+    in an openCost-dominated layout where a per-file count is wrong."""
     from anime_data_pipeline_spark.plans.curation import (
         ensure_map_parallelism,
         scan_input_splits,
@@ -607,15 +613,13 @@ def test_split_math_mirrors_bin_packing_on_many_tiny_files(spark, tmp_path):
         est = scan_input_splits(scan)
         actual = scan.rdd.getNumPartitions()
         assert est == actual, (est, actual)
-        assert est < 64  # the old Σceil formula returned 64 here
+        assert est < 64  # a per-file Σceil count gives 64 here
         if est < p:
             # and the guard must now SEE the under-split and fan out
             assert ensure_map_parallelism(scan).rdd.getNumPartitions() == p
 
         # odd-count edge (13 tiny files, default 4MB openCost —
-        # bytes_per_core regime packs several chunks per bin): a
-        # second point from the 32-config parity sweep this mirror was
-        # validated against (8 layouts × 4 conf regimes, 0 mismatches)
+        # bytes_per_core regime packs several chunks per bin)
         spark.conf.set("spark.sql.files.openCostInBytes", "4MB")
         spark.conf.unset("spark.sql.files.minPartitionNum")
         odd = str(tmp_path / "tiny13")
@@ -636,7 +640,7 @@ def test_spread_rides_the_split_math_probe(spark, tmp_path):
     """r11 verdict #1 ('retire the last RDD probe'): `_spread` is now
     `ensure_map_parallelism` keyed on doc_id — on a shuffle-final plan
     over a one-split file the retired RDD probe read
-    spark.sql.shuffle.partitions and silently no-opped; the split-math
+    spark.sql.shuffle.partitions and silently no-opped; the scan-count
     probe fans out. A wide scan still passes through untouched, and a
     file-less local relation falls back to the honest RDD count."""
     from pyspark.sql import functions as F

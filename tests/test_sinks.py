@@ -175,22 +175,3 @@ def test_partitioned_upsert_touches_only_affected_partitions(spark, tmp_path):
         if f.endswith(".parquet")
     }
     assert after == untouched_files
-
-
-def test_compact_table_shrinks_file_count_preserves_rows(spark, tmp_path):
-    import glob
-
-    from anime_data_pipeline_spark.sources.sinks import compact_table
-
-    path = str(tmp_path / "frag")
-    df = spark.range(10_000).selectExpr("id AS k", "id % 7 AS v")
-    df.repartition(40).write.parquet(path)
-    before = len(glob.glob(f"{path}/*.parquet"))
-    assert before >= 40
-
-    n = compact_table(spark, path, target_file_bytes=10**9, sort_by=["k"])
-    after = glob.glob(f"{path}/*.parquet")
-    assert n == 1 and len(after) == 1
-    out = spark.read.parquet(path)
-    assert out.count() == 10_000
-    assert out.agg({"v": "sum"}).collect()[0][0] == df.agg({"v": "sum"}).collect()[0][0]
