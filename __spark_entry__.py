@@ -96,6 +96,13 @@ def entry(spark: SparkSession) -> DataFrame:
 #     kmeans_refine lost its unread `_kid` select and `round_dp`, and
 #     benchmark_contamination its always-true `min_overlap` filter —
 #     their importers were already drifted.
+# (10) one spelling per operator: SimHash and the repetition signals
+#     lost their impl= alternates, srp_bucket its two Column spellings
+#     (the SRP operators size their planes from the first non-empty
+#     vector), the Gopher rule thresholds became module constants, and
+#     assign_bucket_columns lost its column-name parameters — every
+#     query whose closure imports operators/similarity drifts: q43,
+#     q97, q116, q136, q148 (5 more, 89 in all).
 _CHANGED_THIS_ROUND: list[str] = [
     "q100_bloom_contamination",
     "q101_span_dedup",
@@ -107,6 +114,7 @@ _CHANGED_THIS_ROUND: list[str] = [
     "q110_bm25_rerank",
     "q114_gumbel_resample",
     "q115_png_decode_bucket",
+    "q116_density_prune",
     "q118_span_decontaminate",
     "q120_minhash_quality_audit",
     "q122_source_overlap_matrix",
@@ -118,8 +126,10 @@ _CHANGED_THIS_ROUND: list[str] = [
     "q131_hard_negatives",
     "q133_cluster_balanced_sample",
     "q135_doc_stitching",
+    "q136_margin_bitext_mining",
     "q139_ann_recall_audit",
     "q142_ivf_drift_audit",
+    "q148_label_propagation",
     "q151_gif_jpeg_decode_bucket",
     "q156_source_js_divergence",
     "q158_readability",
@@ -151,6 +161,7 @@ _CHANGED_THIS_ROUND: list[str] = [
     "q35_curation_pipeline",
     "q36_neardup_clusters",
     "q42_ann_srp_lsh_topk",
+    "q43_embedding_neardup",
     "q44_ann_ivf_topk",
     "q48_ann_multiprobe_topk",
     "q50_ngram_repetition",
@@ -180,6 +191,7 @@ _CHANGED_THIS_ROUND: list[str] = [
     "q93_ann_ivf_multiprobe",
     "q95_dsir_logweights",
     "q96_editdist_verify",
+    "q97_knn_graph",
     "q99_adaptive_quality_filter",
 ]
 
@@ -196,16 +208,14 @@ _PRIORITY = [
     *_REWORKED_LAST_ROUND,
     # (d) stalest first. Round 13's window sampled the whole former
     # round-6/7 queue, so the stalest rows left are round 7's tail,
-    # then the round-8 cohort. With 84 changed entries the 50-row
+    # then the round-8 cohort. With 89 changed entries the 50-row
     # window takes none of them; they stay queued for the next
     # rotation.
     "q89_temperature_mix",
     "q94_rag_chunking",
     "q103_perplexity_band",
     "q41_ann_bruteforce_topk",
-    "q97_knn_graph",
     "q98_embedding_quantize",
-    "q43_embedding_neardup",
     "q183_retrieval_metrics",
     "q65_stream_stream_join",
     "q64_stream_dedup",

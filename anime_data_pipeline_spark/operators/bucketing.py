@@ -230,13 +230,9 @@ def _bucket_lookup_sql(w: str, h: str, ar: str, cfg: BucketConfig) -> str:
     )
 
 
-def assign_bucket_columns(
-    df: DataFrame,
-    width_col: str = "width",
-    height_col: str = "height",
-    cfg: BucketConfig | None = None,
-) -> DataFrame:
-    """Append bucket_w/bucket_h/resized_w/resized_h/ar_error/train_w/train_h.
+def assign_bucket_columns(df: DataFrame, cfg: BucketConfig) -> DataFrame:
+    """Append bucket_w/bucket_h/resized_w/resized_h/ar_error/train_w/train_h
+    from the ``width`` and ``height`` columns.
 
     Map-only: scales linearly with the scan; no shuffle, no UDF and no
     higher-order function. The upscale path is three parsed projections
@@ -247,14 +243,13 @@ def assign_bucket_columns(
     inline into a multi-reference) it keeps small the expression that
     every execution re-optimizes and re-generates.
     """
-    cfg = cfg or BucketConfig()
     if not cfg.no_upscale:
-        wq, hq = _sql_name(width_col), _sql_name(height_col)
         bw, bh = "_bucket.w", "_bucket.h"
-        resized_w, resized_h = _upscale_resized_sql(wq, hq, bw, bh, "_ar")
+        resized_w, resized_h = _upscale_resized_sql("width", "height", bw, bh, "_ar")
+        lookup = _bucket_lookup_sql("width", "height", "_ar", cfg)
         return (
-            df.selectExpr("*", f"CAST({wq} AS DOUBLE) / CAST({hq} AS DOUBLE) AS _ar")
-            .selectExpr("*", f"{_bucket_lookup_sql(wq, hq, '_ar', cfg)} AS _bucket")
+            df.selectExpr("*", "CAST(width AS DOUBLE) / CAST(height AS DOUBLE) AS _ar")
+            .selectExpr("*", f"{lookup} AS _bucket")
             .selectExpr(
                 *map(_sql_name, df.columns),
                 f"{bw} AS bucket_w",
@@ -267,7 +262,7 @@ def assign_bucket_columns(
             )
         )
 
-    resized_w, resized_h = _no_upscale_resized(width_col, height_col, cfg)
+    resized_w, resized_h = _no_upscale_resized(cfg)
     steps = cfg.reso_steps
     out = df.withColumn("resized_w", resized_w.cast("int")).withColumn(
         "resized_h", resized_h.cast("int")
@@ -284,7 +279,7 @@ def assign_bucket_columns(
         ).cast("int"),
     )
 
-    ar = F.col(width_col).cast("double") / F.col(height_col).cast("double")
+    ar = F.col("width").cast("double") / F.col("height").cast("double")
     return (
         out.withColumn(
             "ar_error",
@@ -309,16 +304,14 @@ def _upscale_resized_sql(w: str, h: str, bw: str, bh: str, ar: str) -> tuple[str
     )
 
 
-def _no_upscale_resized(
-    width_col: str, height_col: str, cfg: BucketConfig
-) -> tuple[Column, Column]:
-    """The no-upscale path's resized (w, h) as bigint, before the cast
-    to int."""
-    w = F.col(width_col).cast("double")
-    h = F.col(height_col).cast("double")
+def _no_upscale_resized(cfg: BucketConfig) -> tuple[Column, Column]:
+    """The no-upscale path's resized (w, h) of the ``width`` and
+    ``height`` columns as bigint, before the cast to int."""
+    w = F.col("width").cast("double")
+    h = F.col("height").cast("double")
     ar = w / h
     steps = cfg.reso_steps
-    area_over = (F.col(width_col).cast("long") * F.col(height_col).cast("long")) > F.lit(
+    area_over = (F.col("width").cast("long") * F.col("height").cast("long")) > F.lit(
         cfg.max_area
     )
     rw = F.sqrt(F.lit(float(cfg.max_area)) * ar)
@@ -333,11 +326,11 @@ def _no_upscale_resized(
     resized_w = F.when(
         area_over,
         F.when(use_wr, bwr).otherwise(F.floor(bhr * ar + F.lit(0.5))),
-    ).otherwise(F.col(width_col))
+    ).otherwise(F.col("width"))
     resized_h = F.when(
         area_over,
         F.when(use_wr, F.floor(bwr / ar + F.lit(0.5))).otherwise(bhr),
-    ).otherwise(F.col(height_col))
+    ).otherwise(F.col("height"))
     return resized_w, resized_h
 
 
@@ -359,7 +352,7 @@ def bucketable(cfg: BucketConfig) -> Column:
     ``_upscale_resized_sql`` of that entry's literals — the arithmetic
     of the lookup path, with no lookup."""
     if cfg.no_upscale:
-        rw, rh = _no_upscale_resized("width", "height", cfg)
+        rw, rh = _no_upscale_resized(cfg)
         positive = (F.col("width") > 0) & (F.col("height") > 0)
         return F.when(positive, (rw <= _INT_MAX) & (rh <= _INT_MAX)).otherwise(False)
     resos = make_bucket_resolutions(cfg)
@@ -379,17 +372,12 @@ def bucketable(cfg: BucketConfig) -> Column:
     )
 
 
-def crop_ltrb_columns(
-    df: DataFrame,
-    bucket_w: str = "bucket_w",
-    bucket_h: str = "bucket_h",
-    width_col: str = "width",
-    height_col: str = "height",
-) -> DataFrame:
-    """Append crop_left/crop_top/crop_right/crop_bottom (B4)."""
-    bw = F.col(bucket_w).cast("double")
-    bh = F.col(bucket_h).cast("double")
-    image_ar = F.col(width_col).cast("double") / F.col(height_col).cast("double")
+def crop_ltrb_columns(df: DataFrame) -> DataFrame:
+    """Append crop_left/crop_top/crop_right/crop_bottom (B4) from the
+    ``bucket_w``, ``bucket_h``, ``width`` and ``height`` columns."""
+    bw = F.col("bucket_w").cast("double")
+    bh = F.col("bucket_h").cast("double")
+    image_ar = F.col("width").cast("double") / F.col("height").cast("double")
     bucket_ar = bw / bh
     rw = F.when(bucket_ar > image_ar, bh * image_ar).otherwise(bw)
     rh = F.when(bucket_ar > image_ar, bh).otherwise(bw / image_ar)

@@ -28,7 +28,7 @@ so every operator is oracle-checkable in DuckDB.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from anime_data_pipeline_spark.functions.hashing import (
@@ -269,51 +269,15 @@ def minhash_quality_audit(
     )
 
 
-def simhash_from_hashes(h: Column, bits: int = 30) -> Column:
-    """SimHash fingerprint from a precomputed token-hash array.
-
-    bit b of the fingerprint is set when the signed sum of token-hash
-    bit-b indicators is positive. 30 bits because the polyhash range is
-    [0, P) < 2^30.
-
-    Pass ``h`` as a MATERIALIZED column (withColumn), not a nested
-    expression: all ``bits`` folds reference it, and a nested expression
-    would be re-embedded (and token hashing re-executed) per bit.
-    ``bits`` scalar folds beat one fold with an array state: interpreted
-    higher-order evaluation allocates the state array per element, which
-    costs more than the extra scans (measured 2× slower at sf0.1).
-    """
-
-    def bit_sum(b: int) -> Column:
-        return F.aggregate(
-            h,
-            F.lit(0),
-            lambda acc, x: acc
-            + F.when(F.shiftright(x, b).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1),
-        )
-
-    terms = []
-    for b in range(bits):
-        terms.append(F.when(bit_sum(b) > 0, F.lit(1 << b)).otherwise(F.lit(0)))
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out.cast("long")
-
-
 def simhash_arrow_udf(bits: int = 30):
     """Vectorized SimHash bit-fold as an Arrow-batched pandas UDF:
     token-hash arrays cross to Python in Arrow batches, the ±1 bit
     matrix is built once for the whole batch, and per-row sums come
     from one ``np.add.reduceat`` over segment starts.
 
-    This is the measured-fast path: the native 30-scalar-fold form
-    (``simhash_from_hashes``) runs in Catalyst's INTERPRETED
-    higher-order evaluator — 30 passes per row outside whole-stage
-    codegen — and costs ~1.7× more at sf0.1 (1.21s vs 0.71s). Both
-    produce bit-identical fingerprints; the native form stays as the
-    expression-only variant (usable inside other column expressions and
-    mirrored 1:1 by the DuckDB oracle SQL)."""
+    Bit b of the fingerprint is set when the signed sum of token-hash
+    bit-b indicators is positive; 30 bits because the polyhash range is
+    [0, P) < 2^30. An empty or null token list gives 0."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -349,27 +313,17 @@ def simhash_arrow_udf(bits: int = 30):
 
 
 def simhash_df(
-    df: DataFrame,
-    text_col: str,
-    out: str = "fingerprint",
-    bits: int = 30,
-    impl: str = "arrow",
+    df: DataFrame, text_col: str, out: str = "fingerprint", bits: int = 30
 ) -> DataFrame:
     """Map-only SimHash fingerprinting: token hashes computed once per
-    row (JVM-side, codegen'd), then folded per bit.
-
-    ``impl="arrow"`` (default) folds in vectorized numpy via
-    :func:`simhash_arrow_udf`; ``impl="native"`` keeps everything in
-    Catalyst expressions (slower fold, but no Python boundary — and the
-    form the DuckDB oracle mirrors). Fingerprints are bit-identical."""
-    hashed = df.withColumn(
-        "_sh_th", F.expr(token_hashes_spark_expr(tokens_spark_expr(text_col)))
+    row (JVM-side, codegen'd), then folded per bit in vectorized numpy
+    by :func:`simhash_arrow_udf`."""
+    th = F.expr(token_hashes_spark_expr(tokens_spark_expr(text_col)))
+    return (
+        df.withColumn("_sh_th", th)
+        .withColumn(out, simhash_arrow_udf(bits)(F.col("_sh_th")))
+        .drop("_sh_th")
     )
-    if impl == "arrow":
-        hashed = hashed.withColumn(out, simhash_arrow_udf(bits)(F.col("_sh_th")))
-    else:
-        hashed = hashed.withColumn(out, simhash_from_hashes(F.col("_sh_th"), bits))
-    return hashed.drop("_sh_th")
 
 
 def _large_star(edges: DataFrame) -> DataFrame:

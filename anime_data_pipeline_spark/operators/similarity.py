@@ -76,14 +76,6 @@ def cosine_sql(a: str, b: str) -> str:
 # ((a_j * i + b_j) % P) / P - 0.5 — pure integer math then one double
 # division, identical in any engine.
 # ---------------------------------------------------------------------------
-def _plane_component(j: int, i: Column) -> Column:
-    a, b = perm_constants(j + 1)[j]
-    # a ~ 1e9 and i ≤ dim: the product overflows int32, so go via long.
-    return (
-        (F.lit(a).cast("long") * i + F.lit(b)) % F.lit(P)
-    ).cast("double") / F.lit(float(P)) - 0.5
-
-
 def _plane_component_sql(j: int) -> str:
     a, b = perm_constants(j + 1)[j]
     return f"(CAST(({a} * i + {b}) % {P} AS DOUBLE) / {float(P)} - 0.5)"
@@ -91,20 +83,11 @@ def _plane_component_sql(j: int) -> str:
 
 def _plane_values(j: int, dim: int) -> list[float]:
     """Plane j's components [1..dim] computed once in Python — the SAME
-    IEEE-754 ops as :func:`_plane_component` ((a*i+b)%P is < 2^53 so the
-    int→double cast is exact; one double divide, one subtract), so the
-    values are bit-identical to the per-row spelling and to the oracle's
-    :func:`_plane_component_sql`."""
+    IEEE-754 ops as the oracle's :func:`_plane_component_sql`
+    ((a*i+b)%P is < 2^53 so the int→double cast is exact; one double
+    divide, one subtract), so the values are bit-identical."""
     a, b = perm_constants(j + 1)[j]
     return [((a * i + b) % P) / float(P) - 0.5 for i in range(1, dim + 1)]
-
-
-def _plane_lit(j: int, dim: int) -> Column:
-    """Plane j as ONE literal double-array — the hyperplane is
-    materialized once per plan, not recomputed per (row × element) as
-    the interpreted ``_plane_component`` form was (the r3→r4 q42
-    regression fix)."""
-    return F.lit(_plane_values(j, dim))
 
 
 def _fmt_double(x: float) -> str:
@@ -114,89 +97,43 @@ def _fmt_double(x: float) -> str:
     return f"{x!r}D"
 
 
-def _srp_bucket_expr(col_name: str, planes: int, first_plane: int, dim: int) -> Column:
-    """The entire SRP bucket as ONE ``F.expr`` string.
+def srp_bucket(v: str, planes: int, first_plane: int = 0, *, dim: int) -> Column:
+    """SRP bucket id in [0, 2^planes): bit j = sign(dot(v, plane_{j+first_plane})).
 
-    Semantically identical to the per-plane Column composition (same
-    Catalyst Aggregate/ZipWith/CaseWhen nodes after parsing, same
-    left-fold order, same literal doubles) but built with a single
-    py4j round-trip. The Column-API spelling cost ~1.7 s of driver
-    time per call at dim=64 × 8 planes: every ``F.lit`` element and
-    every higher-order-function lambda is its own py4j round-trip,
-    and that plan-build latency dwarfed the sub-second execution
-    (the remaining half of the q42 bench regression)."""
+    ``first_plane`` selects a disjoint slice of the deterministic plane
+    family — the banded multi-table LSH uses slice t*planes for table t.
+    ``v`` names a materialized double-array column; it is referenced
+    once per plane.
+
+    Each plane is a literal array of ``dim`` doubles and each per-plane
+    dot one zip_with + left fold, so the modular plane arithmetic runs
+    once at plan-build time. The whole bucket is ONE ``F.expr`` string:
+    a Column-API spelling cost ~1.7 s of driver time per call at
+    dim=64 × 8 planes, since every ``F.lit`` element and every
+    higher-order-function lambda is its own py4j round trip. A vector
+    whose length is not ``dim`` (empty or null included) gets a null
+    dot on every plane, so bucket 0; ``dim=0`` (no vector to size the
+    planes, see :func:`_infer_dim`) is bucket 0 for every row."""
+    if dim == 0:
+        return F.lit(0)
     terms = []
     for j in range(planes):
         arr = ", ".join(_fmt_double(x) for x in _plane_values(first_plane + j, dim))
         d = (
-            f"aggregate(zip_with({col_name}, array({arr}), (x, y) -> x * y), "
+            f"aggregate(zip_with({v}, array({arr}), (x, y) -> x * y), "
             f"0.0D, (acc, t) -> acc + t)"
         )
         terms.append(f"(CASE WHEN ({d}) > 0.0D THEN {1 << j} ELSE 0 END)")
     return F.expr(f"CAST({' + '.join(terms)} AS INT)")
 
 
-def srp_bucket(
-    v: Column | str, planes: int = 8, first_plane: int = 0, dim: int | None = None
-) -> Column:
-    """SRP bucket id in [0, 2^planes): bit j = sign(dot(v, plane_{j+first_plane})).
-
-    ``first_plane`` selects a disjoint slice of the deterministic plane
-    family — the banded multi-table LSH uses slice t*planes for table t.
-    ``v`` must be a materialized double-array column attribute — it is
-    referenced once per plane.
-
-    When ``dim`` is known (uniform-dim embedding tables — the contract
-    of the `embeddings` source), each plane becomes a constant-folded
-    literal array and the per-plane dot is one zip_with+fold; the
-    per-element modular arithmetic runs once at plan-build time instead
-    of per (row × element × plane). Pass ``v`` as a column NAME to
-    additionally build the whole bucket as one ``F.expr`` (single py4j
-    round-trip — see :func:`_srp_bucket_expr`). ``dim=None`` keeps the
-    dim-agnostic fallback. All spellings fold the identical sum
-    left-to-right over identical double values, so bucket ids are
-    bit-identical.
-    """
-    if dim is not None and isinstance(v, str):
-        return _srp_bucket_expr(v, planes, first_plane, dim)
-    if dim is not None:
-        out = F.lit(0)
-        for j in range(planes):
-            d = F.aggregate(
-                F.zip_with(v, _plane_lit(first_plane + j, dim), lambda x, y: x * y),
-                F.lit(0.0),
-                lambda acc, t: acc + t,
-            )
-            out = out + F.when(d > 0, F.lit(1 << j)).otherwise(F.lit(0))
-        return out.cast("int")
-    if isinstance(v, str):
-        v = F.col(v)
-
-    size = F.size(v)
-
-    def plane_dot(j: int) -> Column:
-        return F.aggregate(
-            F.sequence(F.lit(1), size),
-            F.lit(0.0),
-            lambda acc, i: acc + F.element_at(v, i) * _plane_component(j, i),
-        )
-
-    out = F.lit(0)
-    for j in range(planes):
-        out = out + F.when(plane_dot(first_plane + j) > 0, F.lit(1 << j)).otherwise(
-            F.lit(0)
-        )
-    return out.cast("int")
-
-
-def _infer_dim(df: DataFrame, vec_col: str) -> int | None:
-    """Embedding dimensionality from the first row (one tiny job; the
-    scan is column-pruned to the vector column). None on an empty
-    input — callers then keep the dim-agnostic plane spelling."""
-    row = df.select(F.size(F.col(vec_col)).alias("d")).first()
-    if row is None or row["d"] is None or row["d"] <= 0:
-        return None
-    return int(row["d"])
+def _infer_dim(df: DataFrame, vec_col: str) -> int:
+    """Embedding dimensionality from the first row whose vector is
+    non-null and non-empty (one tiny job; the scan is column-pruned to
+    the vector column). 0 when no row has one."""
+    d = F.size(F.col(vec_col))
+    row = df.select(d.alias("d")).filter(F.col("d") > 0).first()
+    return 0 if row is None else int(row["d"])
 
 
 def suggested_planes(
@@ -282,13 +219,13 @@ def srp_lsh_topk(
     k: int = 5,
     planes: int = 8,
     hamming_probes: int = 0,
-    dim: int | None = None,
     neg_label_col: str | None = None,
 ) -> DataFrame:
     """Approximate top-k: only corpus vectors in the query's probed SRP
-    bucket(s) are scored. ``dim=None`` infers the (uniform) embedding
-    dim from the first corpus row so the SRP planes become constant-
-    folded literal arrays (see :func:`srp_bucket`).
+    bucket(s) are scored. The SRP planes are sized by the corpus's
+    (uniform) embedding dim, read from its first non-empty vector
+    (:func:`_infer_dim`); a vector of another length, empty or null
+    lands in bucket 0.
 
     ``neg_label_col`` turns the search into contrastive HARD-NEGATIVE
     MINING: candidates sharing the query's label are dropped before
@@ -309,8 +246,7 @@ def srp_lsh_topk(
     one more lookup against that same layout, and a corpus vector can
     match a query at most once (probe buckets are distinct).
     """
-    if dim is None:
-        dim = _infer_dim(corpus, vec_col)
+    dim = _infer_dim(corpus, vec_col)
     c_cols = [
         F.col(id_col).alias("vec_id"),
         to_double_array(F.col(vec_col)).alias("cv"),
@@ -758,7 +694,6 @@ def embedding_neardup_pairs(
     threshold: float = 0.99,
     planes_per_table: int = 16,
     n_tables: int = 4,
-    dim: int | None = None,
 ) -> DataFrame:
     """Near-duplicate (id_a < id_b) pairs by cosine ≥ threshold, banded
     multi-table SRP blocking (the MinHash band design transplanted to
@@ -781,10 +716,10 @@ def embedding_neardup_pairs(
     Shuffle shape: one explode (×n_tables, map-side) + one equi-join on
     the (table, bucket) key + one distinct — all sub-quadratic while
     buckets stay balanced; raise planes_per_table to shrink buckets,
-    raise n_tables to buy recall.
+    raise n_tables to buy recall. The planes are sized as in
+    :func:`srp_lsh_topk`.
     """
-    if dim is None:
-        dim = _infer_dim(corpus, vec_col)
+    dim = _infer_dim(corpus, vec_col)
     c = corpus.select(
         F.col(id_col).alias("vec_id"), to_double_array(F.col(vec_col)).alias("v")
     ).withColumn("n", F.sqrt(sq_norm(F.col("v"))))
@@ -837,7 +772,6 @@ def knn_graph(
     vec_col: str,
     k: int = 5,
     planes: int = 8,
-    dim: int | None = None,
     mutual: bool = True,
     probe_depth: int = 1,
 ) -> DataFrame:
@@ -869,8 +803,7 @@ def knn_graph(
     """
     if probe_depth not in (1, 2):
         raise ValueError("probe_depth must be 1 or 2")
-    if dim is None:
-        dim = _infer_dim(corpus, vec_col)
+    dim = _infer_dim(corpus, vec_col)
     c = (
         corpus.select(
             F.col(id_col).alias("vec_id"), to_double_array(F.col(vec_col)).alias("cv")
@@ -937,7 +870,6 @@ def density_prune(
     k: int = 5,
     planes: int = 8,
     drop_frac: float = 0.2,
-    dim: int | None = None,
 ) -> DataFrame:
     """Density-based diversification: rank every vector by the MEAN
     cosine to its k approximate nearest neighbors (its local density)
@@ -961,14 +893,18 @@ def density_prune(
     Returns (id, degree, density, rank, kept) for every node with at
     least one kNN edge; isolated nodes (empty probe neighborhoods —
     maximally sparse regions) are by definition keepers and absent
-    from the ranking.
+    from the ranking. An edge with a null cosine (a vector that is
+    null or not of the corpus's dim) is no neighbor: it ranks below
+    every scored candidate in :func:`knn_graph`, and dropping it here
+    leaves such a vector isolated and every other node's edges as
+    they are without it.
     """
     from anime_data_pipeline_spark.functions.compat import dround
     from anime_data_pipeline_spark.operators.ordering import bucketed_global_rank
 
     edges = knn_graph(
-        corpus, id_col, vec_col, k=k, planes=planes, dim=dim, mutual=False
-    )
+        corpus, id_col, vec_col, k=k, planes=planes, mutual=False
+    ).filter(F.col("cosine").isNotNull())
     dens = edges.groupBy("src").agg(
         F.count(F.lit(1)).cast("long").alias("degree"),
         dround(F.avg("cosine"), 6).alias("density"),

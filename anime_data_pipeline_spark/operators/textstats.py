@@ -291,24 +291,29 @@ def redact_pii_sql(text_expr: str) -> dict[str, str]:
     }
 
 
-# Gopher rule thresholds (Rae et al. 2021, Table A1) and stop list.
+# Gopher quality-rule thresholds (Rae et al. 2021, Table A1) and stop list.
+GOPHER_WORDS_MIN = 50
+GOPHER_WORDS_MAX = 100_000
+GOPHER_MEAN_WORD_LEN_MIN = 3.0
+GOPHER_MEAN_WORD_LEN_MAX = 10.0
+GOPHER_SYMBOL_RATIO_MAX = 0.1
+GOPHER_BULLET_FRAC_MAX = 0.9
+GOPHER_ELLIPSIS_FRAC_MAX = 0.3
+GOPHER_ALPHA_WORD_FRAC_MIN = 0.8
+GOPHER_STOP_HITS_MIN = 2
 GOPHER_STOPS = ("the", "be", "to", "of", "and", "that", "have", "with")
 BULLETS = ("-", "*")
 
+# Gopher repetition thresholds (Table A2; see repetition_signals).
+GOPHER_DUP_LINE_MAX = 0.30
+GOPHER_DUP_PARA_MAX = 0.30
+GOPHER_DUP_LINE_CHAR_MAX = 0.20
+GOPHER_DUP_PARA_CHAR_MAX = 0.20
+GOPHER_TOP_NGRAM_MAX = {2: 0.20, 3: 0.18, 4: 0.16}
+GOPHER_DUP_NGRAM_MAX = {5: 0.15, 10: 0.10}
 
-def gopher_rules(
-    df: DataFrame,
-    text_col: str,
-    min_words: int = 50,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    max_symbol_ratio: float = 0.1,
-    max_bullet_frac: float = 0.9,
-    max_ellipsis_frac: float = 0.3,
-    min_alpha_word_frac: float = 0.8,
-    min_stop_hits: int = 2,
-) -> DataFrame:
+
+def gopher_rules(df: DataFrame, text_col: str) -> DataFrame:
     """Gopher quality-rule bundle (Rae et al. 2021 Table A1 — the
     standard pre-training document filter): per-doc rule metrics, one
     boolean per rule, and the conjunction ``pass_gopher``.
@@ -349,14 +354,14 @@ def gopher_rules(
         F.filter(stop_lit, lambda w: F.array_contains(toks, w))
     ).cast("long")
     rules = {
-        "r_word_count": (n_words >= min_words) & (n_words <= max_words),
-        "r_mean_word_len": (mean_wl >= min_mean_word_len)
-        & (mean_wl <= max_mean_word_len),
-        "r_symbol_ratio": symbol_ratio <= max_symbol_ratio,
-        "r_bullet": bullet_frac <= max_bullet_frac,
-        "r_ellipsis": ellipsis_frac <= max_ellipsis_frac,
-        "r_alpha_words": alpha_frac >= min_alpha_word_frac,
-        "r_stopwords": stop_hits >= min_stop_hits,
+        "r_word_count": (n_words >= GOPHER_WORDS_MIN) & (n_words <= GOPHER_WORDS_MAX),
+        "r_mean_word_len": (mean_wl >= GOPHER_MEAN_WORD_LEN_MIN)
+        & (mean_wl <= GOPHER_MEAN_WORD_LEN_MAX),
+        "r_symbol_ratio": symbol_ratio <= GOPHER_SYMBOL_RATIO_MAX,
+        "r_bullet": bullet_frac <= GOPHER_BULLET_FRAC_MAX,
+        "r_ellipsis": ellipsis_frac <= GOPHER_ELLIPSIS_FRAC_MAX,
+        "r_alpha_words": alpha_frac >= GOPHER_ALPHA_WORD_FRAC_MIN,
+        "r_stopwords": stop_hits >= GOPHER_STOP_HITS_MIN,
     }
     out = (
         df.withColumn("n_words", n_words)
@@ -374,18 +379,7 @@ def gopher_rules(
     return out.withColumn("pass_gopher", passed).drop("_g_toks", "_g_lines")
 
 
-def gopher_sql_projection(
-    text_expr: str,
-    min_words: int = 50,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    max_symbol_ratio: float = 0.1,
-    max_bullet_frac: float = 0.9,
-    max_ellipsis_frac: float = 0.3,
-    min_alpha_word_frac: float = 0.8,
-    min_stop_hits: int = 2,
-) -> dict[str, str]:
+def gopher_sql_projection(text_expr: str) -> dict[str, str]:
     """DuckDB spelling of every gopher_rules output, keyed by name."""
     toks = tokens_sql(text_expr)
     n_words = f"CAST(len({toks}) AS BIGINT)"
@@ -424,14 +418,15 @@ def gopher_sql_projection(
         "ellipsis_frac": ellipsis_frac,
         "alpha_word_frac": alpha_frac,
         "stop_hits": stop_hits,
-        "r_word_count": f"({n_words} >= {min_words} AND {n_words} <= {max_words})",
-        "r_mean_word_len": f"(({mean_wl}) >= {min_mean_word_len}"
-        f" AND ({mean_wl}) <= {max_mean_word_len})",
-        "r_symbol_ratio": f"(({symbol_ratio}) <= {max_symbol_ratio})",
-        "r_bullet": f"(({bullet_frac}) <= {max_bullet_frac})",
-        "r_ellipsis": f"(({ellipsis_frac}) <= {max_ellipsis_frac})",
-        "r_alpha_words": f"(({alpha_frac}) >= {min_alpha_word_frac})",
-        "r_stopwords": f"({stop_hits} >= {min_stop_hits})",
+        "r_word_count": f"({n_words} >= {GOPHER_WORDS_MIN}"
+        f" AND {n_words} <= {GOPHER_WORDS_MAX})",
+        "r_mean_word_len": f"(({mean_wl}) >= {GOPHER_MEAN_WORD_LEN_MIN}"
+        f" AND ({mean_wl}) <= {GOPHER_MEAN_WORD_LEN_MAX})",
+        "r_symbol_ratio": f"(({symbol_ratio}) <= {GOPHER_SYMBOL_RATIO_MAX})",
+        "r_bullet": f"(({bullet_frac}) <= {GOPHER_BULLET_FRAC_MAX})",
+        "r_ellipsis": f"(({ellipsis_frac}) <= {GOPHER_ELLIPSIS_FRAC_MAX})",
+        "r_alpha_words": f"(({alpha_frac}) >= {GOPHER_ALPHA_WORD_FRAC_MIN})",
+        "r_stopwords": f"({stop_hits} >= {GOPHER_STOP_HITS_MIN})",
     }
     cols["pass_gopher"] = "(" + " AND ".join(
         cols[k] for k in cols if k.startswith("r_")
@@ -647,20 +642,11 @@ def readability_sql_projection(text_expr: str) -> dict[str, str]:
 # included). Both choices bias the fractions UP, i.e. keep/drop is
 # never laxer than the published filters.
 #
-# Scale shape: line/paragraph metrics are pure array expressions (scan
-# speed, no shuffle). The n-gram metrics explode once for ALL n values
-# and aggregate on (id, n, gram) — doc-local keys, so partial
-# aggregation absorbs the repeats map-side and no key can outgrow its
-# document; two further (id,·) reductions and one id-keyed join back.
+# Scale shape: map-only, no shuffle. Line/paragraph metrics are pure
+# array expressions; the n-gram metrics come from one doc-local
+# vectorized UDF per Arrow batch. The DuckDB twin (repetition_sql)
+# unnests (id, n, gram) rows and aggregates them instead.
 # ---------------------------------------------------------------------------
-GOPHER_DUP_LINE_MAX = 0.30
-GOPHER_DUP_PARA_MAX = 0.30
-GOPHER_DUP_LINE_CHAR_MAX = 0.20
-GOPHER_DUP_PARA_CHAR_MAX = 0.20
-GOPHER_TOP_NGRAM_MAX = {2: 0.20, 3: 0.18, 4: 0.16}
-GOPHER_DUP_NGRAM_MAX = {5: 0.15, 10: 0.10}
-
-
 def _rep_units(text: Column, sep: str) -> Column:
     """Trimmed nonempty segments of ``text`` split on ``sep``."""
     return F.filter(
@@ -695,15 +681,13 @@ def _gram_metrics_udf(top_ns: tuple[int, ...], dup_ns: tuple[int, ...]):
     one lexicographic ``np.unique(axis=0)`` per n — all doc-local, so
     the operator is MAP-ONLY (no explode, no exchange, no join back).
 
-    This is the measured-fast path (same rationale as
-    ``dedup.simhash_arrow_udf``): the native form builds every gram
-    string through Catalyst's INTERPRETED higher-order evaluator and
-    then shuffles (id, n, gram) rows through two aggregations and a
-    join — ~3× the wall time at sf0.1 — even though every key is
-    doc-local. Both produce identical integers (token equality ⇔ gram
-    equality since tokens cannot contain the join character), pinned
-    by tests/test_textstats.py; the native form remains as the
-    expression-only variant the DuckDB oracle mirrors 1:1.
+    Counting token codes instead of joined gram strings gives the
+    same integers, since tokens cannot contain the join character
+    (token equality ⇔ gram equality). An explode → aggregate → join
+    spelling of the same metrics measured ~3× the wall time at sf0.1:
+    it builds every gram string through Catalyst's interpreted
+    higher-order evaluator and shuffles (id, n, gram) rows although
+    every key is doc-local.
 
     Returns a pandas UDF: text column → struct of ``_top{n}``
     (lexicographic-max (count, mass) → mass, 0 when no gram repeats)
@@ -784,7 +768,6 @@ def repetition_signals(
     text_col: str,
     top_ns: tuple[int, ...] = (2, 3, 4),
     dup_ns: tuple[int, ...] = (5, 10),
-    impl: str = "arrow",
 ) -> DataFrame:
     """Per-document Gopher Table A2 repetition metrics plus the
     conjunction ``repetition_keep`` (every metric at or under its
@@ -793,97 +776,42 @@ def repetition_signals(
     NULL text counts as empty (all-zero metrics, keep=true), matching
     the coalesce in :func:`repetition_sql`.
 
-    ``impl="arrow"`` (default) computes the n-gram metrics doc-locally
-    in one vectorized pandas UDF (:func:`_gram_metrics_udf`) — the
-    whole operator becomes one map-only projection, no exchange;
-    ``impl="native"`` keeps the explode → two aggregations → join
-    Catalyst form (the shape the DuckDB oracle mirrors). Outputs are
-    bit-identical (pinned by tests)."""
+    One map-only projection, no exchange: the line/paragraph metrics
+    are array expressions and the n-gram metrics come doc-locally from
+    one vectorized pandas UDF (:func:`_gram_metrics_udf`)."""
     if not top_ns and not dup_ns:
         raise ValueError("at least one of top_ns/dup_ns must be non-empty")
-    all_ns = sorted(set(top_ns) | set(dup_ns))
     text = F.coalesce(F.col(text_col), F.lit(""))
     line_f, line_cf = _dup_unit_fracs(text, "\n")
     para_f, para_cf = _dup_unit_fracs(text, "\n\n")
-    base = df.select(
-        F.col(id_col),
-        F.greatest(F.length(text), F.lit(1)).cast("double").alias("_n_chars"),
-        line_f.alias("dup_line_frac"),
-        line_cf.alias("dup_line_char_frac"),
-        para_f.alias("dup_para_frac"),
-        para_cf.alias("dup_para_char_frac"),
-        *([F.col(text_col).alias("_gm_text")] if impl == "arrow" else []),
-    )
-
-    if impl == "arrow":
-        gm = _gram_metrics_udf(tuple(top_ns), tuple(dup_ns))
-        out = (
-            base.withColumn("_gm", gm(F.col("_gm_text")))
-            .select(
-                "*",
-                *[F.col(f"_gm._top{n}").alias(f"_top{n}") for n in top_ns],
-                *[F.col(f"_gm._dup{n}").alias(f"_dup{n}") for n in dup_ns],
-            )
-            .drop("_gm", "_gm_text")
+    gm = _gram_metrics_udf(tuple(top_ns), tuple(dup_ns))
+    out = (
+        df.select(
+            F.col(id_col),
+            F.greatest(F.length(text), F.lit(1)).cast("double").alias("_n_chars"),
+            line_f.alias("dup_line_frac"),
+            line_cf.alias("dup_line_char_frac"),
+            para_f.alias("dup_para_frac"),
+            para_cf.alias("dup_para_char_frac"),
+            F.col(text_col).alias("_gm_text"),
         )
-        return _repetition_finish(out, top_ns, dup_ns)
-
-    # One explode serves every n: array of (n, gram) structs per doc.
-    empty = F.array().cast("array<struct<n:int,g:string>>")
-    toked = df.select(F.col(id_col).alias("_id"), tokens(text).alias("_t"))
-    tarr = F.col("_t")
-
-    def _ngrams(n: int) -> Column:
-        make = lambda i: F.struct(  # noqa: E731
-            F.lit(n).alias("n"),
-            F.concat_ws(
-                " ", *[F.element_at(tarr, i + j) for j in range(n)]
-            ).alias("g"),
+        .withColumn("_gm", gm(F.col("_gm_text")))
+        .select(
+            "*",
+            *[F.col(f"_gm._top{n}").alias(f"_top{n}") for n in top_ns],
+            *[F.col(f"_gm._dup{n}").alias(f"_dup{n}") for n in dup_ns],
         )
-        return F.when(
-            F.size(tarr) >= n,
-            F.transform(F.sequence(F.lit(1), F.size(tarr) - (n - 1)), make),
-        ).otherwise(empty)
-
-    grams = toked.select(
-        "_id", F.explode(F.flatten(F.array(*[_ngrams(n) for n in all_ns]))).alias("_ng")
-    ).select("_id", F.col("_ng.n").alias("_n"), F.col("_ng.g").alias("_g"))
-    # word-char mass: join spaces don't count (length − (n−1))
-    mass = (
-        F.col("_cnt")
-        * (F.length(F.col("_g")) - (F.col("_n") - F.lit(1))).cast("long")
-    ).alias("_m")
-    counts = grams.groupBy("_id", "_n", "_g").agg(F.count("*").alias("_cnt"))
-    # max(struct(cnt, mass)) = lexicographic: the char mass of the most
-    # frequent n-gram, larger-mass tie-break — exactly the oracle's
-    # "max mass among max-count grams" two-level aggregate.
-    per_n = counts.groupBy("_id", "_n").agg(
-        F.max(
-            F.when(F.col("_cnt") >= 2, F.struct(F.col("_cnt").alias("c"), mass))
-        ).alias("_top"),
-        F.sum(F.when(F.col("_cnt") >= 2, mass).otherwise(F.lit(0))).alias("_dup"),
+        .drop("_gm", "_gm_text")
     )
-    per_doc = per_n.groupBy("_id").agg(
-        *[
-            F.max(F.when(F.col("_n") == n, F.col("_top._m"))).alias(f"_top{n}")
-            for n in top_ns
-        ],
-        *[
-            F.max(F.when(F.col("_n") == n, F.col("_dup"))).alias(f"_dup{n}")
-            for n in dup_ns
-        ],
-    )
-
-    out = base.join(per_doc, base[id_col] == per_doc["_id"], "left").drop("_id")
     return _repetition_finish(out, top_ns, dup_ns)
 
 
 def _repetition_finish(
     out: DataFrame, top_ns: tuple[int, ...], dup_ns: tuple[int, ...]
 ) -> DataFrame:
-    """Shared tail of :func:`repetition_signals`: fractions from the
-    per-doc ``_top{n}``/``_dup{n}`` integers (NULL and 0 coalesce the
-    same way, so both impls land here) plus the keep conjunction."""
+    """Tail of :func:`repetition_signals`: fractions from the per-doc
+    ``_top{n}``/``_dup{n}`` integers (NULL coalesces to 0) plus the
+    keep conjunction."""
     keep = (
         (F.col("dup_line_frac") <= GOPHER_DUP_LINE_MAX)
         & (F.col("dup_para_frac") <= GOPHER_DUP_PARA_MAX)

@@ -26,20 +26,30 @@ from anime_data_pipeline_spark.operators.textstats import quality_columns
 
 
 def scan_input_splits(df: DataFrame) -> int | None:
-    """The number of tasks Spark's file scans give this plan: the sum
-    of every ``FileSourceScanExec`` leaf's input-RDD partition count in
-    the physical plan before AQE (under AQE the executed plan is itself
-    one leaf), so a shuffle-final plan still reports its scans.
-    Planning lists and packs the files; nothing executes.
-    None when any leaf is not a file scan (local relation, range,
-    cached relation)."""
-    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+    """The number of tasks Spark's file scans give this plan's map
+    stage: the sum of the input-RDD partition counts of the
+    ``FileSourceScanExec`` leaves of the physical plan before AQE
+    (under AQE the executed plan is itself one leaf), so a
+    shuffle-final plan still reports its scans. The build side of a
+    broadcast join runs in a job of its own, not in this stage, so
+    only the stream side is counted. Planning lists and packs the
+    files; nothing executes. None when a counted leaf is not a file
+    scan (local relation, range, cached relation)."""
     splits = 0
-    for i in range(leaves.size()):
-        leaf = leaves.apply(i)
-        if leaf.getClass().getSimpleName() != "FileSourceScanExec":
-            return None
-        splits += leaf.inputRDD().getNumPartitions()
+    todo = [df._jdf.queryExecution().sparkPlan()]
+    while todo:
+        node = todo.pop()
+        name = node.getClass().getSimpleName()
+        if name in ("BroadcastHashJoinExec", "BroadcastNestedLoopJoinExec"):
+            build_left = node.buildSide().toString() == "BuildLeft"
+            todo.append(node.right() if build_left else node.left())
+            continue
+        children = node.children()
+        if children.isEmpty():
+            if name != "FileSourceScanExec":
+                return None
+            splits += node.inputRDD().getNumPartitions()
+        todo.extend(children.apply(i) for i in range(children.size()))
     return splits
 
 

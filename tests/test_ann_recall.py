@@ -274,23 +274,105 @@ def test_ivf_topk_zero_query_vector_scores_null(spark):
     assert [got[(11, i)] for i in range(1, 5)] == [(1, 1.0), (3, 1.0), (4, 0.0), (2, None)]
 
 
-def test_srp_bucket_literal_planes_match_elementwise_form(spark, sf_dir):
-    """The constant-folded literal-plane spelling (the q42 regression
-    fix) is bit-identical to the per-element modular form."""
+def test_srp_bucket_matches_python_left_fold(spark, sf_dir):
+    """The parsed literal-plane bucket equals a Python left fold of
+    each vector against the same deterministic planes: bit j is set
+    when ((0 + v1*p1) + v2*p2) + ... is positive. A vector whose length
+    is not the planes' dim (empty or null included) is bucket 0."""
     from anime_data_pipeline_spark.operators.similarity import (
+        _plane_values,
         srp_bucket,
         to_double_array,
     )
 
-    df = load_table(spark, sf_dir, "embeddings").select(
+    planes = [_plane_values(j, 64) for j in range(8)]
+
+    def bucket_py(v):
+        if v is None or len(v) != 64:
+            return 0
+        out = 0
+        for j, plane in enumerate(planes):
+            d = 0.0
+            for x, y in zip(v, plane):
+                d = d + x * y
+            out += (1 << j) if d > 0 else 0
+        return out
+
+    emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", to_double_array(F.col("embedding")).alias("v")
     )
-    got = df.select(
-        "vec_id",
-        srp_bucket(F.col("v"), 8, dim=64).alias("fast"),
-        srp_bucket(F.col("v"), 8, dim=None).alias("ref"),
-    ).filter(F.col("fast") != F.col("ref"))
-    assert got.count() == 0
+    hostile = spark.createDataFrame(
+        [(-1, []), (-2, None), (-3, [1.0, 2.0])], "vec_id long, v array<double>"
+    )
+    rows = (
+        emb.unionByName(hostile)
+        .select("vec_id", "v", srp_bucket("v", 8, dim=64).alias("b"))
+        .collect()
+    )
+    assert len(rows) > 3
+    assert len({r["b"] for r in rows}) > 1
+    for r in rows:
+        assert r["b"] == bucket_py(r["v"]), r["vec_id"]
+
+
+def test_srp_operators_survive_an_empty_or_null_first_vector(spark, sf_dir):
+    """The SRP planes are sized by the first non-empty vector, so a
+    corpus whose first vector is [] or null runs, and every operator's
+    rows that do not involve that vector are the rows it gives without
+    it (such a vector scores null and ranks below every candidate). A
+    corpus of that vector alone runs too."""
+    from anime_data_pipeline_spark.operators.similarity import (
+        density_prune,
+        embedding_neardup_pairs,
+        knn_graph,
+        to_double_array,
+    )
+
+    base = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", to_double_array(F.col("embedding")).alias("v")
+    )
+    # scaled copies give the near-dup operator pairs to find
+    emb = base.unionByName(
+        base.filter(F.col("vec_id") % 7 == 0).select(
+            (F.col("vec_id") + 100000).alias("vec_id"),
+            F.transform("v", lambda x: x * F.lit(2.0)).alias("v"),
+        )
+    )
+    queries = emb.filter(F.col("vec_id") % 37 == 0)
+    ops = {
+        "srp_lsh_topk": (
+            lambda c: srp_lsh_topk(
+                c, queries, "vec_id", "v", k=_K, planes=_PLANES, hamming_probes=1
+            ),
+            ("query_id", "vec_id"),
+        ),
+        "embedding_neardup_pairs": (
+            lambda c: embedding_neardup_pairs(c, "vec_id", "v"),
+            ("id_a", "id_b"),
+        ),
+        "knn_graph": (
+            lambda c: knn_graph(c, "vec_id", "v", k=_K, planes=_PLANES),
+            ("src", "dst"),
+        ),
+        "density_prune": (
+            lambda c: density_prune(c, "vec_id", "v", k=_K, planes=_PLANES),
+            ("vec_id",),
+        ),
+    }
+    want = {
+        name: sorted(map(tuple, op(emb).collect())) for name, (op, _) in ops.items()
+    }
+    assert all(want.values()), want
+    for first in ([], None):
+        hostile = spark.createDataFrame([(-1, first)], "vec_id long, v array<double>")
+        corpus = hostile.unionByName(emb)
+        assert corpus.first()["vec_id"] == -1
+        for name, (op, ids) in ops.items():
+            rows = op(corpus).collect()
+            got = sorted(tuple(r) for r in rows if all(r[c] != -1 for c in ids))
+            assert got == want[name], (name, first)
+            # no vector to size the planes: every bucket is 0, no raise
+            op(hostile).collect()
 
 
 def test_semantic_dedup_drops_scaled_copies_keeps_originals(spark):

@@ -110,7 +110,7 @@ def test_banded_srp_bucket_occupancy_bounded(spark, sf_dir):
     total_cand = 0
     for t in range(4):
         hist = (
-            base.withColumn("b", srp_bucket(F.col("v"), 16, first_plane=t * 16))
+            base.withColumn("b", srp_bucket("v", 16, first_plane=t * 16, dim=64))
             .groupBy("b")
             .count()
         )
@@ -126,12 +126,18 @@ def test_banded_srp_bucket_occupancy_bounded(spark, sf_dir):
     )
 
 
-def test_simhash_arrow_matches_native(spark):
-    """The Arrow-batched numpy bit-fold (q33's default) must be
-    bit-identical to the Catalyst expression fold (the oracle-mirrored
-    form), including the edge rows the batched reduceat has to special-
-    case: empty token lists, null text, and single-token docs."""
+def test_simhash_matches_duckdb_reference(spark):
+    """The Arrow-batched numpy bit-fold (q33) must equal q33's DuckDB
+    fold (``_simhash_term_sql`` over ``polyhash_sql`` token hashes),
+    including the edge rows the batched reduceat has to special-case:
+    empty token lists, null text, and single-token docs."""
+    import duckdb
+    import pyarrow as pa
+
+    from anime_data_pipeline_spark.functions.hashing import polyhash_sql
+    from anime_data_pipeline_spark.functions.text import tokens_sql
     from anime_data_pipeline_spark.operators.dedup import simhash_df
+    from anime_data_pipeline_spark.queries.dedup_q import _simhash_term_sql
 
     rows = [
         (0, "the quick brown fox jumps over the lazy dog"),
@@ -142,12 +148,24 @@ def test_simhash_arrow_matches_native(spark):
         (5, "repeat repeat repeat repeat"),
     ] + [(10 + i, f"doc {i} filler text with shared words {i % 3}") for i in range(50)]
     df = spark.createDataFrame(rows, "doc_id int, text string")
-    arrow = {r["doc_id"]: r["fp"] for r in simhash_df(df, "text", out="fp").collect()}
-    native = {
-        r["doc_id"]: r["fp"]
-        for r in simhash_df(df, "text", out="fp", impl="native").collect()
-    }
-    assert arrow == native
+    got = {r["doc_id"]: r["fp"] for r in simhash_df(df, "text", out="fp").collect()}
+    docs = pa.table(
+        {"doc_id": [r[0] for r in rows], "text": [r[1] for r in rows]}
+    )
+    con = duckdb.connect()
+    con.register("docs", docs)
+    fold = " + ".join(_simhash_term_sql(b) for b in range(30))
+    want = dict(
+        con.execute(
+            f"""SELECT doc_id, CAST({fold} AS BIGINT) FROM (
+                  SELECT doc_id,
+                         list_transform({tokens_sql("text")},
+                                        t -> {polyhash_sql("t")}) AS th
+                  FROM docs)"""
+        ).fetchall()
+    )
+    assert got == want
+    assert got[1] == got[2] == got[4] == 0
 
 
 def test_star_cc_path_graph_logarithmic_rounds(spark):

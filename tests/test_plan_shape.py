@@ -565,18 +565,59 @@ def test_map_parallelism_guard_sees_through_shuffle_final_plans(spark, tmp_path)
     assert scan_input_splits(scan) == scan.rdd.getNumPartitions()
     # a plan with several scans runs one task per split of each: a
     # union of the one-split file with itself is 2 tasks (packing the
-    # plan's distinct files together gives 1), and a join adds both
-    # sides' scans
+    # plan's distinct files together gives 1), and a shuffle join adds
+    # both sides' scans
     assert scan_input_splits(df.unionByName(df)) == 2
-    assert scan_input_splits(scan.join(df, "id")) == (
-        scan.rdd.getNumPartitions() + df.rdd.getNumPartitions()
-    )
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        assert scan_input_splits(scan.join(df, "id")) == (
+            scan.rdd.getNumPartitions() + df.rdd.getNumPartitions()
+        )
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
 
     # file-less plans fall back to the honest RDD partition count
     local = spark.range(0, 10).coalesce(1)
     assert scan_input_splits(local) is None
     assert scan_input_splits(df.unionByName(local)) is None
     assert ensure_map_parallelism(local).rdd.getNumPartitions() == p
+
+
+def test_map_parallelism_guard_skips_broadcast_build_sides(spark, tmp_path):
+    """A broadcast join's build side is scanned by a job of its own,
+    so its splits are no tasks of the stage the guard protects: only
+    the stream side counts, whichever side is built, and for a
+    broadcast nested-loop join too."""
+    from pyspark.sql import functions as F
+
+    from anime_data_pipeline_spark.plans.curation import scan_input_splits
+
+    multi = str(tmp_path / "multi")
+    spark.range(0, 100_000).repartition(5).write.parquet(multi)
+    one = str(tmp_path / "one")
+    spark.range(0, 1000).coalesce(1).write.parquet(one)
+    scan, small = spark.read.parquet(multi), spark.read.parquet(one)
+    n = scan.rdd.getNumPartitions()
+    assert n > 1
+
+    def plan_has(df, name):
+        return name in df._jdf.queryExecution().sparkPlan().toString()
+
+    right = scan.join(F.broadcast(small), "id")
+    left = F.broadcast(small).join(scan, "id")
+    nested = scan.join(F.broadcast(small), scan["id"] < small["id"])
+    assert plan_has(right, "BroadcastHashJoin")
+    assert plan_has(left, "BroadcastHashJoin")
+    assert plan_has(nested, "BroadcastNestedLoopJoin")
+    assert scan_input_splits(right) == n
+    assert scan_input_splits(left) == n
+    assert scan_input_splits(nested) == n
+    # a non-file leaf on the build side no longer hides the stream count
+    local = spark.range(0, 10)
+    assert scan_input_splits(scan.join(F.broadcast(local), "id")) == n
+    # a non-file leaf on the stream side still gives the fallback
+    assert scan_input_splits(local.join(F.broadcast(small), "id")) is None
 
 
 def test_split_math_mirrors_bin_packing_on_many_tiny_files(spark, tmp_path):

@@ -100,7 +100,9 @@ def test_repetition_signals_match_python_reference(spark):
 
     rng = random.Random(8194)
     docs = [(i, _random_doc(rng)) for i in range(150)]
-    # pinned edges alongside the random mass
+    rng = random.Random(8212)
+    docs += [(2000 + i, _random_doc(rng)) for i in range(120)]
+    # pinned edges alongside the random mass; NULL text counts as empty
     docs += [
         (1000, ""),
         (1001, " "),
@@ -108,6 +110,7 @@ def test_repetition_signals_match_python_reference(spark):
         (1003, "solo"),
         (1004, "x x x x x x x x x x"),
         (1005, "p q\n\np q\n\np q"),
+        (1006, None),
     ]
     df = spark.createDataFrame(docs, "doc_id long, text string")
     got = {
@@ -116,34 +119,9 @@ def test_repetition_signals_match_python_reference(spark):
     }
     assert len(got) == len(docs)
     for doc_id, text in docs:
-        want = _py_repetition(text)
+        want = _py_repetition(text or "")
         have = got[doc_id]
         for k, v in want.items():
             assert have[k] == v, (
                 f"doc {doc_id} {k}: spark={have[k]} py={v} text={text!r}"
             )
-
-
-def test_repetition_signals_arrow_matches_native(spark):
-    """The r12 map-only Arrow gram path must be bit-identical to the
-    native explode→aggregate→join form (the shape the oracle mirrors),
-    including NULL text and the pinned edge docs."""
-    from anime_data_pipeline_spark.operators.textstats import repetition_signals
-
-    rng = random.Random(8212)
-    docs = [(i, _random_doc(rng)) for i in range(120)]
-    docs += [
-        (1000, ""),
-        (1001, " "),
-        (1002, None),
-        (1003, "solo"),
-        (1004, "x x x x x x x x x x"),
-        (1005, "p q\n\np q\n\np q"),
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    a = repetition_signals(df, "doc_id", "text", impl="native")
-    b = repetition_signals(df, "doc_id", "text", impl="arrow")
-    assert a.schema == b.schema
-    assert a.columns == b.columns
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
