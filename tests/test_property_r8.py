@@ -9,6 +9,8 @@ from __future__ import annotations
 import random
 from collections import Counter
 
+from pyspark.sql import functions as F
+
 from anime_data_pipeline_spark.operators.textstats import (
     GOPHER_DUP_LINE_CHAR_MAX,
     GOPHER_DUP_LINE_MAX,
@@ -125,3 +127,47 @@ def test_repetition_signals_match_python_reference(spark):
             assert have[k] == v, (
                 f"doc {doc_id} {k}: spark={have[k]} py={v} text={text!r}"
             )
+
+
+def test_repetition_signals_arrow_matches_native(spark):
+    """The map-only Arrow gram path must equal the native SQL
+    explode→aggregate→join form (:func:`repetition_sql`, q194's DuckDB
+    oracle) row for row, including NULL text and the pinned edge docs.
+    Both sides round the fractions with the shared dround formula."""
+    import duckdb
+    import pyarrow as pa
+
+    from anime_data_pipeline_spark.functions.compat import dround
+    from anime_data_pipeline_spark.operators.textstats import (
+        repetition_signals,
+        repetition_sql,
+    )
+
+    rng = random.Random(8212)
+    docs = [(i, _random_doc(rng)) for i in range(120)]
+    docs += [
+        (1000, ""),
+        (1001, " "),
+        (1002, None),
+        (1003, "solo"),
+        (1004, "x x x x x x x x x x"),
+        (1005, "p q\n\np q\n\np q"),
+    ]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    b = repetition_signals(df, "doc_id", "text")
+    fracs = [c for c in b.columns if c.endswith("_frac")]
+    for c in fracs:
+        b = b.withColumn(c, dround(F.col(c), 6))
+    got = {r["doc_id"]: r.asDict() for r in b.collect()}
+
+    con = duckdb.connect()
+    con.register(
+        "documents",
+        pa.table({"doc_id": [d[0] for d in docs], "text": [d[1] for d in docs]}),
+    )
+    cur = con.execute(repetition_sql("SELECT doc_id, text FROM documents"))
+    names = [d[0] for d in cur.description]
+    want = {r[0]: dict(zip(names, r)) for r in cur.fetchall()}
+
+    assert names == b.columns
+    assert got == want
