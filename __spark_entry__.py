@@ -103,6 +103,12 @@ def entry(spark: SparkSession) -> DataFrame:
 #     assign_bucket_columns lost its column-name parameters — every
 #     query whose closure imports operators/similarity drifts: q43,
 #     q97, q116, q136, q148 (5 more, 89 in all).
+# (11) the LSH band join carries its verify columns (no signature
+#     persist, no join-back), q88's decontamination carries the packing
+#     columns (no survivors persist, no anti-join), the knn/near-dup/
+#     cohesion cosines are try_divide, and bucketed_global_rank joins
+#     its offsets null-safe — every importer was already drifted except
+#     centroid_cohesion's q77 (1 more, 90 in all).
 _CHANGED_THIS_ROUND: list[str] = [
     "q100_bloom_contamination",
     "q101_span_dedup",
@@ -177,6 +183,7 @@ _CHANGED_THIS_ROUND: list[str] = [
     "q72_multimodal_features",
     "q73_tag_inference",
     "q76_salted_join_hot_key",
+    "q77_label_centroid_cohesion",
     "q78_contamination_check",
     "q80_video_frame_sample",
     "q81_line_dedup",
@@ -208,7 +215,7 @@ _PRIORITY = [
     *_REWORKED_LAST_ROUND,
     # (d) stalest first. Round 13's window sampled the whole former
     # round-6/7 queue, so the stalest rows left are round 7's tail,
-    # then the round-8 cohort. With 89 changed entries the 50-row
+    # then the round-8 cohort. With 90 changed entries the 50-row
     # window takes none of them; they stay queued for the next
     # rotation.
     "q89_temperature_mix",

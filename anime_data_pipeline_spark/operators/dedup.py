@@ -90,22 +90,38 @@ def shingle_hash_sets(
 def band_candidates(hashed: DataFrame, bands: int, rows: int) -> DataFrame:
     """Distinct candidate pairs (id_a < id_b) from the LSH band join.
 
-    ``hashed`` must carry (doc, sig); callers persist it — it is read
-    by both join sides. The equi-join key is (band_idx, band_val), so
-    only bucket-colliding pairs are ever generated (sub-quadratic).
+    ``hashed`` carries (doc, sig); its other columns ride the band
+    explode as ``<col>_a`` / ``<col>_b``, so a verifier needs no
+    join-back and ``hashed`` no persist. The equi-join key is
+    (band_idx, band_val), so only bucket-colliding pairs are ever
+    generated (sub-quadratic). The join is a sort-merge join: both
+    sides are then one shuffle exchange, which Spark reuses, so the
+    signature lineage runs once (a broadcast join runs it again for
+    its build side: +18–37% warm CPU for standalone LSH on perfbench's
+    ``llm_curation`` seed-1/2 documents). Adaptive execution does not
+    reuse an exchange above a cached relation, so when ``hashed``
+    derives from a persisted table (the curation chains' ``uniq``)
+    each side reads the cache and folds its own signatures.
     """
+    carry = [c for c in hashed.columns if c not in ("doc", "sig")]
     exploded = hashed.select(
-        "doc", F.posexplode(band_values_expr("sig", bands, rows)).alias("band_idx", "band_val")
+        "doc",
+        *carry,
+        F.posexplode(band_values_expr("sig", bands, rows)).alias("band_idx", "band_val"),
     )
     a, b = exploded.alias("a"), exploded.alias("b")
     return (
         a.join(
-            b,
+            b.hint("merge"),
             (F.col("a.band_idx") == F.col("b.band_idx"))
             & (F.col("a.band_val") == F.col("b.band_val"))
             & (F.col("a.doc") < F.col("b.doc")),
         )
-        .select(F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b"))
+        .select(
+            F.col("a.doc").alias("id_a"),
+            F.col("b.doc").alias("id_b"),
+            *[F.col(f"{s}.{c}").alias(f"{c}_{s}") for s in ("a", "b") for c in carry],
+        )
         .distinct()
     )
 
@@ -129,7 +145,8 @@ def editdist_verify_neardups(
     same LSH band join; only colliding pairs pay the O(prefix²) DP,
     which runs map-side after the candidate join on texts capped at
     ``prefix`` chars (the standard bound that keeps worst-case cost
-    independent of document length at 100 TB). The DP itself is BANDED:
+    independent of document length at 100 TB), carried through the band
+    join. The DP itself is BANDED:
     any distance above ``(1−min_sim)·prefix`` cannot reach ``min_sim``,
     so Spark's thresholded levenshtein runs O(prefix·band) instead of
     O(prefix²) and early-outs to −1 (which the similarity filter
@@ -139,24 +156,17 @@ def editdist_verify_neardups(
     edit_sim = 1 − lev / max(len_a, len_b) ≥ ``min_sim``.
     """
     rows = k // bands
-    hashed = shingle_hash_sets(df, id_col, text_col, n).withColumn(
-        "sig", minhash_signature_expr("hashes", k)
+    capped = df.withColumn("_t", F.substring(F.col(text_col), 1, prefix))
+    hashed = shingle_hash_sets(capped, id_col, text_col, n, carry=("_t",)).select(
+        "doc", "_t", minhash_signature_expr("hashes", k).alias("sig")
     )
-    hashed = hashed.persist()
     cand = band_candidates(hashed, bands, rows)
-    texts = df.select(
-        F.col(id_col).alias("_tid"),
-        F.substring(F.col(text_col), 1, prefix).alias("_txt"),
-    )
-    joined = cand.join(
-        texts.select(F.col("_tid").alias("id_a"), F.col("_txt").alias("_ta")), "id_a"
-    ).join(texts.select(F.col("_tid").alias("id_b"), F.col("_txt").alias("_tb")), "id_b")
     # max distance that can still reach min_sim on prefix-capped texts
     max_lev = int((1.0 - min_sim) * prefix) + 1
-    lev = F.levenshtein(F.col("_ta"), F.col("_tb"), max_lev)
-    longest = F.greatest(F.length("_ta"), F.length("_tb"))
+    lev = F.levenshtein(F.col("_t_a"), F.col("_t_b"), max_lev)
+    longest = F.greatest(F.length("_t_a"), F.length("_t_b"))
     return (
-        joined.withColumn("lev", lev.cast("long"))
+        cand.withColumn("lev", lev.cast("long"))
         .filter(F.col("lev") >= 0)  # −1 = banded early-out (too distant)
         .withColumn(
             "edit_sim",
@@ -180,30 +190,21 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """Near-duplicate pairs (id_a < id_b) with exact verified Jaccard.
 
-    Plan shape: map (shingle+sign) → explode bands → self-equi-join on
-    (band_idx, band_value) → distinct candidate pairs → join back the
-    shingle-hash sets → exact Jaccard filter. Sub-quadratic: only
-    bucket-colliding pairs are ever compared. ``th_col``: a
+    Plan shape: map (shingle+sign) → explode bands carrying the
+    shingle-hash sets → self-equi-join on (band_idx, band_value) →
+    distinct candidate pairs → exact Jaccard filter. Sub-quadratic:
+    only bucket-colliding pairs are ever compared. ``th_col``: a
     precomputed token-hash column, as in :func:`shingle_hash_sets`.
     """
     rows = k // bands
     hashed = shingle_hash_sets(df, id_col, text_col, n, th_col=th_col).withColumn(
         "sig", minhash_signature_expr("hashes", k)
     )
-    # The signature table is consumed four times (both band-join sides +
-    # both verify-join sides). Persist it: it is ~100 bytes/row — tiny
-    # relative to the corpus — and recomputing shingle+signature four
-    # times dominates the runtime otherwise. At cluster scale this would
-    # be a checkpoint to parquet between pipeline stages.
-    hashed = hashed.persist()
     cand = band_candidates(hashed, bands, rows)
-    sets = hashed.select("doc", "hashes")
-    inter = F.size(F.array_intersect(F.col("ha"), F.col("hb")))
-    union = F.size(F.col("ha")) + F.size(F.col("hb")) - inter
+    inter = F.size(F.array_intersect(F.col("hashes_a"), F.col("hashes_b")))
+    union = F.size(F.col("hashes_a")) + F.size(F.col("hashes_b")) - inter
     return (
-        cand.join(sets.select(F.col("doc").alias("id_a"), F.col("hashes").alias("ha")), "id_a")
-        .join(sets.select(F.col("doc").alias("id_b"), F.col("hashes").alias("hb")), "id_b")
-        .withColumn("jaccard", inter.cast("double") / union)
+        cand.withColumn("jaccard", inter.cast("double") / union)
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -225,10 +226,10 @@ def minhash_quality_audit(
     right for this corpus?": a fat error tail at the threshold means
     the signature is too short for the dedup decision being made.
 
-    Plan shape identical to minhash_lsh_pairs (persisted signature
-    table, band equi-join, per-pair column math) — the estimate adds
-    one k-length zip over arrays already in the row, no extra
-    exchange. Returns (id_a, id_b, est_jaccard, exact_jaccard,
+    Plan shape identical to minhash_lsh_pairs (band equi-join carrying
+    the hash sets and a copy of the signature, per-pair column math) —
+    the estimate adds one k-length zip over arrays already in the row,
+    no extra exchange. Returns (id_a, id_b, est_jaccard, exact_jaccard,
     abs_err), all rounded to 6dp for cross-engine rank stability.
     """
     from anime_data_pipeline_spark.functions.compat import dround
@@ -237,29 +238,17 @@ def minhash_quality_audit(
     hashed = shingle_hash_sets(df, id_col, text_col, n).withColumn(
         "sig", minhash_signature_expr("hashes", k)
     )
-    hashed = hashed.persist()
-    cand = band_candidates(hashed, bands, rows)
-    sides = hashed.select("doc", "hashes", "sig")
-    joined = cand.join(
-        sides.select(
-            F.col("doc").alias("id_a"), F.col("hashes").alias("ha"), F.col("sig").alias("sa")
-        ),
-        "id_a",
-    ).join(
-        sides.select(
-            F.col("doc").alias("id_b"), F.col("hashes").alias("hb"), F.col("sig").alias("sb")
-        ),
-        "id_b",
-    )
+    # band_candidates does not carry sig itself: ``s`` is its copy
+    cand = band_candidates(hashed.withColumn("s", F.col("sig")), bands, rows)
     eq = F.size(
         F.filter(
-            F.zip_with(F.col("sa"), F.col("sb"), lambda x, y: x == y), lambda b: b
+            F.zip_with(F.col("s_a"), F.col("s_b"), lambda x, y: x == y), lambda b: b
         )
     )
-    inter = F.size(F.array_intersect(F.col("ha"), F.col("hb")))
-    union = F.size(F.col("ha")) + F.size(F.col("hb")) - inter
+    inter = F.size(F.array_intersect(F.col("hashes_a"), F.col("hashes_b")))
+    union = F.size(F.col("hashes_a")) + F.size(F.col("hashes_b")) - inter
     return (
-        joined.withColumn("est_jaccard", dround(eq.cast("double") / F.lit(float(k)), 6))
+        cand.withColumn("est_jaccard", dround(eq.cast("double") / F.lit(float(k)), 6))
         .withColumn("exact_jaccard", dround(inter.cast("double") / union, 6))
         .withColumn(
             "abs_err",
@@ -632,6 +621,7 @@ def benchmark_contamination(
     id_col: str,
     text_col: str,
     n: int = 8,
+    carry: tuple[str, ...] = (),
     *,
     th_col: str | None = None,
 ) -> DataFrame:
@@ -647,22 +637,22 @@ def benchmark_contamination(
     (doc, n_shingles, shingle) rows — ``explode_outer``, so a document
     without shingles keeps one row — and the hit count is one
     partial-aggregated groupBy after a map-side broadcast left join —
-    the corpus is never shuffled on text. ``th_col``: a precomputed
-    token-hash column of ``corpus``, as in :func:`shingle_hash_sets`.
-    Returns (doc, n_shingles, n_hits, overlap_frac) for every corpus doc
-    (ids unique)."""
-    c = shingle_hash_sets(corpus, id_col, text_col, n, th_col=th_col)
+    the corpus is never shuffled on text. ``carry`` columns ride into
+    the groupBy and ``th_col`` names a precomputed token-hash column,
+    both as in :func:`shingle_hash_sets`.
+    Returns (doc, [carry...], n_shingles, n_hits, overlap_frac) for
+    every corpus doc (ids unique)."""
+    c = shingle_hash_sets(corpus, id_col, text_col, n, carry, th_col=th_col)
     bench_universe = (
         shingle_hash_sets(bench, id_col, text_col, n)
         .select(F.explode("hashes").alias("_bsh"))
         .distinct()
     )
-    exploded = c.select(
-        "doc", F.size("hashes").alias("n_shingles"), F.explode_outer("hashes").alias("sh")
-    )
+    n_sh = F.size("hashes").alias("n_shingles")
+    exploded = c.select("doc", *carry, n_sh, F.explode_outer("hashes").alias("sh"))
     return (
         exploded.join(F.broadcast(bench_universe), F.col("sh") == F.col("_bsh"), "left")
-        .groupBy("doc", "n_shingles")
+        .groupBy("doc", *carry, "n_shingles")
         .agg(F.count("_bsh").alias("n_hits"))
         .withColumn(
             "overlap_frac",
@@ -828,9 +818,9 @@ def incremental_dedup_status(
         # (content-hash join side, shingle-set verify side, band
         # explode) otherwise EACH re-run the tokenize → shingle →
         # minhash forest over the raw text — 3× the map CPU of the
-        # whole operator. Same pattern (and caller-owned release
-        # lifecycle) as minhash_lsh_pairs' signature table; at 100 TB
-        # history's table is the persisted parquet side-table the
+        # whole operator (minhash_lsh_pairs needs no persist: its hash
+        # sets ride its one band join). The caller owns the release; at
+        # 100 TB history's table is the persisted parquet side-table the
         # docstring describes.
         full = (
             shingle_hash_sets(withc, "doc", "_t", n, carry=("chash", "chash2"))

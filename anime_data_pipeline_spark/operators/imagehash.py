@@ -133,9 +133,9 @@ def dhash_near_dup_pairs(
     # persist: the hash table (id + 8 bytes) is consumed by the band
     # frequency agg, the anti-join probe, and BOTH self-join sides —
     # without this the upstream decode+hash mapInPandas lineage runs
-    # up to four times (same contract as dedup.band_candidates'
-    # persisted signature table; this variant carries the hash through
-    # for the popcount verify, which that helper drops)
+    # up to four times. (dedup.band_candidates persists nothing: its
+    # signature table has one consumer, the band explode, and the
+    # verify columns ride the join as the hash does here.)
     base = (
         df.select(F.col(id_col).alias("id"), F.col(hash_col).alias("h"))
         .filter(F.col("h").isNotNull())

@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 _BUCKET = "_grk_bucket"
 _OFFSET = "_grk_offset"
+_OFFSET_BUCKET = "_grk_obucket"
 
 DEFAULT_BUCKETS = 4096
 
@@ -55,7 +56,9 @@ def bucketed_global_rank(
     ``floor(key * n_buckets / key_max)`` is a pure deterministic
     function of the key — the two passes (counts, rank) always agree on
     the partitioning, unlike ``repartitionByRange`` whose sampled range
-    bounds differ between jobs unless the input is persisted.
+    bounds differ between jobs unless the input is persisted. Null
+    keys rank first, as in the global window: their null bucket sorts
+    first too, and the offsets join is null-safe.
     """
     if not tiebreakers:
         raise ValueError("tiebreakers required for a total order")
@@ -65,19 +68,19 @@ def bucketed_global_rank(
     )
     keyed = df.withColumn(_BUCKET, bucket)
 
-    # The counts table has ≤ n_buckets rows by construction (bucket ∈
-    # [0, n_buckets)); the limit is a provable no-op that makes the
-    # bound STRUCTURAL, so the plan-shape sweep can verify that the
-    # only unpartitioned window sits above a GlobalLimit, never the
-    # corpus.
+    # The counts table has ≤ n_buckets + 1 rows by construction (bucket
+    # ∈ [0, n_buckets) or null); the limit is a provable no-op that
+    # makes the bound STRUCTURAL, so the plan-shape sweep can verify
+    # that the only unpartitioned window sits above a GlobalLimit,
+    # never the corpus.
     counts = (
         keyed.groupBy(_BUCKET)
         .agg(F.count(F.lit(1)).alias("_grk_n"))
-        .limit(int(n_buckets))
+        .limit(int(n_buckets) + 1)
     )
     w_off = W.orderBy(_BUCKET).rowsBetween(W.unboundedPreceding, -1)
     offsets = counts.select(
-        _BUCKET,
+        F.col(_BUCKET).alias(_OFFSET_BUCKET),
         F.coalesce(F.sum("_grk_n").over(w_off), F.lit(0)).alias(_OFFSET),
     )
 
@@ -85,10 +88,10 @@ def bucketed_global_rank(
         F.asc(key_col), *[F.asc(c) for c in tiebreakers]
     )
     return (
-        keyed.join(F.broadcast(offsets), _BUCKET)
+        keyed.join(F.broadcast(offsets), F.col(_BUCKET).eqNullSafe(F.col(_OFFSET_BUCKET)))
         .withColumn(
             out_col,
             (F.col(_OFFSET) + F.row_number().over(w_local)).cast("long"),
         )
-        .drop(_BUCKET, _OFFSET)
+        .drop(_BUCKET, _OFFSET_BUCKET, _OFFSET)
     )

@@ -717,7 +717,8 @@ def embedding_neardup_pairs(
     the (table, bucket) key + one distinct — all sub-quadratic while
     buckets stay balanced; raise planes_per_table to shrink buckets,
     raise n_tables to buy recall. The planes are sized as in
-    :func:`srp_lsh_topk`.
+    :func:`srp_lsh_topk`. A zero vector's cosine is null
+    (``try_divide``), so it fails the threshold.
     """
     dim = _infer_dim(corpus, vec_col)
     c = corpus.select(
@@ -758,7 +759,7 @@ def embedding_neardup_pairs(
         a.join(b, ["t", "b"])
         .filter(F.col("id_a") < F.col("id_b"))
         .withColumn(
-            "cosine", dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
+            "cosine", F.try_divide(dot(F.col("va"), F.col("vb")), F.col("na") * F.col("nb"))
         )
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
@@ -800,6 +801,7 @@ def knn_graph(
     recall 0.843 at 26.5 s; planes=12/depth=1 recall 0.705 at 5.6 s;
     planes=12/depth=2 recall **0.932 at 17.2 s** — strictly better
     than the depth-1 default on BOTH axes (SCALE.md has the table).
+    A zero vector's cosine is null (``try_divide``) and ranks last.
     """
     if probe_depth not in (1, 2):
         raise ValueError("probe_depth must be 1 or 2")
@@ -838,7 +840,7 @@ def knn_graph(
         c.join(q, "bucket")
         .filter(F.col("src") != F.col("vec_id"))
         .withColumn(
-            "cosine", dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
+            "cosine", F.try_divide(dot(F.col("qv"), F.col("cv")), F.col("qn") * F.col("cn"))
         )
     )
     w = W.partitionBy("src").orderBy(F.desc("cosine"), F.asc("vec_id"))
@@ -1083,7 +1085,8 @@ def centroid_cohesion(
     (|labels|×d) and its norms broadcast back onto a second exploded
     pass — dot products and norms come from one groupBy per vector,
     then one tiny agg per label. Everything is partial-aggregated
-    column arithmetic; no UDF, no per-label state."""
+    column arithmetic; no UDF, no per-label state. ``avg_cos`` skips a
+    zero vector's null cosine (``try_divide``); ``n_vecs`` counts it."""
     e = df.select(
         F.col(id_col).alias("vec_id"),
         F.col(label_col).alias("label"),
@@ -1106,7 +1109,7 @@ def centroid_cohesion(
         .groupBy("label")
         .agg(
             F.count(F.lit(1)).alias("n_vecs"),
-            F.avg(F.col("dot") / (F.col("vn") * F.col("cn"))).alias("avg_cos"),
+            F.avg(F.try_divide(F.col("dot"), F.col("vn") * F.col("cn"))).alias("avg_cos"),
         )
     )
 

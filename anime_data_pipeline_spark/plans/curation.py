@@ -100,10 +100,14 @@ def _dedup(
     Near-dup policy: for every verified pair (id_a < id_b) the LARGER
     id is dropped — greedy, deterministic, one anti-join.
 
-    The exact-dedup survivor set feeds two consumers (the LSH signature
-    build and the anti-join left side) and its lineage holds the
-    caller's scoring expression forest plus the dedup window — it is
-    persisted rather than recomputed per consumer. At 100 TB this is
+    The exact-dedup survivor set ``uniq`` is the chain's one persist.
+    It has two consumers, the LSH band join and the anti-join left
+    side, and its lineage holds the caller's scoring expression forest
+    plus the dedup window. Recomputing it for the
+    second consumer costs more than the cache: dropping this persist
+    raised the pretraining chain's warm non-JIT CPU from 3.19 to 4.16 s
+    (+30%; perfbench ``llm_curation`` seed-1 documents, ``local[4]`` on
+    4 vCPU, median of 6 alternating runs). At 100 TB this is
     the stage boundary you'd parquet-checkpoint. ``_th`` is computed
     once, after the keeper window (so neither the shuffle nor the
     duplicates carry it), and rides the persist: the n-gram folds of
@@ -140,22 +144,16 @@ def curate_corpus(
     """Returns the curated corpus (survivor rows + quality columns):
     the quality gate, then :func:`_dedup`.
 
-    Cache lifecycle (r11 verdict #3): the survivor set is persisted
-    BEHIND the returned lazy plan (two consumers), so this function
-    cannot unpersist it without forcing eager evaluation — CALLERS own
-    the release, after materializing the result:
+    Cache lifecycle (r11 verdict #3): one RDD is persisted BEHIND the
+    returned lazy plan, :func:`_dedup`'s exact-dedup survivors
+    ``uniq`` (two consumers; ``_dedup`` says why it stays). This
+    function cannot unpersist it without forcing eager evaluation —
+    CALLERS own the release, after materializing the result:
     ``spark.catalog.clearCache()`` (what perfbench's ``run_llm`` does
     after writing the chain, and ``scripts/driver_check.py`` between
     queries) or a targeted ``unpersist()``. Same convention as
     ``operators/terms.py`` tf/vocab side-tables. At 100 TB the persist
     becomes a parquet checkpoint and the question disappears.
-
-    The persists stay because every consumer would otherwise re-run the
-    scoring and hash folds: dropping all three (this survivor set,
-    ``prepare_pretraining_corpus``' survivors, ``minhash_lsh_pairs``'
-    signature table) raised the chain's warm noop CPU from 5.43 to
-    7.52 s (+38%; perfbench ``llm_curation`` seed-1 documents,
-    ``local[4]`` on 4 vCPU, process-tree CPU less JIT, median of 5).
     """
     scored = quality_columns(ensure_map_parallelism(df), text_col)
     # Project before the exchange (same discipline as
@@ -207,11 +205,14 @@ def prepare_pretraining_corpus(
     :func:`_dedup`, shared with ``curate_corpus``. Returns
     (id, group, n_tokens, chunk_id) — the packed training manifest.
 
-    Cache lifecycle: as in ``curate_corpus`` — the two persisted stage
-    boundaries ride behind the returned lazy plan; callers release
-    them after materialization (perfbench's ``run_llm`` and
-    ``scripts/driver_check.py`` call ``clearCache``; ``curate_corpus``
-    says why the persists stay)."""
+    Cache lifecycle: as in ``curate_corpus`` — the one persisted stage
+    boundary, :func:`_dedup`'s ``uniq``, rides behind the returned lazy
+    plan; callers release it after materialization (perfbench's
+    ``run_llm`` and ``scripts/driver_check.py`` call ``clearCache``;
+    ``_dedup`` says why it stays). The dedup survivors need no persist
+    of their own: decontamination carries the packing columns through
+    its groupBy (one row per survivor) and the clean set is a filter on
+    it, so they have one consumer."""
     from anime_data_pipeline_spark.operators.dedup import benchmark_contamination
     from anime_data_pipeline_spark.operators.packing import pack_greedy
     from anime_data_pipeline_spark.operators.textstats import language_id
@@ -226,27 +227,19 @@ def prepare_pretraining_corpus(
     # (``n_tokens`` IS ws_token_count's expression). Carrying the 8-byte count
     # instead of re-tokenizing the survivors at the packing stage, and
     # dropping the other 9 scored columns, shrinks every downstream
-    # shuffle and the persisted stage boundaries.
+    # shuffle and the persisted stage boundary.
     kept = scored.filter(
         (F.col("pred_lang") == lang)
         & (F.col("quality_score") >= quality_threshold)
     ).select(id_col, group_col, text_col, "n_tokens")
 
-    # survivors feeds two consumers (contamination and its anti-join
-    # left side): persist the shrunk set rather than recompute the
-    # dedup chain per consumer.
-    survivors = _dedup(kept, id_col, text_col, n, k, bands, jaccard_threshold).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-
-    contaminated = (
+    survivors = _dedup(kept, id_col, text_col, n, k, bands, jaccard_threshold)
+    clean = (
         benchmark_contamination(
-            survivors, bench, id_col, text_col, n=contam_n, th_col="_th"
+            survivors, bench, id_col, text_col, n=contam_n,
+            carry=(group_col, "n_tokens"), th_col="_th",
         )
-        .filter(F.col("n_hits") > 0)
-        .select(F.col("doc").alias(id_col))
+        .filter(F.col("n_hits") == 0)
+        .select(F.col("doc").alias(id_col), group_col, "n_tokens")
     )
-    clean = survivors.join(contaminated, id_col, "left_anti")
-
-    weighted = clean.select(id_col, group_col, "n_tokens")
-    return pack_greedy(weighted, group_col, id_col, "n_tokens", budget)
+    return pack_greedy(clean, group_col, id_col, "n_tokens", budget)

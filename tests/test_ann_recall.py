@@ -375,6 +375,68 @@ def test_srp_operators_survive_an_empty_or_null_first_vector(spark, sf_dir):
             op(hostile).collect()
 
 
+def test_cosine_operators_survive_a_zero_vector(spark):
+    """A zero vector has norm 0, and ANSI double division by zero
+    raises, so one such row used to fail the whole job. Its cosine is
+    null now: knn_graph ranks it last (every row without it is the row
+    the corpus gives without it), embedding_neardup_pairs drops it at
+    the threshold, and centroid_cohesion leaves it out of avg_cos while
+    n_vecs counts it (its label's centroid keeps its direction)."""
+    from anime_data_pipeline_spark.operators.similarity import (
+        centroid_cohesion,
+        embedding_neardup_pairs,
+        knn_graph,
+    )
+
+    base = [
+        [float((i * 7) % 11 - 5), float((i * 3) % 7 - 3), float((i * 5) % 13 - 6), float(i % 4 + 1)]
+        for i in range(24)
+    ]
+    rows = [(i, i % 3, v) for i, v in enumerate(base)]
+    rows += [(24 + i, i % 3, [2.0 * x for x in base[i]]) for i in range(5)]
+    schema = "vec_id long, label long, v array<double>"
+    clean = spark.createDataFrame(rows, schema)
+    corpus = spark.createDataFrame(rows + [(29, 2, [0.0, 0.0, 0.0, 0.0])], schema)
+    assert corpus.count() == 30
+
+    def edges(df):
+        return knn_graph(df, "vec_id", "v", k=_K, planes=2).collect()
+
+    got = edges(corpus)
+    assert any(r["src"] == 29 for r in got)
+    for r in got:
+        if 29 in (r["src"], r["dst"]):
+            assert r["cosine"] is None, r
+        else:
+            assert r["cosine"] is not None, r
+    by_src = {}
+    for r in got:
+        by_src.setdefault(r["src"], []).append((r["rank"], r["cosine"] is None))
+    for ranks in by_src.values():
+        flags = [null for _, null in sorted(ranks)]
+        assert flags == sorted(flags), ranks  # null cosines rank after the rest
+    assert sorted(tuple(r) for r in got if 29 not in (r["src"], r["dst"])) == sorted(
+        tuple(r) for r in edges(clean)
+    )
+
+    def pairs(df):
+        return sorted(map(tuple, embedding_neardup_pairs(df, "vec_id", "v").collect()))
+
+    want = pairs(clean)
+    assert len(want) == 5
+    assert pairs(corpus) == want
+
+    def cohesion(df):
+        out = centroid_cohesion(df, "vec_id", "label", "v").collect()
+        return {r["label"]: (r["n_vecs"], r["avg_cos"]) for r in out}
+
+    with_zero, without = cohesion(corpus), cohesion(clean)
+    assert with_zero.keys() == without.keys() == {0, 1, 2}
+    for label, (n, cos) in without.items():
+        assert with_zero[label][0] == n + (label == 2)
+        assert abs(with_zero[label][1] - cos) < 1e-12, label
+
+
 def test_semantic_dedup_drops_scaled_copies_keeps_originals(spark):
     """A scaled copy (cosine 1.0) must land in the same cell as its
     original, join its component, and lose the keep flag; unrelated

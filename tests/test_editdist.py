@@ -146,3 +146,46 @@ def test_exact_dup_survives_single_hash_collision(spark):
     )
     kept = curate_corpus(corpus, "doc_id", "text", quality_threshold=0.0)
     assert sorted(r["doc_id"] for r in kept.collect()) == [1, 2]
+
+
+def test_lsh_operators_on_short_docs_and_a_three_doc_cluster(spark):
+    """The three band-join operators carry their verify columns through
+    the band join. Documents shorter than n tokens (no shingles, null
+    signature: "hi there" twice and "") never become candidates, not
+    even of each other, and the three mutual near-duplicates give all
+    three pairs once each."""
+    from anime_data_pipeline_spark.operators.dedup import (
+        minhash_lsh_pairs,
+        minhash_quality_audit,
+    )
+
+    base = "the quick brown fox jumps over the lazy dog again and again ok"
+    texts = {
+        1: base,  # 11 distinct 3-token shingles
+        2: base + " tail",  # 12, all of 1's
+        3: base + " tail tail",  # 13, all of 2's
+        4: "hi there",
+        5: "hi there",
+        6: "",
+        7: "completely different words here nothing shared at all xyz",
+    }
+    df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    jaccard = {(1, 2): 11 / 12, (1, 3): 11 / 13, (2, 3): 12 / 13}
+    lev = {(1, 2): 5, (1, 3): 10, (2, 3): 5}
+
+    got = {(r["id_a"], r["id_b"]): r["jaccard"]
+           for r in minhash_lsh_pairs(df, "doc_id", "text").collect()}
+    assert got == jaccard
+
+    audit = minhash_quality_audit(df, "doc_id", "text").collect()
+    assert {(r["id_a"], r["id_b"]): r["exact_jaccard"] for r in audit} == {
+        p: round(j, 6) for p, j in jaccard.items()
+    }
+    assert all(r["est_jaccard"] == 1.0 for r in audit)  # every k=12 minimum agrees
+
+    edits = {(r["id_a"], r["id_b"]): (r["lev"], r["edit_sim"])
+             for r in editdist_verify_neardups(df, "doc_id", "text").collect()}
+    assert edits == {
+        (a, b): (d, 1.0 - d / max(len(texts[a]), len(texts[b])))
+        for (a, b), d in lev.items()
+    }

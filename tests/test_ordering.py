@@ -61,6 +61,23 @@ def test_single_bucket_degenerate(spark):
     assert got == _truth(df, "k", ["id"])
 
 
+def test_null_keys_rank_first(spark):
+    # null keys sort first, as in the global window; with n_buckets=1
+    # the null bucket is a second counts row the limit must keep
+    df = spark.range(60).select(
+        F.col("id"),
+        F.when(F.col("id") % 9 == 4, F.lit(None)).otherwise(F.col("id") % 5).alias("k"),
+    )
+    for n_buckets in (1, 16):
+        got = {
+            r["id"]: r["rank"]
+            for r in bucketed_global_rank(
+                df, key_col="k", key_max=5, tiebreakers=["id"], n_buckets=n_buckets
+            ).collect()
+        }
+        assert got == _truth(df, "k", ["id"]), n_buckets
+
+
 def test_requires_tiebreakers(spark):
     df = spark.range(5).select(F.col("id"), F.col("id").alias("k"))
     import pytest

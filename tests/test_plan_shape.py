@@ -252,10 +252,11 @@ def test_unigram_logprob_broadcasts_zipf_head(spark, sf_dir):
 def test_pretraining_chain_plan_invariants(spark, sf_dir):
     """q88 flagship: no cartesian products anywhere in the five-stage
     chain (the b0/scalar joins must stay broadcast nested-loop over
-    1-row sides), at least one real broadcast hash join (contamination
-    universe / LSH band sides), and the persisted stage boundaries
-    (uniq, survivors) must serve downstream consumers from cache
-    instead of recomputing the scan+hygiene chain."""
+    1-row sides), at least one real broadcast hash join (the
+    contamination universe), and the one persisted stage boundary
+    (``uniq``, the exact-dedup survivors) must serve both its consumers
+    (the LSH band join and the near-dup anti-join) from cache instead
+    of recomputing the scan+hygiene chain."""
     plan = plan_of(QUERIES["q88_pretraining_corpus"](spark, sf_dir))
     assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan
@@ -755,8 +756,11 @@ def test_persisted_stage_boundaries_release_with_the_session_cache(spark, sf_dir
     bench.py and driver_check now clearCache per query / after the
     pass; this pins the whole lifecycle: materializing the plan pins
     blocks, clearCache frees ALL of them (the persist rides Spark's
-    CacheManager, so no targeted handle is needed). q86 persists
-    nothing, so repeated runs must pin nothing."""
+    CacheManager, so no targeted handle is needed). Each curation chain
+    pins exactly one RDD, the exact-dedup survivors: the LSH signature
+    table and q88's decontamination survivors ride their joins instead
+    of a persist. q86 and q32 persist nothing, so repeated runs must
+    pin nothing."""
     from anime_data_pipeline_spark.registry import all_queries
 
     def n_pinned() -> int:
@@ -777,21 +781,23 @@ def test_persisted_stage_boundaries_release_with_the_session_cache(spark, sf_dir
     while it.hasNext():
         it.next().getValue().unpersist(False)
     assert n_pinned() == 0
-    q = all_queries()["q35_curation_pipeline"]
-    q(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    assert n_pinned() > 0  # the probe sees the leak the fix targets
-    spark.catalog.clearCache()
-    assert n_pinned() == 0
-    # q86 (SemDeDup) persists nothing and pins nothing: three runs in
-    # one long-lived session with no clearCache in between must leave
-    # the CacheManager empty and no pinned RDD behind.
-    cache = spark._jsparkSession.sharedState().cacheManager()
-    for _ in range(3):
-        all_queries()["q86_semantic_dedup"](spark, sf_dir).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        assert cache.isEmpty()
+    for name in ("q35_curation_pipeline", "q88_pretraining_corpus"):
+        all_queries()[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        assert n_pinned() == 1, name  # the probe sees the leak the fix targets
+        spark.catalog.clearCache()
         assert n_pinned() == 0
+    # q86 (SemDeDup) and q32 (MinHash-LSH pairs) persist nothing and pin
+    # nothing: three runs each in one long-lived session with no
+    # clearCache in between must leave the CacheManager empty and no
+    # pinned RDD behind.
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    for name in ("q86_semantic_dedup", "q32_minhash_lsh_neardup"):
+        for _ in range(3):
+            all_queries()[name](spark, sf_dir).write.format("noop").mode(
+                "overwrite"
+            ).save()
+            assert cache.isEmpty(), name
+            assert n_pinned() == 0, name
 
 
 def test_semantic_dedup_call_starts_no_spark_job(spark, sf_dir):
