@@ -109,6 +109,9 @@ def entry(spark: SparkSession) -> DataFrame:
 #     cohesion cosines are try_divide, and bucketed_global_rank joins
 #     its offsets null-safe — every importer was already drifted except
 #     centroid_cohesion's q77 (1 more, 90 in all).
+# (12) brute_force_topk's cosine is try_divide — its importers q41 and
+#     q183 drift (2 more, 92 in all) and leave the (d) queue. The sink
+#     module became parquet-only; no query imports it.
 _CHANGED_THIS_ROUND: list[str] = [
     "q100_bloom_contamination",
     "q101_span_dedup",
@@ -145,6 +148,7 @@ _CHANGED_THIS_ROUND: list[str] = [
     "q178_wav_decode_chunk",
     "q179_video_frame_sample",
     "q181_image_dedup",
+    "q183_retrieval_metrics",
     "q184_audio_quality_filter",
     "q187_webp_decode_bucket",
     "q188_webp_anim_sample",
@@ -166,6 +170,7 @@ _CHANGED_THIS_ROUND: list[str] = [
     "q34_ngram_jaccard_neardup",
     "q35_curation_pipeline",
     "q36_neardup_clusters",
+    "q41_ann_bruteforce_topk",
     "q42_ann_srp_lsh_topk",
     "q43_embedding_neardup",
     "q44_ann_ivf_topk",
@@ -215,15 +220,13 @@ _PRIORITY = [
     *_REWORKED_LAST_ROUND,
     # (d) stalest first. Round 13's window sampled the whole former
     # round-6/7 queue, so the stalest rows left are round 7's tail,
-    # then the round-8 cohort. With 90 changed entries the 50-row
+    # then the round-8 cohort. With 92 changed entries the 50-row
     # window takes none of them; they stay queued for the next
     # rotation.
     "q89_temperature_mix",
     "q94_rag_chunking",
     "q103_perplexity_band",
-    "q41_ann_bruteforce_topk",
     "q98_embedding_quantize",
-    "q183_retrieval_metrics",
     "q65_stream_stream_join",
     "q64_stream_dedup",
     "q141_stream_blocklist",

@@ -185,7 +185,8 @@ def brute_force_topk(
     side); the scoring pass is map-only over the corpus. Ties broken by
     corpus id for a deterministic result set. ``exclude_self`` drops the
     query's own corpus row before ranking (kNN/IR-eval convention when
-    the query set is drawn from the corpus).
+    the query set is drawn from the corpus). A zero query or corpus
+    vector scores null (``try_divide``) and ranks last.
 
     Norms are materialized ONCE per side before the pairing join —
     sqrt(sq_norm(cv)) is computed per corpus row, not per (query ×
@@ -199,7 +200,7 @@ def brute_force_topk(
         F.col(id_col).alias("query_id"), to_double_array(F.col(vec_col)).alias("qv")
     ).withColumn("qn", F.sqrt(sq_norm(F.col("qv"))))
     scored = c.join(F.broadcast(q)).withColumn(
-        "cosine", dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
+        "cosine", F.try_divide(dot(F.col("qv"), F.col("cv")), F.col("qn") * F.col("cn"))
     )
     if exclude_self:
         scored = scored.filter(F.col("vec_id") != F.col("query_id"))

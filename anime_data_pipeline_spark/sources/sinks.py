@@ -1,9 +1,12 @@
 """Table sinks (SURVEY S9 + BASELINE "Parquet/Delta writes").
 
-Parquet is the native interchange between stages; Delta (when the
-delta-spark package is present — it is not in this container) adds
-ACID upserts for the J5 metadata-merge path. The JSON compatibility
-exporter lives in sources/json_compat.
+Parquet is the native interchange between stages and the one write
+format here. The J5 metadata upsert is a plan, not a sink: its batch
+spelling is plans/legacy.upsert_sidecars (full-outer merge,
+``coalesce(new, old)``) and its streaming spelling is
+streaming/pipeline.foreach_batch_upsert_latest. A Delta ``MERGE``
+sink waits until the delta-spark package is installed. The JSON
+compatibility exporter lives in sources/json_compat.
 
 Scale rules encoded here:
 - partition by a LOW-cardinality column (dt, source, bucket_reso — not
@@ -16,18 +19,8 @@ Scale rules encoded here:
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-try:  # pragma: no cover - delta-spark not installed in this environment
-    from delta.tables import DeltaTable  # type: ignore
-
-    HAS_DELTA = True
-except Exception:  # ModuleNotFoundError and friends
-    DeltaTable = None  # type: ignore
-    HAS_DELTA = False
 
 
 def write_table(
@@ -35,22 +28,16 @@ def write_table(
     path: str,
     partition_by: list[str] | None = None,
     sort_by: list[str] | None = None,
-    fmt: str = "parquet",
-    mode: str = "overwrite",
 ) -> None:
-    """Partitioned columnar write with stats-friendly layout."""
-    if fmt == "delta" and not HAS_DELTA:
-        raise NotImplementedError(
-            "delta-spark is not installed in this environment; use fmt='parquet'"
-        )
+    """Partitioned parquet overwrite with stats-friendly layout."""
     if partition_by:
         df = df.repartition(*[F.col(c) for c in partition_by])
     if sort_by:
         df = df.sortWithinPartitions(*sort_by)
-    writer = df.write.mode(mode).format(fmt)
+    writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    writer.save(path)
+    writer.parquet(path)
 
 
 def write_bucketed(
@@ -72,135 +59,3 @@ def write_bucketed(
     if sort:
         writer = writer.sortBy(bucket_col)
     writer.saveAsTable(table)
-
-
-def merge_condition(
-    key_cols: list[str], target_alias: str = "t", updates_alias: str = "u"
-) -> str:
-    """The MERGE INTO match condition for a composite key — the
-    semantics core of the J5 upsert, extracted so it is unit-testable
-    without the delta-spark package."""
-    if not key_cols:
-        raise ValueError("upsert requires at least one key column")
-    for k in key_cols:
-        if not k.replace("_", "a").isalnum():
-            raise ValueError(f"unsafe key column name: {k!r}")
-    return " AND ".join(f"{target_alias}.{k} = {updates_alias}.{k}" for k in key_cols)
-
-
-def build_merge(target_table, updates: DataFrame, key_cols: list[str]):
-    """Compose the Delta MERGE builder chain (update-all on key match,
-    insert-all otherwise) against any DeltaTable-shaped object.
-
-    Takes the duck-typed table rather than a path so a contract test
-    can drive it with a fake; production passes
-    ``DeltaTable.forPath(spark, path)``. Returns the un-executed
-    builder — callers ``.execute()`` it."""
-    return (
-        target_table.alias("t")
-        .merge(updates.alias("u"), merge_condition(key_cols))
-        .whenMatchedUpdateAll()
-        .whenNotMatchedInsertAll()
-    )
-
-
-def upsert_table_partitioned(
-    spark: SparkSession,
-    updates: DataFrame,
-    path: str,
-    key_cols: list[str],
-    partition_col: str,
-    fmt: str = "parquet",
-) -> None:
-    """J5 upsert against a PARTITIONED parquet table without Delta:
-    rewrite only the partitions the updates touch, atomically per
-    partition via dynamic partition overwrite.
-
-    The Delta-less scale pattern: at 100 TB a full-table rewrite per
-    merge is absurd — but updates almost always cluster in few
-    partitions (recent dt, one source). Plan shape:
-
-    1. affected = updates' distinct partition values (a tiny driver
-       list — partition columns are low-cardinality by layout rule);
-    2. read ONLY those partitions (partition pruning via filter);
-    3. anti-join existing rows against update keys, union updates;
-    4. write with ``partitionOverwriteMode=dynamic``: Spark replaces
-       exactly the partitions present in the written data, leaving
-       every untouched partition's files alone.
-
-    Rows whose ``partition_col`` CHANGES between snapshots land in the
-    new partition while the stale copy survives in the old one — same
-    caveat as Hive-style dynamic overwrite; keys must not migrate
-    partitions (true for dt-style layouts), or use Delta MERGE.
-    """
-    if fmt == "delta":
-        if not HAS_DELTA:
-            raise NotImplementedError("delta-spark not installed")
-        build_merge(DeltaTable.forPath(spark, path), updates, key_cols).execute()
-        return
-    affected = [r[0] for r in updates.select(partition_col).distinct().collect()]
-    if not affected:
-        return
-    # Bootstrap ONLY on a positive "table does not exist" signal (path
-    # absence). A broad except here was an r3 advice finding: any
-    # transient read failure (permissions, corrupt footer, schema) would
-    # be mistaken for first-write and silently overwrite every existing
-    # partition with just the updates. Real read errors now propagate.
-    if not os.path.exists(path):
-        updates.write.mode("overwrite").partitionBy(partition_col).parquet(path)
-        return
-    existing = spark.read.parquet(path).filter(
-        F.col(partition_col).isin(affected)
-    )
-    keep = existing.join(updates.select(*key_cols), key_cols, "left_anti")
-    merged = keep.unionByName(updates).repartition(F.col(partition_col))
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy(partition_col).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-
-def upsert_table(
-    spark: SparkSession,
-    updates: DataFrame,
-    path: str,
-    key_cols: list[str],
-    fmt: str = "parquet",
-) -> None:
-    """J5 upsert sink: new rows inserted, matching keys overwritten.
-
-    Delta: a real MERGE INTO (row-level, ACID) — the scale path.
-    Parquet fallback: full rewrite — anti-join the existing table
-    against the updates, union, write to a sibling dir, then swap via
-    two directory renames. The swap assumes a LOCAL/POSIX filesystem
-    (rename is atomic per directory; the window between the two renames
-    is crash-recoverable from `path + '__tmp_upsert'`). On object
-    stores use Delta — plain parquet has no atomic commit there."""
-    if fmt == "delta":
-        if not HAS_DELTA:
-            raise NotImplementedError("delta-spark not installed")
-        build_merge(DeltaTable.forPath(spark, path), updates, key_cols).execute()
-        return
-    try:
-        existing = spark.read.parquet(path)
-    except Exception:
-        updates.write.mode("overwrite").parquet(path)
-        return
-    keep = existing.join(updates.select(*key_cols), key_cols, "left_anti")
-    merged = keep.unionByName(updates)
-    # Rewrite through a temp dir: the plan reads `path` lazily, so an
-    # in-place overwrite would consume its own partially-deleted input.
-    # The old data stays intact until the new table is fully written;
-    # the swap is two renames, not a delete-then-copy.
-    import os
-    import shutil
-
-    tmp = path.rstrip("/") + "__tmp_upsert"
-    old = path.rstrip("/") + "__old_upsert"
-    merged.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(path.rstrip("/"), old)
-    os.rename(tmp, path.rstrip("/"))
-    shutil.rmtree(old, ignore_errors=True)

@@ -445,7 +445,8 @@ def foreach_batch_upsert_latest(
     exactly-once per key regardless of replay. foreachBatch is the
     standard bridge from a stream to batch-only sinks (JDBC, MERGE
     into Delta, multi-table writes); at scale the merge body below
-    would be the Delta MERGE path of sources/sinks.upsert_table."""
+    would be a Delta MERGE, which waits until delta-spark is installed
+    (sources/sinks holds only the parquet writes)."""
     from pyspark.sql.window import Window
 
     def latest(df: DataFrame) -> DataFrame:

@@ -22,6 +22,7 @@ from anime_data_pipeline_spark.sources.aesthetic import read_aesthetic_scores
 from anime_data_pipeline_spark.sources.images import derive_keys, scan_image_dirs
 from anime_data_pipeline_spark.sources.json_compat import write_keyed_json
 from anime_data_pipeline_spark.sources.sidecar import read_sidecar_tags
+from anime_data_pipeline_spark.sources.sinks import write_table
 from anime_data_pipeline_spark.sources.vocab import (
     CATEGORY_GENERAL,
     read_tag_vocab,
@@ -68,7 +69,7 @@ def main() -> None:
     if cfg.out_format == "keyed_json":
         write_keyed_json(meta, "image_key", cfg.out_path)
     else:
-        meta.write.mode("overwrite").parquet(cfg.out_path)
+        write_table(meta, cfg.out_path)
 
     if audit is not None:
         for r in audit.collect():

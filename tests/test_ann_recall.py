@@ -378,11 +378,13 @@ def test_srp_operators_survive_an_empty_or_null_first_vector(spark, sf_dir):
 def test_cosine_operators_survive_a_zero_vector(spark):
     """A zero vector has norm 0, and ANSI double division by zero
     raises, so one such row used to fail the whole job. Its cosine is
-    null now: knn_graph ranks it last (every row without it is the row
-    the corpus gives without it), embedding_neardup_pairs drops it at
-    the threshold, and centroid_cohesion leaves it out of avg_cos while
-    n_vecs counts it (its label's centroid keeps its direction)."""
+    null now: brute_force_topk and knn_graph rank it last (every row
+    without it is the row the corpus gives without it),
+    embedding_neardup_pairs drops it at the threshold, and
+    centroid_cohesion leaves it out of avg_cos while n_vecs counts it
+    (its label's centroid keeps its direction)."""
     from anime_data_pipeline_spark.operators.similarity import (
+        brute_force_topk,
         centroid_cohesion,
         embedding_neardup_pairs,
         knn_graph,
@@ -398,6 +400,21 @@ def test_cosine_operators_survive_a_zero_vector(spark):
     clean = spark.createDataFrame(rows, schema)
     corpus = spark.createDataFrame(rows + [(29, 2, [0.0, 0.0, 0.0, 0.0])], schema)
     assert corpus.count() == 30
+
+    def topk(df):
+        return brute_force_topk(df, corpus, "vec_id", "v", k=30).collect()
+
+    got = topk(corpus)
+    assert len(got) == 30 * 30
+    for r in got:
+        if 29 in (r["query_id"], r["vec_id"]):
+            assert r["cosine"] is None, r
+        else:
+            assert r["cosine"] is not None, r
+    assert sorted(r["rank"] for r in got if r["vec_id"] == 29) == [30] * 30
+    assert sorted(tuple(r) for r in got if 29 not in (r["query_id"], r["vec_id"])) == sorted(
+        tuple(r) for r in topk(clean) if r["query_id"] != 29
+    )
 
     def edges(df):
         return knn_graph(df, "vec_id", "v", k=_K, planes=2).collect()
